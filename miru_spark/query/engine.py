@@ -1275,11 +1275,13 @@ class SearchEngine(FeatureOpsMixin):
         self._post_cache: OrderedDict = OrderedDict()
         self._post_cache_entries = 0
         self._post_cache_lock = Lock()  # concurrent serving threads
-        # decoded per-pid time arrays (waveform/analytics): one int64 per
-        # doc, capped at 2 x local_max_postings entries like the postings
-        # LRU -- repeated waveforms skip the varint re-decode
+        # per-pid forward-index caches, filled on first touch of a pid
+        # (see _fwd_cached): decoded time arrays (waveform/analytics,
+        # time bounds) and docmap arrays (display gathers). One entry
+        # per doc, one shared cap of 2 x local_max_postings entries
         self._times_cache: dict = {}
-        self._times_cache_entries = 0
+        self._docmap_cache: dict = {}
+        self._fwd_cache_entries = 0
         # strut score cache (StrutModelScorer.java analog): repeated
         # model-scored strut questions skip the feature gather entirely;
         # keyed by model + request + index version (featureops.strut)
@@ -1359,8 +1361,9 @@ class SearchEngine(FeatureOpsMixin):
         with self._post_cache_lock:
             self._post_cache.clear()
             self._post_cache_entries = 0
-        self._times_cache.clear()
-        self._times_cache_entries = 0
+            self._times_cache.clear()
+            self._docmap_cache.clear()
+            self._fwd_cache_entries = 0
 
     def _postings_with_pos(self) -> DataFrame:
         """Posting-blocks view that carries pos_bin -- built lazily, only
@@ -2569,7 +2572,6 @@ class SearchEngine(FeatureOpsMixin):
         the serving node -- the match half of `_search_local` without
         the scoring half: tree evaluation, boundary-pid time mask,
         tombstone mask. Feeds `count` and `waveform`."""
-        dset = self._dataset()
         term_cids, _tfs, _dls = self._postings_maps(
             prep["fetch_terms"], prep["pid_range"]
         )
@@ -2584,7 +2586,7 @@ class SearchEngine(FeatureOpsMixin):
                 ),
                 positions=True,
             )
-        bounds = self._local_bounds(prep, dset)
+        bounds = self._local_bounds(prep)
         if prep["has_all_node"]:
             spans = []
             for p in prep["relevant_pids"]:
@@ -2618,43 +2620,79 @@ class SearchEngine(FeatureOpsMixin):
             matches = matches[rem[pos] != matches]
         return matches
 
+    def _fwd_cached(self, cache: dict, pids, load) -> dict:
+        """Read-through for the per-pid forward-index caches: cached
+        pids come from memory, the rest from ONE `load(missing)` call
+        returning {pid: (value, n_docs)}. Both caches share one budget
+        of 2 x local_max_postings docs under the postings-LRU lock; a
+        pid that does not fit is returned but not kept."""
+        pids = list(dict.fromkeys(int(p) for p in pids))
+        with self._post_cache_lock:
+            out = {p: cache[p] for p in pids if p in cache}
+        missing = [p for p in pids if p not in out]
+        if not missing:
+            return out
+        budget = 2 * self.local_max_postings
+        for p, (val, n) in load(missing).items():
+            out[p] = val
+            with self._post_cache_lock:
+                if p not in cache and self._fwd_cache_entries + n <= budget:
+                    cache[p] = val
+                    self._fwd_cache_entries += n
+        return out
+
     def _pid_times(self, pids) -> dict:
         """Per-pid docID -> warc_us arrays decoded from the 't' time-
         index rows via pyarrow (no Spark job). docIDs are dense and
-        time-ordered per pid, so array position IS the docID. Decoded
-        arrays are cached (same budget discipline as the postings LRU);
-        only uncached pids touch storage."""
+        time-ordered per pid, so array position IS the docID. Pids with
+        no 't' rows are absent from the result."""
+        return self._fwd_cached(self._times_cache, pids, self._load_times)
+
+    def _load_times(self, pids: list) -> dict:
         import pyarrow.dataset as pads
 
-        with self._post_cache_lock:  # shared with the postings LRU
-            out = {
-                int(p): self._times_cache[int(p)]
-                for p in pids
-                if int(p) in self._times_cache
-            }
-        missing = [int(p) for p in pids if int(p) not in out]
-        if not missing:
-            return out
         trows = self._dataset().to_table(
             filter=(pads.field("row_type") == "t")
-            & pads.field("pid").isin(missing),
+            & pads.field("pid").isin(pids),
             columns=["pid", "first_doc", "ids_bin"],
         )
         arr_pids = trows["pid"].to_numpy()
         firsts = trows["first_doc"].to_numpy()
         bins = trows["ids_bin"].to_pylist()
-        budget = 2 * self.local_max_postings
+        out = {}
         for p in np.unique(arr_pids):
             sel = np.flatnonzero(arr_pids == p)
             sel = sel[np.argsort(firsts[sel], kind="stable")]
             arr = np.concatenate(
                 [np.cumsum(decode_varint(bins[i])) for i in sel]
             )
-            out[int(p)] = arr
-            with self._post_cache_lock:
-                if self._times_cache_entries + arr.size <= budget:
-                    self._times_cache[int(p)] = arr
-                    self._times_cache_entries += arr.size
+            out[int(p)] = (arr, arr.size)
+        return out
+
+    def _load_docmap(self, pids: list) -> dict:
+        """Per-pid docmap arrays (sorted doc_ids, urls as an Arrow
+        string array, warc_us) from the 'd' rows, in the shape
+        `_gather_rows` looks winners up in. A doc_id with several rows
+        keeps its last in dataset order."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        dm = self._dataset().to_table(
+            filter=(pads.field("row_type") == "d")
+            & pads.field("pid").isin(pids),
+            columns=["pid", "doc_id", "url", "warc_us"],
+        )
+        arr_pids = dm["pid"].to_numpy()
+        docs = dm["doc_id"].to_numpy()
+        warcs = dm["warc_us"].to_numpy()
+        out = {}
+        for p in pids:
+            sel = np.flatnonzero(arr_pids == p)
+            sel = sel[np.argsort(docs[sel], kind="stable")]
+            d = docs[sel]
+            sel = sel[np.append(d[1:] != d[:-1], True)] if d.size else sel
+            urls = dm["url"].take(pa.array(sel)).combine_chunks()
+            out[p] = ((docs[sel], urls, warcs[sel]), sel.size)
         return out
 
     def _facet_hits(
@@ -2920,7 +2958,6 @@ class SearchEngine(FeatureOpsMixin):
             )
             newest = np.sort(matches)[::-1][: max(k, 0)]
             rows = self._gather_rows(
-                self._dataset(),
                 newest >> 32,
                 newest & 0xFFFFFFFF,
                 np.zeros(newest.size, dtype=np.float64),
@@ -2943,7 +2980,6 @@ class SearchEngine(FeatureOpsMixin):
             cands.sort(reverse=True)
             cands = cands[: max(k, 0)]
             rows = self._gather_rows(
-                self._dataset(),
                 np.array([p for p, _ in cands], dtype=np.int64),
                 np.array([d for _, d in cands], dtype=np.int64),
                 np.zeros(len(cands), dtype=np.float64),
@@ -3139,7 +3175,7 @@ class SearchEngine(FeatureOpsMixin):
         )
         if gather_urls:
             gathered = self._gather_rows(
-                self._dataset(), pids, docs, np.zeros(pids.size)
+                pids, docs, np.zeros(pids.size)
             )
             info = {(p, d): (u, w) for u, w, p, d, _s in gathered}
         else:
@@ -3765,37 +3801,21 @@ class SearchEngine(FeatureOpsMixin):
         out.sort(key=lambda vc: (-vc[1], str(vc[0])))
         return out[:top_n] if top_n is not None else out
 
-    def _local_bounds(self, prep: dict, dset) -> dict:
-        """Exact per-boundary-pid [lo, hi) docID interval from the 't'
-        time-index rows (LabTimeIndex.getClosestId analog), read via
-        pyarrow -- no Spark job."""
-        import pyarrow.dataset as pads
-
+    def _local_bounds(self, prep: dict) -> dict:
+        """Exact per-boundary-pid [lo, hi) docID interval from the
+        cached 't' time-index arrays (LabTimeIndex.getClosestId analog)
+        -- no Spark job."""
         if prep["time_spec"] is None or not prep["boundary_pids"]:
             return {}
         t0_us, t1_us, _lo, _hi = prep["time_spec"]
-        trows = dset.to_table(
-            filter=(pads.field("row_type") == "t")
-            & pads.field("pid").isin(prep["boundary_pids"]),
-            columns=["pid", "first_doc", "ids_bin"],
-        )
-        out = {}
-        pids = trows["pid"].to_numpy()
-        firsts = trows["first_doc"].to_numpy()
-        bins = trows["ids_bin"].to_pylist()
-        for p in prep["boundary_pids"]:
-            sel = np.flatnonzero(pids == p)
-            if sel.size == 0:
-                continue
-            sel = sel[np.argsort(firsts[sel], kind="stable")]
-            warc = np.concatenate(
-                [np.cumsum(decode_varint(bins[i])) for i in sel]
-            )
-            out[int(p)] = (
+        times = self._pid_times(prep["boundary_pids"])
+        return {
+            p: (
                 int(np.searchsorted(warc, t0_us, "left")),
                 int(np.searchsorted(warc, t1_us, "right")),
             )
-        return out
+            for p, warc in times.items()
+        }
 
     def _local_relation(self, rows: list) -> DataFrame:
         """Wrap serving-node winner rows as an Arrow-backed LocalRelation.
@@ -4072,7 +4092,6 @@ class SearchEngine(FeatureOpsMixin):
         (score desc, pid, doc_id), length <= k."""
         if k <= 0:
             return []
-        dset = self._dataset()
 
         term_cids, term_tfs, term_dls = self._postings_maps(
             prep["fetch_terms"], prep["pid_range"]
@@ -4093,7 +4112,7 @@ class SearchEngine(FeatureOpsMixin):
                 positions=True,
             )
 
-        bounds = self._local_bounds(prep, dset)
+        bounds = self._local_bounds(prep)
 
         if prep["has_all_node"]:
             spans = []
@@ -4181,7 +4200,7 @@ class SearchEngine(FeatureOpsMixin):
             take = matches[-k:][::-1] if k > 0 else matches[:0]
             w_pids = (take >> 32).astype(np.int64)
             w_docs = (take & 0xFFFFFFFF).astype(np.int64)
-            return self._gather_rows(dset, w_pids, w_docs,
+            return self._gather_rows(w_pids, w_docs,
                                      np.zeros(take.size, dtype=np.float64))
 
         w_pids = (matches >> 32).astype(np.int64)
@@ -4192,7 +4211,7 @@ class SearchEngine(FeatureOpsMixin):
         if order.size == 0:
             return []
         return self._gather_rows(
-            dset, w_pids[order], w_docs[order], scores[order]
+            w_pids[order], w_docs[order], scores[order]
         )
 
     def _blockmax_local(
@@ -4279,33 +4298,42 @@ class SearchEngine(FeatureOpsMixin):
         }
         return matches, scores
 
-    def _gather_rows(self, dset, w_pids, w_docs, w_scores) -> list:
+    def _gather_rows(self, w_pids, w_docs, w_scores) -> list:
         """Forward-index point gather (FullText.gatherValues analog):
-        row-group pruned by the tiny winner (pid, doc_id) predicate."""
-        import pyarrow.dataset as pads
+        each winner's (url, warc_us) by searchsorted + take on its pid's
+        cached docmap arrays (`_load_docmap`); only pids not yet cached
+        read storage. Returns [(url, warc_us, pid, doc_id, score)] in
+        winner order, omitting winners that have no docmap row -- the
+        same rows a docmap inner join drops."""
+        import pyarrow as pa
 
+        w_pids = np.asarray(w_pids, dtype=np.int64)
+        w_docs = np.asarray(w_docs, dtype=np.int64)
         if w_pids.size == 0:
             return []
-        dm = dset.to_table(
-            filter=(pads.field("row_type") == "d")
-            & pads.field("pid").isin(sorted({int(p) for p in w_pids}))
-            & pads.field("doc_id").isin(sorted({int(d) for d in w_docs})),
-            columns=["pid", "doc_id", "url", "warc_us"],
+        fwd = self._fwd_cached(
+            self._docmap_cache, w_pids.tolist(), self._load_docmap
         )
-        lookup = {
-            (int(p), int(d)): (u, int(w))
-            for p, d, u, w in zip(
-                dm["pid"].to_pylist(),
-                dm["doc_id"].to_pylist(),
-                dm["url"].to_pylist(),
-                dm["warc_us"].to_pylist(),
-            )
-        }
-        out = []
-        for p, d, s in zip(w_pids, w_docs, w_scores):
-            u, w = lookup.get((int(p), int(d)), (None, 0))
-            out.append((u, int(w), int(p), int(d), float(s)))
-        return out
+        found = {}
+        for p, (docs, urls, warcs) in fwd.items():
+            sel = np.flatnonzero(w_pids == p)
+            pos = np.searchsorted(docs, w_docs[sel])
+            hit = pos < docs.size
+            hit[hit] = docs[pos[hit]] == w_docs[sel[hit]]
+            sel, pos = sel[hit], pos[hit]
+            found.update(zip(
+                sel.tolist(),
+                zip(urls.take(pa.array(pos)).to_pylist(),
+                    warcs[pos].tolist()),
+            ))
+        return [
+            (*found[i], p, d, s)
+            for i, (p, d, s) in enumerate(zip(
+                w_pids.tolist(), w_docs.tolist(),
+                np.asarray(w_scores, dtype=np.float64).tolist(),
+            ))
+            if i in found
+        ]
 
     def search(
         self,
@@ -4418,14 +4446,13 @@ class SearchEngine(FeatureOpsMixin):
                 empty, query, locale, highlight_from, use_stopwords
             )
         # display-field gather for k winners: a POINT LOOKUP, not a join.
-        # The serving node's row-group-pruned pyarrow read (the same
-        # _gather_rows `newest` uses) answers it job-free; the broadcast
-        # docmap join remains as the distributed fallback for storage
-        # the driver can't read directly (the reference's gatherValues
-        # is likewise a forward-index point read, FullText.java:253-280).
+        # The serving node's per-pid docmap cache (the same _gather_rows
+        # `newest` uses) answers it job-free; the broadcast docmap join
+        # remains as the distributed fallback for storage the driver
+        # can't read directly (the reference's gatherValues is likewise
+        # a forward-index point read, FullText.java:253-280).
         try:
             rows = self._gather_rows(
-                self._dataset(),
                 np.array([int(r["pid"]) for r in wrows], dtype=np.int64),
                 np.array([int(r["doc_id"]) for r in wrows], dtype=np.int64),
                 np.array([float(r["score"]) for r in wrows]),
@@ -4774,8 +4801,7 @@ class SearchEngine(FeatureOpsMixin):
                 [int(r["doc_id"]) for r in trows], np.int64
             )
             gathered = self._gather_rows(
-                self._dataset(), pids_a, docs_a,
-                np.zeros(len(trows), dtype=np.float64),
+                pids_a, docs_a, np.zeros(len(trows), dtype=np.float64)
             )
             url_of = {(p, d): u for u, _w, p, d, _s in gathered}
         except Exception:
@@ -4785,7 +4811,9 @@ class SearchEngine(FeatureOpsMixin):
             for r in trows:
                 key = (int(r["pid"]), int(r["doc_id"]))
                 if key not in url_of:
-                    continue  # same drop the docmap inner join makes
+                    # no docmap row: the gather omits it, exactly as the
+                    # docmap inner join below drops it
+                    continue
                 by_qid.setdefault(int(r["qid"]), []).append(
                     (r["rn"], r["pid"], r["doc_id"], r["score"],
                      url_of[key])
@@ -4868,7 +4896,6 @@ class SearchEngine(FeatureOpsMixin):
                 # driver cannot read storage directly
                 try:
                     rows = self._gather_rows(
-                        self._dataset(),
                         np.array([int(r["pid"]) for r in wrows],
                                  dtype=np.int64),
                         np.array([int(r["doc_id"]) for r in wrows],

@@ -978,7 +978,7 @@ class FeatureOpsMixin:
             pids = np.array([r["pid"] for r in page], dtype=np.int64)
             docs = np.array([r["doc_id"] for r in page], dtype=np.int64)
             gathered = self._gather_rows(
-                self._dataset(), pids, docs, np.zeros(pids.size)
+                pids, docs, np.zeros(pids.size)
             )
             urls = {(p, d): u for u, _w, p, d, _s in gathered}
             for r in page:

@@ -1,5 +1,8 @@
 """Round-5 review fixes (ADVICE.md r4): dual-role prefix expansion,
-newest() fallback ordering, per-run streaming batch counts."""
+newest() fallback ordering, per-run streaming batch counts. Also the
+serving node's per-pid forward-index cache: warm searches scan no
+parquet, the cache keeps its budget, and search_many's two url
+resolutions drop the same docmap-less winners."""
 
 import os
 import sys
@@ -176,3 +179,184 @@ def test_run_batches_counts_this_run_only():
     assert run_batches(Q(None, [])) == 0
     # lastProgress without recent (retention dropped everything)
     assert run_batches(Q({"batchId": 7}, [])) == 1
+
+
+def _serving_answers(e, rows):
+    """Every display-gathering read a serving search makes, with the
+    full (pid, doc_id, score, url, warc) rows where the API has them."""
+    span = (rows[100]["warc_us"], rows[600]["warc_us"])  # both pids cut
+    qs = ["w000001 AND w000004", "w000002", "w000003 OR w000007"]
+    return {
+        "collect": [r for q in qs for r in e.search_collect(q)]
+        + e.search_collect("w000002", time_range_us=span),
+        "search": [
+            tuple(r) for q in qs for r in e.search(q, k=10).collect()
+        ],
+        "newest": [
+            tuple(r) for r in e.newest(k=10, query="w000001").collect()
+        ]
+        + [
+            tuple(r)
+            for r in e.newest(
+                k=10, query="w000002", time_range_us=span
+            ).collect()
+        ],
+        "many": e.search_many(qs, k=10),
+    }
+
+
+def test_warm_serving_search_scans_no_dataset(spark, eng, monkeypatch):
+    """Once an engine has touched a pid, display gathers and time
+    bounds come from its forward-index cache: with every pyarrow
+    dataset scan made to raise, a warm engine answers exactly what it
+    answered cold, and no scan is even attempted (search() and
+    search_many would otherwise hide a failed gather behind their
+    docmap-join fallbacks)."""
+    rows = generate_rows(range(N))
+    e = SearchEngine(spark, eng.paths.root)
+    try:
+        cold = _serving_answers(e, rows)
+        real = e._dataset()
+        scans = []
+
+        class NoScan:
+            def __getattr__(self, name):
+                return getattr(real, name)
+
+            def to_table(self, *a, **kw):
+                scans.append(kw.get("filter"))
+                raise AssertionError("dataset scan on a warm engine")
+
+        monkeypatch.setattr(e, "_dataset", lambda: NoScan())
+        warm = _serving_answers(e, rows)
+    finally:
+        e.close()
+    assert scans == []
+    assert warm == cold
+    assert all(cold.values())
+
+
+def test_fwd_cache_stays_in_budget(spark, eng):
+    """A tiny local_max_postings caps the time-index and docmap caches
+    together at 2 x local_max_postings docs (here below the index's 800
+    docs, so some pid is refused) and the answers do not change. At 390
+    the one-term queries still take the serving route."""
+    rows = generate_rows(range(N))
+    want = _serving_answers(eng, rows)
+    tiny = SearchEngine(spark, eng.paths.root, local_max_postings=390)
+    try:
+        got = _serving_answers(tiny, rows)
+        kept = sum(a.size for a in tiny._times_cache.values()) + sum(
+            docs.size for docs, _u, _w in tiny._docmap_cache.values()
+        )
+        assert 0 < tiny._fwd_cache_entries == kept <= 2 * 390
+    finally:
+        tiny.close()
+    assert tiny._fwd_cache_entries == 0
+    assert not tiny._times_cache and not tiny._docmap_cache
+    assert got == want
+
+
+
+def test_fwd_cache_concurrent_fill_counts_each_pid_once(spark, eng):
+    """Serving threads racing to fill the same cold pids keep each pid
+    once: the shared entry count equals what the caches hold."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    e = SearchEngine(spark, eng.paths.root)
+    pids = np.array(sorted(e.pid_counts), dtype=np.int64)
+    docs = np.zeros(pids.size, dtype=np.int64)
+    want = eng._gather_rows(pids, docs, np.zeros(pids.size))
+    got, errors = [], []
+
+    def work():
+        try:
+            got.append(e._gather_rows(pids, docs, np.zeros(pids.size)))
+            e._pid_times(pids)
+        except Exception as ex:  # surfaced by the asserts below
+            errors.append(ex)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert errors == [] and got == [want] * 16
+        kept = sum(a.size for a in e._times_cache.values()) + sum(
+            d.size for d, _u, _w in e._docmap_cache.values()
+        )
+        assert e._fwd_cache_entries == kept == 2 * N
+    finally:
+        e.close()
+
+
+def test_search_many_drops_winner_without_docmap_row(
+    spark, eng, tmp_path, monkeypatch
+):
+    """A winner whose docmap ('d') row is absent is dropped alike by
+    search_many's point gather and by its broadcast-docmap join
+    fallback (ADVICE r5: the gather used to return it with url None)."""
+    import glob
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    qs = ["w000001 AND w000004", "w000002"]
+    old = eng.local_max_postings
+    eng.local_max_postings = 0  # force the batched Spark job
+    try:
+        want = eng.search_many(qs, k=5)
+    finally:
+        eng.local_max_postings = old
+    vp, vd = want[qs[0]][0][:2]
+    want[qs[0]] = want[qs[0]][1:]
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(eng.paths.root, root)
+    dropped = 0
+    for f in glob.glob(f"{root}/segments/**/*.parquet", recursive=True):
+        t = pq.read_table(f)
+        # non-'d' rows carry null doc_ids: null-safe, or they drop too
+        victim = pc.fill_null(
+            pc.and_(
+                pc.and_(
+                    pc.equal(t["row_type"], "d"), pc.equal(t["pid"], vp)
+                ),
+                pc.equal(t["doc_id"], vd),
+            ),
+            False,
+        )
+        n = pc.sum(victim).as_py() or 0
+        if n:
+            pq.write_table(t.filter(pc.invert(victim)), f)
+            crc = os.path.join(
+                os.path.dirname(f), f".{os.path.basename(f)}.crc"
+            )
+            if os.path.exists(crc):
+                os.remove(crc)
+            dropped += n
+    assert dropped == 1
+
+    e = SearchEngine(spark, root, local_max_postings=0)
+    try:
+        gathered = e.search_many(qs, k=5)
+
+        def boom(*a, **kw):
+            raise OSError("driver cannot read storage")
+
+        monkeypatch.setattr(e, "_gather_rows", boom)
+        joined = e.search_many(qs, k=5)
+    finally:
+        e.close()
+    assert gathered == joined == want
