@@ -66,8 +66,6 @@ from ..queryparse import (
     with_access,
 )
 
-_RESULT_SCHEMA = "pid long, doc_id long, score double"
-
 _AUX_TYPES = {
     "pid": "long", "term": "string", "blk": "long", "n": "int",
     "first_doc": "long", "last_doc": "long", "max_tf": "int",
@@ -248,6 +246,105 @@ def _tree_tags(node) -> set:
     return tags
 
 
+def _evaluate(
+    tree, cmap, fmap, dmap, expansions, universe, term_pos, bounds,
+    rem, scoring_terms, idf, avgdl, score,
+):
+    """Exact match + mask + score, the one evaluator every engine driver
+    runs: filter tree -> boundary-pid time mask -> tombstone mask ->
+    sorted-term BM25 sum (miru's buildTimeRangeMask / buildIndexMask
+    applied to the evaluated answer). Ids are composite
+    (pid << 32 | doc_id); a per-pid caller passes local docIDs as pid 0.
+
+    `cmap`/`fmap`/`dmap` map term -> sorted ids / tfs / dls; `bounds`
+    maps pid -> exact [lo, hi) docID interval (pids absent are
+    unbounded); `rem` is the sorted tombstoned-id array or None.
+    Per-doc sums are independent of which other docs are present, so a
+    block subset scores exactly like the full scan. Returns
+    (matches, scores); scores are zero unless `score`."""
+    matches = _eval_tree(tree, cmap, expansions, universe, term_pos)
+    for p, (lo, hi) in bounds.items():
+        if not matches.size:
+            break
+        s = np.searchsorted(matches, p << 32)
+        e = np.searchsorted(matches, (p + 1) << 32)
+        kl = np.searchsorted(matches, (p << 32) + lo)
+        kh = np.searchsorted(matches, (p << 32) + hi)
+        matches = np.concatenate((matches[:s], matches[kl:kh], matches[e:]))
+    if rem is not None and rem.size and matches.size:
+        pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
+        matches = matches[rem[pos] != matches]
+    scores = np.zeros(matches.size, dtype=np.float64)
+    if score and matches.size:
+        for t in scoring_terms:  # sorted order fixes float summation
+            ids = cmap.get(t)
+            if ids is None or ids.size == 0:
+                continue
+            _accumulate_term(
+                scores, matches, ids, fmap[t], dmap[t], idf.get(t, 0.0),
+                avgdl,
+            )
+    return matches, scores
+
+
+def _decode_times(first_docs, ids_bins) -> np.ndarray:
+    """One pid's docID -> warc_us array from its 't' time-index rows.
+    Each row's blob is a varint delta run that restarts at the row's
+    first_doc, so rows decode in first_doc order and concatenate;
+    docIDs are dense and time-ordered, so array position IS the docID."""
+    bins = list(ids_bins)
+    order = np.argsort(np.asarray(first_docs), kind="stable")
+    if not order.size:
+        return np.empty(0, dtype=np.int64)
+    return np.concatenate([np.cumsum(decode_varint(bins[i])) for i in order])
+
+
+def _doc_interval(warc: np.ndarray, t0_us: int, t1_us: int) -> tuple:
+    """Exact [lo, hi) docID interval of [t0_us, t1_us] over a pid's
+    time-ordered warc_us array (LabTimeIndex getClosestId,
+    LabTimeIndex.java:191-208)."""
+    return (
+        int(np.searchsorted(warc, t0_us, "left")),
+        int(np.searchsorted(warc, t1_us, "right")),
+    )
+
+
+def _bucket_counts(ts: np.ndarray, bucket_us: int, origin_us: int,
+                   count: int):
+    """Histogram timestamps into (bucket, count) arrays: epoch-aligned
+    when `count` is 0, else `count` equal segments from origin_us (the
+    reference's divideTimeRangeIntoNSegments shape --
+    StumptownQuestion.java:115-129, AnalyticsQuery; the tail beyond
+    origin + count*dur is truncated exactly like its closestId edge
+    array)."""
+    if count:
+        rel = ts - origin_us
+        rel = rel[(rel >= 0) & (rel < count * bucket_us)]
+        return np.unique(rel // bucket_us, return_counts=True)
+    return np.unique(ts // bucket_us, return_counts=True)
+
+
+_OUT_TYPES = {
+    "pid": "long", "doc_id": "long", "score": "double", "cnt": "long",
+    "term": "string",
+}
+
+
+def _kernel_columns(agg: str | None, facet_prefixes) -> list[str]:
+    """Output columns of the per-pid kernel for one agg mode: the one
+    list both `kernel_frame`'s mapInPandas schema and the kernel's
+    empty frames are built from."""
+    cols = ["pid", "doc_id", "score"]
+    if agg in ("aggregate", "waveforms"):
+        cols.append("cnt")
+    # streamed facet mode emits the composed value term itself (metrics
+    # excepted: its values decode in-kernel and only per-bucket sums
+    # leave the task)
+    if facet_prefixes and agg != "metrics":
+        cols.append("term")
+    return cols
+
+
 def _per_pid_dispatch(kernel):
     """mapInPandas wrapper: consume a task's (pid-co-located) block rows,
     run the per-pid kernel on each pid group. The rows reaching a task are
@@ -357,7 +454,6 @@ def _make_kernel(
     k: int,
     pid_counts: dict,
     expansions: dict,
-    time_bounds: dict | None,
     use_blockmax: bool,
     idf_map: dict | None = None,
     time_spec: tuple | None = None,
@@ -404,15 +500,19 @@ def _make_kernel(
     the vocabulary is too large to pin -- a `df` column broadcast-joined
     onto the posting blocks.
 
-    Time bounds likewise: `time_spec=(t0_us, t1_us, pid_lo, pid_hi)` makes
-    the kernel resolve each boundary pid's exact [lo, hi) docID interval
-    from its 't' time-index rows (format-2 indexes; LabTimeIndex
-    getClosestId, LabTimeIndex.java:191-208) inside the same job, while
-    `time_bounds` is the legacy driver-collected dict for format-1."""
+    `time_spec=(t0_us, t1_us, pid_lo, pid_hi)` makes the kernel resolve
+    each boundary pid's exact [lo, hi) docID interval from its 't'
+    time-index rows inside the same job (LabTimeIndex getClosestId,
+    LabTimeIndex.java:191-208). Match, masks and scores come from the
+    shared `_evaluate`, over the pid's local docIDs as pid 0."""
     import pandas as pd
 
     has_all = "all" in _tree_tags(tree)
     fpfx = tuple(facet_prefixes) if facet_prefixes else None
+    out_cols = _kernel_columns(agg, facet_prefixes)
+
+    def empty() -> "pd.DataFrame":
+        return pd.DataFrame(columns=out_cols)
 
     def facet_keys(ids_out: dict) -> list:
         """Streamed facet enumeration: THIS task's facet terms are the
@@ -421,37 +521,20 @@ def _make_kernel(
         return sorted(t for t in ids_out if t.startswith(fpfx))
 
     def bucket_of(warc_vals: np.ndarray):
-        """Histogram timestamps into buckets: epoch-aligned (default) or
-        N equal segments from bucket_origin_us (the reference's
-        divideTimeRangeIntoNSegments shape -- StumptownQuestion.java
-        :115-129, AnalyticsQuery; segment tail beyond origin + N*dur is
-        truncated exactly like its closestId edge array)."""
-        if bucket_count:
-            rel = warc_vals - bucket_origin_us
-            rel = rel[(rel >= 0) & (rel < bucket_count * bucket_us)]
-            return np.unique(rel // bucket_us, return_counts=True)
-        return np.unique(warc_vals // bucket_us, return_counts=True)
+        return _bucket_counts(
+            warc_vals, bucket_us, bucket_origin_us, bucket_count
+        )
 
-    def resolve_bounds(pid: int, trows):
+    def resolve_bounds(pid: int, warc):
         """Per-pid [lo, hi) docID interval, or None when unbounded."""
-        n = int(pid_counts.get(pid, 0))
-        if time_bounds is not None:
-            return time_bounds.get(pid, (0, n))
         if time_spec is None:
             return None
         t0_us, t1_us, pid_lo, pid_hi = time_spec
-        if pid_lo < pid < pid_hi:
-            return (0, n)  # interior pid: whole partition inside the range
-        if trows is None or not len(trows):
-            return (0, n)
-        tr = trows.sort_values("first_doc")
-        warc = np.concatenate(
-            [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-        )
-        return (
-            int(np.searchsorted(warc, t0_us, "left")),
-            int(np.searchsorted(warc, t1_us, "right")),
-        )
+        if pid_lo < pid < pid_hi or warc is None:
+            # interior pid (whole partition inside the range) or no 't'
+            # rows shipped for it
+            return (0, int(pid_counts.get(pid, 0)))
+        return _doc_interval(warc, t0_us, t1_us)
 
     def decode_terms(rows: "pd.DataFrame"):
         term_ids, term_tfs, term_dls = {}, {}, {}
@@ -517,39 +600,16 @@ def _make_kernel(
         if ids_out is not None:
             ids_out.update(term_ids)
         n_docs_pid = int(pid_counts.get(pid, 0))
-        if has_all:
-            if bounds is not None:
-                lo, hi = bounds
-                universe = np.arange(
-                    max(lo, 0), min(hi, n_docs_pid), dtype=np.int64
-                )
-            else:
-                universe = np.arange(n_docs_pid, dtype=np.int64)
-        else:
-            universe = np.empty(0, dtype=np.int64)
-        matches = _eval_tree(tree, term_ids, expansions, universe, term_pos)
-        if bounds is not None and matches.size:
-            lo, hi = bounds
-            matches = matches[(matches >= lo) & (matches < hi)]
-        if rem is not None and rem.size and matches.size:
-            pos = np.minimum(
-                np.searchsorted(rem, matches), rem.size - 1
-            )
-            matches = matches[rem[pos] != matches]
-        if matches.size == 0:
-            z = np.empty(0, dtype=np.int64)
-            return z, np.empty(0, dtype=np.float64)
-        scores = np.zeros(matches.size, dtype=np.float64)
-        if strategy != "time":  # TIME discards scores: skip the loop
-            for t in scoring_terms:  # sorted order fixes float summation
-                ids = term_ids.get(t)
-                if ids is None or ids.size == 0:
-                    continue
-                _accumulate_term(
-                    scores, matches, ids, term_tfs[t], term_dls[t],
-                    idf[t], avgdl,
-                )
-        return matches, scores
+        lo, hi = bounds if bounds is not None else (0, n_docs_pid)
+        universe = (
+            np.arange(max(lo, 0), min(hi, n_docs_pid), dtype=np.int64)
+            if has_all else np.empty(0, dtype=np.int64)
+        )
+        return _evaluate(
+            tree, term_ids, term_tfs, term_dls, expansions, universe,
+            term_pos, {0: bounds} if bounds is not None else {}, rem,
+            scoring_terms, idf, avgdl, strategy != "time",
+        )
 
     def topk_of(ids: np.ndarray, scores: np.ndarray):
         if strategy == "time":
@@ -564,22 +624,29 @@ def _make_kernel(
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         if pdf.empty:
-            return pd.DataFrame(columns=["pid", "doc_id", "score"])
+            return empty()
         pid = int(pdf["pid"].iloc[0])
         trows = None
         rem = removed_map.get(pid) if removed_map is not None else None
         if "rk" in pdf.columns:
             rk = pdf["rk"].to_numpy()
-            trows = pdf[rk == "t"]
+            if (rk == "t").any():
+                trows = pdf[rk == "t"]
             xrows = pdf[rk == "x"]  # unpinned tombstones ride along
             if len(xrows):
                 rem = np.unique(
                     xrows["first_doc"].to_numpy().astype(np.int64)
                 )
             pdf = pdf[rk == "p"]  # 'z' marker rows carry no postings
-        bounds = resolve_bounds(pid, trows)
         if pdf.empty and not has_all:
-            return pd.DataFrame(columns=["pid", "doc_id", "score"])
+            return empty()
+        # the pid's time array, decoded once: it serves both the
+        # boundary interval and every time-bucketing agg mode
+        warc = (
+            None if trows is None
+            else _decode_times(trows["first_doc"], trows["ids_bin"])
+        )
+        bounds = resolve_bounds(pid, warc)
         pdf = pdf.sort_values(["term", "blk"], kind="stable")
         if idf_map is not None:
             idf = idf_map
@@ -676,14 +743,8 @@ def _make_kernel(
                 # batched shape: TrendingInjectable computes an
                 # analytics waveform per distinct term) -- emits
                 # (pid, bucket, value_idx, count) rows
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score", "cnt"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
+                if warc is None or ids.size == 0:
+                    return empty()
                 fts = (
                     facet_keys(ids_out) if fpfx is not None
                     else (facet_terms or [])
@@ -706,9 +767,7 @@ def _make_kernel(
                     o_c.append(cnt)
                     o_t.extend([t] * ub.size)
                 if not o_b:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score", "cnt"]
-                    )
+                    return empty()
                 out = {
                     "pid": pid,
                     "doc_id": np.concatenate(o_b),
@@ -727,14 +786,8 @@ def _make_kernel(
                 # bit-slice bitmaps of multiplier x boundedCardinality;
                 # here the decomposition is per value-term: sum over
                 # composed numeric terms of value x |match AND postings|)
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
+                if warc is None or ids.size == 0:
+                    return empty()
                 acc: dict = {}
                 if fpfx is not None:
                     # streamed numeric facet: the value is decodable
@@ -817,17 +870,11 @@ def _make_kernel(
                 # real pid (score 0, TIME semantics -- docIDs are
                 # time-ordered within a pid)
                 if ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
+                    return empty()
                 out_pid: list = []
                 out_doc: list = []
                 out_sc: list = []
-                if trows is not None and len(trows):
-                    tr = trows.sort_values("first_doc")
-                    warc = np.concatenate(
-                        [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                    )
+                if warc is not None:
                     b_idx, cnt = bucket_of(warc[ids])
                     out_pid.extend([-1] * b_idx.size)
                     out_doc.extend(b_idx.tolist())
@@ -844,14 +891,8 @@ def _make_kernel(
                     }
                 )
             if agg == "waveform":
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
+                if warc is None or ids.size == 0:
+                    return empty()
                 b_idx, cnt = bucket_of(warc[ids])
                 return pd.DataFrame(
                     {
@@ -1000,11 +1041,9 @@ def _make_composite_kernel(
     n_docs: int,
     avgdl: float,
     k: int,
-    pid_counts: dict,
     expansions: dict,
-    time_bounds: dict | None,
     time_spec: tuple | None,
-    removed_map: dict | None,
+    removed_comp: np.ndarray | None,
     idf_map: dict | None,
 ):
     """Task-level composite-id kernel for the plain scoring search:
@@ -1012,13 +1051,13 @@ def _make_composite_kernel(
     (O(pids x terms) small-array NumPy calls -- the latency floor of
     wide queries at fine-grained time partitioning), decode the whole
     task ONCE into composite (pid << 32 | doc_id) arrays and run ONE
-    _eval_tree + ONE sorted-term scoring pass + ONE top-k over all of
-    the task's pids. Composite ids are globally sorted per term, so
-    every evaluator step is the same code path the serving node runs
-    (_search_local) -- scores are bit-identical to the per-pid kernel
-    (same per-doc contributions in the same sorted-term order) and the
-    task's k best rows by (score desc, pid, doc_id) are exactly its
-    contribution to the global TakeOrdered merge.
+    `_evaluate` + ONE top-k over all of the task's pids -- the same
+    evaluator call the serving node makes (_search_local), so scores
+    are bit-identical to it and to the per-pid kernel (same per-doc
+    contributions in the same sorted-term order), and the task's k best
+    rows by (score desc, pid, doc_id) are exactly its contribution to
+    the global TakeOrdered merge. `removed_comp` is the pinned sorted
+    composite tombstone array.
 
     Used when agg is None, strategy is score-ranked, no phrase members,
     no match-all marker rows and no unpinned tombstones ride the
@@ -1030,12 +1069,20 @@ def _make_composite_kernel(
         if not dfs_:
             return
         pdf = pd.concat(dfs_, ignore_index=True)
-        trows = None
+        bounds: dict = {}
         if "rk" in pdf.columns:
             rk = pdf["rk"].to_numpy()
-            if (rk == "t").any():
-                trows = pdf[rk == "t"]
+            trows = pdf[rk == "t"]
             pdf = pdf[rk == "p"]
+            if time_spec is not None and len(trows):
+                # boundary pids whose 't' rows this task owns get their
+                # exact interval; interior pids are unbounded
+                t0_us, t1_us, _plo, _phi = time_spec
+                for p, tr in trows.groupby("pid", sort=True):
+                    bounds[int(p)] = _doc_interval(
+                        _decode_times(tr["first_doc"], tr["ids_bin"]),
+                        t0_us, t1_us,
+                    )
         if not len(pdf):
             return
         dec, dfmap = _decode_pdf_composite(pdf)
@@ -1044,71 +1091,16 @@ def _make_composite_kernel(
             if idf_map is not None
             else {t: bm25_idf(n_docs, d) for t, d in dfmap.items()}
         )
-        cmap = {t: v[0] for t, v in dec.items()}
-        matches = _eval_tree(
-            tree, cmap, expansions, np.empty(0, dtype=np.int64), None
+        matches, scores = _evaluate(
+            tree,
+            {t: v[0] for t, v in dec.items()},
+            {t: v[1] for t, v in dec.items()},
+            {t: v[2] for t, v in dec.items()},
+            expansions, np.empty(0, dtype=np.int64), None, bounds,
+            removed_comp, scoring_terms, idf, avgdl, True,
         )
-        # per-boundary-pid time bounds, applied to the matching span of
-        # the composite array (identical to the per-pid kernel's
-        # resolve_bounds + range filter; interior pids are unbounded)
-        if matches.size and (
-            time_bounds is not None or time_spec is not None
-        ):
-            if time_bounds is not None:
-                bpids = sorted(time_bounds)
-            else:
-                t0_us, t1_us, plo, phi = time_spec
-                bpids = sorted({plo, phi})
-            for p in bpids:
-                if not matches.size:
-                    break
-                lo_i = np.searchsorted(matches, p << 32)
-                hi_i = np.searchsorted(matches, (p + 1) << 32)
-                if hi_i <= lo_i:
-                    continue  # none of this task's matches are in p
-                n = int(pid_counts.get(p, 0))
-                if time_bounds is not None:
-                    lo, hi = time_bounds.get(p, (0, n))
-                else:
-                    tr = (
-                        trows[trows["pid"] == p]
-                        if trows is not None else None
-                    )
-                    if tr is None or not len(tr):
-                        lo, hi = 0, n
-                    else:
-                        tr = tr.sort_values("first_doc")
-                        warc = np.concatenate(
-                            [
-                                np.cumsum(decode_varint(b))
-                                for b in tr["ids_bin"]
-                            ]
-                        )
-                        lo = int(np.searchsorted(warc, t0_us, "left"))
-                        hi = int(np.searchsorted(warc, t1_us, "right"))
-                seg = matches[lo_i:hi_i] - (p << 32)
-                keep = np.ones(matches.size, dtype=bool)
-                keep[lo_i:hi_i] = (seg >= lo) & (seg < hi)
-                matches = matches[keep]
-        if removed_map and matches.size:
-            rem = np.concatenate(
-                [
-                    (np.int64(p) << 32) + removed_map[p]
-                    for p in sorted(removed_map)
-                ]
-            )
-            pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
-            matches = matches[rem[pos] != matches]
         if matches.size == 0:
             return
-        scores = np.zeros(matches.size, dtype=np.float64)
-        for t in scoring_terms:  # sorted order fixes float summation
-            e = dec.get(t)
-            if e is None or e[0].size == 0:
-                continue
-            _accumulate_term(
-                scores, matches, e[0], e[1], e[2], idf[t], avgdl
-            )
         order = np.lexsort((matches, -scores))
         if k > 0:
             order = order[:k]
@@ -1144,6 +1136,20 @@ class SearchEngine(FeatureOpsMixin):
         max_pinned_removals: int = 2_000_000,
         as_of: str | None = None,
     ):
+        meta_path = os.path.join(index_dir, "meta.json")
+        self.meta = {}
+        if os.path.exists(meta_path):
+            with open(meta_path) as f:
+                self.meta = json.load(f)
+        # every read path needs the per-block 't' time rows of format 2;
+        # checked once, before any Spark work
+        fmt = int(self.meta.get("format", 1))
+        if fmt < 2:
+            raise ValueError(
+                f"index {index_dir!r} has format {fmt}; this engine reads "
+                f"format >= 2 (per-block 't' time rows) -- rebuild it with "
+                f"build_index"
+            )
         # AQE re-plans every exchange as its own job; for small interactive
         # top-k queries that is ~6 jobs and +30-40% latency with no upside
         # (the kernel shuffle is tiny). Wide analytic workloads sharing the
@@ -1176,11 +1182,6 @@ class SearchEngine(FeatureOpsMixin):
             self.spark = spark
         spark = self.spark
         self.paths = IndexPaths(index_dir)
-        meta_path = os.path.join(index_dir, "meta.json")
-        self.meta = {}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                self.meta = json.load(f)
         from ..index.build import (
             _tags_as_of,
             read_docmap,
@@ -1548,21 +1549,6 @@ class SearchEngine(FeatureOpsMixin):
         self.docmap = self.docmap.cache()
         return self
 
-    def _time_bounds(self, pids: list[int], t0_us: int, t1_us: int) -> dict:
-        """Per-pid contiguous docID interval [lo, hi) for the time range --
-        docIDs are time-ordered so the mask is an interval (miru
-        getClosestId, LabTimeIndex.java:191-208)."""
-        rows = (
-            self.docmap.filter(F.col("pid").isin([int(p) for p in pids]))
-            .groupBy("pid")
-            .agg(
-                F.sum((F.col("warc_us") < t0_us).cast("long")).alias("lo"),
-                F.sum((F.col("warc_us") <= t1_us).cast("long")).alias("hi"),
-            )
-            .collect()
-        )
-        return {int(r["pid"]): (int(r["lo"]), int(r["hi"])) for r in rows}
-
     # -- search ------------------------------------------------------------
     def _prep_query(
         self,
@@ -1703,7 +1689,6 @@ class SearchEngine(FeatureOpsMixin):
                     int(time_range_us[1]),
                 )
         relevant_pids = sorted(self.pid_counts)
-        time_bounds = None
         time_spec = None
         pid_range = None
         boundary_pids: list[int] = []
@@ -1716,15 +1701,12 @@ class SearchEngine(FeatureOpsMixin):
             relevant_pids = [
                 p for p in relevant_pids if pid_lo <= p <= pid_hi
             ]
-            if int(self.meta.get("format", 1)) >= 2:
-                # boundary pids resolve their exact [lo, hi) interval in
-                # the kernel from their 't' rows -- same job, no collect
-                time_spec = (int(t0_us), int(t1_us), int(pid_lo), int(pid_hi))
-                boundary_pids = [
-                    int(p) for p in {pid_lo, pid_hi} if p in self.pid_counts
-                ]
-            else:  # legacy format-1 index: driver-side bounds job
-                time_bounds = self._time_bounds(relevant_pids, t0_us, t1_us)
+            # boundary pids resolve their exact [lo, hi) interval from
+            # their 't' rows (in the kernel: same job, no collect)
+            time_spec = (int(t0_us), int(t1_us), int(pid_lo), int(pid_hi))
+            boundary_pids = [
+                int(p) for p in {pid_lo, pid_hi} if p in self.pid_counts
+            ]
 
         idf_map = None
         if self._term_df is not None:
@@ -1741,7 +1723,6 @@ class SearchEngine(FeatureOpsMixin):
             "has_all_node": has_all_node,
             "relevant_pids": relevant_pids,
             "pid_range": pid_range,
-            "time_bounds": time_bounds,
             "time_spec": time_spec,
             "boundary_pids": boundary_pids,
             "idf_map": idf_map,
@@ -1804,7 +1785,6 @@ class SearchEngine(FeatureOpsMixin):
                         facet_groups.append(sorted(set(g)))
         has_all_node = p["has_all_node"]
         relevant_pids = p["relevant_pids"]
-        time_bounds = p["time_bounds"]
         time_spec = p["time_spec"]
         boundary_pids = p["boundary_pids"]
         idf_map = p["idf_map"]
@@ -1967,7 +1947,6 @@ class SearchEngine(FeatureOpsMixin):
             k,
             self.pid_counts,
             expansions,
-            time_bounds,
             use_blockmax,
             idf_map=idf_map,
             time_spec=time_spec,
@@ -2019,17 +1998,9 @@ class SearchEngine(FeatureOpsMixin):
                 ),
             )
             src = blocks.repartition(nparts, "pid")
-        out_schema = (
-            _RESULT_SCHEMA
-            + (", cnt long" if agg in ("aggregate", "waveforms") else "")
-            # streamed facet mode emits the composed value term itself
-            # (metrics excepted: its values decode in-kernel and only
-            # per-bucket sums leave the task)
-            + (
-                ", term string"
-                if facet_prefixes and agg != "metrics"
-                else ""
-            )
+        out_schema = ", ".join(
+            f"{c} {_OUT_TYPES[c]}"
+            for c in _kernel_columns(agg, facet_prefixes)
         )
         if (
             agg is None
@@ -2044,8 +2015,7 @@ class SearchEngine(FeatureOpsMixin):
             # calls per task instead of O(pids x terms)
             runner = _make_composite_kernel(
                 tree, scoring_terms, self.n_docs, self.avgdl, k,
-                self.pid_counts, expansions, time_bounds, time_spec,
-                self._removed_map, idf_map,
+                expansions, time_spec, self._removed_comp, idf_map,
             )
             return src.mapInPandas(runner, out_schema)
         return src.mapInPandas(_per_pid_dispatch(kernel), out_schema)
@@ -2274,7 +2244,6 @@ class SearchEngine(FeatureOpsMixin):
             self._term_df is None
             or prep["has_all_node"]
             or k <= 0
-            or prep["time_bounds"] is not None
             or (self._removed_df is not None and self._removed_map is None)
             or not prep["relevant_pids"]
         ):
@@ -2340,7 +2309,6 @@ class SearchEngine(FeatureOpsMixin):
     def _local_eligible(self, prep: dict) -> bool:
         return (
             self._term_df is not None
-            and prep["time_bounds"] is None  # format-1 needs a Spark job
             # unpinned tombstones can only mask on the kernel path
             and (self._removed_df is None or self._removed_map is not None)
             and self._estimated_postings(prep) <= self.local_max_postings
@@ -2381,10 +2349,6 @@ class SearchEngine(FeatureOpsMixin):
                 "driver budget); per-term stats and the serving path "
                 "are unavailable"
             )
-        if prep["time_bounds"] is not None:
-            reasons.append(
-                "format-1 index resolves time bounds with a Spark job"
-            )
         if self._removed_df is not None and self._removed_map is None:
             reasons.append(
                 "tombstone log too large to pin driver-side; masking "
@@ -2416,7 +2380,6 @@ class SearchEngine(FeatureOpsMixin):
             self._term_df is not None
             and not prep["has_all_node"]
             and k > 0
-            and prep["time_bounds"] is None
             and (self._removed_df is None or self._removed_map is not None)
             and bool(prep["relevant_pids"])
             and est // max(1, len(prep["relevant_pids"]))
@@ -2471,12 +2434,8 @@ class SearchEngine(FeatureOpsMixin):
             "n_pids_relevant": len(prep["relevant_pids"]),
             "pid_range": prep["pid_range"],
             "time_pruning": (
-                "none"
-                if time_range_us is None and prep["time_spec"] is None
-                and prep["time_bounds"] is None
+                "none" if prep["time_spec"] is None
                 else "kernel-side 't' rows (format 2)"
-                if prep["time_spec"] is not None
-                else "driver bounds job (format 1)"
             ),
             "retention_min_us": (
                 int(self.meta.get("retention_min_us", 0) or 0) or None
@@ -2567,16 +2526,22 @@ class SearchEngine(FeatureOpsMixin):
             }
         return rep
 
-    def _local_match_ids(self, prep: dict) -> np.ndarray:
-        """Exact composite (pid << 32 | doc_id) match set of a query on
-        the serving node -- the match half of `_search_local` without
-        the scoring half: tree evaluation, boundary-pid time mask,
-        tombstone mask. Feeds `count` and `waveform`."""
-        term_cids, _tfs, _dls = self._postings_maps(
+    def _local_eval(self, prep: dict, score: bool):
+        """Serving-node prelude shared by `_local_match_ids` and
+        `_search_local`: the query's decoded postings (through the LRU),
+        phrase positions, boundary-pid bounds and match-all universe.
+        Returns (cmap, fmap, dmap, evaluate), where evaluate(cmap, fmap,
+        dmap) is `_evaluate` bound to this query's tree, masks and
+        scoring inputs -- callable on the full maps or on a block-max
+        cell subset of them."""
+        cmap, fmap, dmap = self._postings_maps(
             prep["fetch_terms"], prep["pid_range"]
         )
         term_pos: dict = {}
         if prep.get("phrase_terms"):
+            # phrase members re-fetch WITH pos blobs, bypassing the LRU
+            # (position arrays are the largest per-term payload; keeping
+            # them out of the cache keeps its budget meaningful)
             term_pos = self._decode_posting_table(
                 self._fetch_posting_rows(
                     prep["phrase_terms"],
@@ -2587,38 +2552,33 @@ class SearchEngine(FeatureOpsMixin):
                 positions=True,
             )
         bounds = self._local_bounds(prep)
+        spans = []
         if prep["has_all_node"]:
-            spans = []
             for p in prep["relevant_pids"]:
                 n = int(self.pid_counts.get(p, 0))
                 lo, hi = bounds.get(int(p), (0, n))
                 lo, hi = max(lo, 0), min(hi, n)
                 if hi > lo:
                     spans.append((int(p) << 32) + np.arange(lo, hi))
-            universe = (
-                np.concatenate(spans) if spans
-                else np.empty(0, dtype=np.int64)
-            )
-        else:
-            universe = np.empty(0, dtype=np.int64)
-        matches = _eval_tree(
-            prep["tree"], term_cids, prep["expansions"], universe, term_pos
+        universe = (
+            np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
         )
-        for p, (lo, hi) in bounds.items():
-            if not matches.size:
-                break
-            s = np.searchsorted(matches, p << 32)
-            e = np.searchsorted(matches, (p + 1) << 32)
-            kl = np.searchsorted(matches, (p << 32) + lo)
-            kh = np.searchsorted(matches, (p << 32) + hi)
-            matches = np.concatenate(
-                (matches[:s], matches[kl:kh], matches[e:])
+
+        def evaluate(c, f, d):
+            return _evaluate(
+                prep["tree"], c, f, d, prep["expansions"], universe,
+                term_pos, bounds, self._removed_comp, prep["scoring_terms"],
+                prep["idf_map"] or {}, self.avgdl, score,
             )
-        rem = self._removed_comp
-        if rem is not None and rem.size and matches.size:
-            pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
-            matches = matches[rem[pos] != matches]
-        return matches
+
+        return cmap, fmap, dmap, evaluate
+
+    def _local_match_ids(self, prep: dict) -> np.ndarray:
+        """Exact composite (pid << 32 | doc_id) match set of a query on
+        the serving node -- `_search_local`'s evaluation without
+        scoring. Feeds `count`, `waveform` and the facet ops."""
+        cmap, fmap, dmap, evaluate = self._local_eval(prep, score=False)
+        return evaluate(cmap, fmap, dmap)[0]
 
     def _fwd_cached(self, cache: dict, pids, load) -> dict:
         """Read-through for the per-pid forward-index caches: cached
@@ -2662,10 +2622,7 @@ class SearchEngine(FeatureOpsMixin):
         out = {}
         for p in np.unique(arr_pids):
             sel = np.flatnonzero(arr_pids == p)
-            sel = sel[np.argsort(firsts[sel], kind="stable")]
-            arr = np.concatenate(
-                [np.cumsum(decode_varint(bins[i])) for i in sel]
-            )
+            arr = _decode_times(firsts[sel], [bins[i] for i in sel])
             out[int(p)] = (arr, arr.size)
         return out
 
@@ -2799,11 +2756,6 @@ class SearchEngine(FeatureOpsMixin):
         time arrays). Distributed path: ONE job; each pid's kernel task
         buckets its own matches against its own 't' rows, so only
         (bucket, count) rows leave the task."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "waveform requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -2818,20 +2770,8 @@ class SearchEngine(FeatureOpsMixin):
                 "the serving-node path; use local=None for auto-routing"
             )
         if local:
-            matches = self._local_match_ids(prep)
-            if matches.size == 0:
-                return self._dense_wf({}, bucket_us, origin, segments)
-            times = self._pid_times(np.unique(matches >> 32))
-            ts = self._times_of(matches, times)
-            if segments:
-                rel = ts - origin
-                rel = rel[(rel >= 0) & (rel < segments * bucket_us)]
-                b, c = np.unique(rel // bucket_us, return_counts=True)
-            else:
-                b, c = np.unique(ts // bucket_us, return_counts=True)
-            return self._dense_wf(
-                dict(zip(b.tolist(), c.tolist())), bucket_us, origin,
-                segments,
+            return self._local_waveform(
+                self._local_match_ids(prep), bucket_us, origin, segments
             )
         rows = (
             self.kernel_frame(
@@ -2847,6 +2787,24 @@ class SearchEngine(FeatureOpsMixin):
         return self._dense_wf(
             {int(r["doc_id"]): int(r["c"]) for r in rows},
             bucket_us, origin, segments,
+        )
+
+    def _local_waveform(
+        self, matches, bucket_us, origin, segments, times=None
+    ) -> list:
+        """Waveform of a serving-node composite match set: matched ids
+        index their pids' cached time arrays (`times`, when the caller
+        already holds them), then bucket and densify."""
+        if matches.size == 0:
+            return self._dense_wf({}, bucket_us, origin, segments)
+        if times is None:
+            times = self._pid_times(np.unique(matches >> 32))
+        b, c = _bucket_counts(
+            self._times_of(matches, times), bucket_us, origin,
+            segments or 0,
+        )
+        return self._dense_wf(
+            dict(zip(b.tolist(), c.tolist())), bucket_us, origin, segments
         )
 
     def _bucket_spec(
@@ -2917,11 +2875,6 @@ class SearchEngine(FeatureOpsMixin):
         pid's task emits its bucket rows (tagged pid=-1) and its own
         newest-k candidates; only O(buckets + k) rows per task leave the
         exchange, never the match set."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "stumptown requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -2937,26 +2890,8 @@ class SearchEngine(FeatureOpsMixin):
             )
         if local:
             matches = self._local_match_ids(prep)
-            if matches.size == 0:
-                return {
-                    "waveform": self._dense_wf(
-                        {}, bucket_us, origin, segments
-                    ),
-                    "results": [],
-                }
-            times = self._pid_times(np.unique(matches >> 32))
-            ts = self._times_of(matches, times)
-            if segments:
-                rel = ts - origin
-                rel = rel[(rel >= 0) & (rel < segments * bucket_us)]
-                b, c = np.unique(rel // bucket_us, return_counts=True)
-            else:
-                b, c = np.unique(ts // bucket_us, return_counts=True)
-            wf = self._dense_wf(
-                dict(zip(b.tolist(), c.tolist())), bucket_us, origin,
-                segments,
-            )
-            newest = np.sort(matches)[::-1][: max(k, 0)]
+            wf = self._local_waveform(matches, bucket_us, origin, segments)
+            newest = matches[::-1][: max(k, 0)]
             rows = self._gather_rows(
                 newest >> 32,
                 newest & 0xFFFFFFFF,
@@ -3014,11 +2949,6 @@ class SearchEngine(FeatureOpsMixin):
         waveform in the reference's dense divideTimeRangeIntoNSegments
         shape -- AnalyticsQuery's actual scoreset, one range + N
         segments shared by the whole filter map."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "waveform requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3043,19 +2973,8 @@ class SearchEngine(FeatureOpsMixin):
         )
         times = self._pid_times(need_pids) if need_pids.size else {}
         for key, matches in local_matches.items():
-            if matches.size == 0:
-                out[key] = self._dense_wf({}, bucket_us, origin, segments)
-                continue
-            ts = self._times_of(matches, times)
-            if segments:
-                rel = ts - origin
-                rel = rel[(rel >= 0) & (rel < segments * bucket_us)]
-                b, c = np.unique(rel // bucket_us, return_counts=True)
-            else:
-                b, c = np.unique(ts // bucket_us, return_counts=True)
-            out[key] = self._dense_wf(
-                dict(zip(b.tolist(), c.tolist())), bucket_us, origin,
-                segments,
+            out[key] = self._local_waveform(
+                matches, bucket_us, origin, segments, times
             )
         return out
 
@@ -3279,11 +3198,6 @@ class SearchEngine(FeatureOpsMixin):
         )
         if strategy not in strategies:
             raise ValueError(f"strategy must be one of {strategies}")
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "trending requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3547,11 +3461,6 @@ class SearchEngine(FeatureOpsMixin):
                 f"metrics requires a numeric field, got {field!r} "
                 f"(numeric: {sorted(NUMERIC_FIELDS)})"
             )
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "metrics requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3810,10 +3719,7 @@ class SearchEngine(FeatureOpsMixin):
         t0_us, t1_us, _lo, _hi = prep["time_spec"]
         times = self._pid_times(prep["boundary_pids"])
         return {
-            p: (
-                int(np.searchsorted(warc, t0_us, "left")),
-                int(np.searchsorted(warc, t1_us, "right")),
-            )
+            p: _doc_interval(warc, t0_us, t1_us)
             for p, warc in times.items()
         }
 
@@ -4092,104 +3998,25 @@ class SearchEngine(FeatureOpsMixin):
         (score desc, pid, doc_id), length <= k."""
         if k <= 0:
             return []
-
-        term_cids, term_tfs, term_dls = self._postings_maps(
-            prep["fetch_terms"], prep["pid_range"]
-        )
-
-        term_pos: dict = {}
-        if prep.get("phrase_terms"):
-            # phrase members re-fetch WITH pos blobs, bypassing the LRU
-            # (position arrays are the largest per-term payload; keeping
-            # them out of the cache keeps its budget meaningful)
-            term_pos = self._decode_posting_table(
-                self._fetch_posting_rows(
-                    prep["phrase_terms"],
-                    prep["pid_range"],
-                    ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
-                     "pos_bin"],
-                ),
-                positions=True,
-            )
-
-        bounds = self._local_bounds(prep)
-
-        if prep["has_all_node"]:
-            spans = []
-            for p in prep["relevant_pids"]:
-                n = int(self.pid_counts.get(p, 0))
-                lo, hi = bounds.get(int(p), (0, n))
-                lo, hi = max(lo, 0), min(hi, n)
-                if hi > lo:
-                    spans.append((int(p) << 32) + np.arange(lo, hi))
-            universe = (
-                np.concatenate(spans) if spans
-                else np.empty(0, dtype=np.int64)
-            )
-        else:
-            universe = np.empty(0, dtype=np.int64)
-
-        idf = prep["idf_map"] or {}
-        scoring_terms = prep["scoring_terms"]
-        rem = self._removed_comp
-
-        def eval_and_score(cmap, fmap, dmap):
-            """Exact match + score over (a cell-aligned subset of) the
-            fetched postings: filter tree, boundary-pid time mask,
-            tombstone mask, then sorted-term float64 accumulation --
-            per-doc sums are independent of which OTHER docs are in the
-            subset, so subset scores equal full-scan scores exactly."""
-            matches = _eval_tree(
-                prep["tree"], cmap, prep["expansions"], universe, term_pos
-            )
-            # exact boundary-pid time mask (interior pids wholly inside)
-            for p, (lo, hi) in bounds.items():
-                if not matches.size:
-                    break
-                s = np.searchsorted(matches, p << 32)
-                e = np.searchsorted(matches, (p + 1) << 32)
-                kl = np.searchsorted(matches, (p << 32) + lo)
-                kh = np.searchsorted(matches, (p << 32) + hi)
-                matches = np.concatenate(
-                    (matches[:s], matches[kl:kh], matches[e:])
-                )
-            if rem is not None and rem.size and matches.size:
-                pos = np.minimum(
-                    np.searchsorted(rem, matches), rem.size - 1
-                )
-                matches = matches[rem[pos] != matches]
-            if matches.size == 0 or strategy == "time":
-                return matches, np.zeros(matches.size, dtype=np.float64)
-            scores = np.zeros(matches.size, dtype=np.float64)
-            for t in scoring_terms:
-                cids = cmap.get(t)
-                if cids is None or cids.size == 0:
-                    continue
-                _accumulate_term(
-                    scores, matches, cids, fmap[t], dmap[t],
-                    idf.get(t, 0.0), self.avgdl,
-                )
-            return matches, scores
-
-        n_postings = sum(c.size for c in term_cids.values())
+        score = strategy != "time"
+        cmap, fmap, dmap, evaluate = self._local_eval(prep, score)
+        n_postings = sum(c.size for c in cmap.values())
         if (
             use_blockmax
-            and strategy != "time"
+            and score
             and not prep["has_all_node"]
             # _blockmax_local's slice_to cannot slice the self-contained
             # phrase position triples; phrase queries stay exhaustive
-            and not term_pos
-            and scoring_terms
+            and not prep.get("phrase_terms")
+            and prep["scoring_terms"]
             and n_postings >= self.LOCAL_BLOCKMAX_MIN_POSTINGS
         ):
             matches, scores = self._blockmax_local(
-                term_cids, term_tfs, term_dls, eval_and_score,
-                set(scoring_terms), idf, k,
+                cmap, fmap, dmap, evaluate, set(prep["scoring_terms"]),
+                prep["idf_map"] or {}, k,
             )
         else:
-            matches, scores = eval_and_score(
-                term_cids, term_tfs, term_dls
-            )
+            matches, scores = evaluate(cmap, fmap, dmap)
         if matches.size == 0:
             return []
 
@@ -4393,9 +4220,9 @@ class SearchEngine(FeatureOpsMixin):
             local = self._local_eligible(prep)
         elif local and not self._local_eligible(prep):
             # forcing the serving-node path when it can't answer this
-            # query correctly (unpinned dictionary/tombstones, format-1
-            # time bounds, oversized posting volume) must fail loudly,
-            # not return silently-wrong results
+            # query correctly (unpinned dictionary/tombstones, oversized
+            # posting volume) must fail loudly, not return
+            # silently-wrong results
             raise ValueError(
                 "local=True forced but this query is not eligible for "
                 "the serving-node path; use local=None for auto-routing"
@@ -4637,28 +4464,17 @@ class SearchEngine(FeatureOpsMixin):
                 out[q] = [(p, d, s, u) for (u, _w, p, d, s) in rows]
                 specs.append(None)
                 continue
-            batch_time_ok = (
-                prep["time_spec"] is None
-                and prep["time_bounds"] is None
-                and prep["pid_range"] is None
-            )
-            if ret_us > 0 and prep["time_bounds"] is None:
-                # format>=2 retention clamp: identical spec for every
-                # query in the batch, carried on the shared exchange
+            if ret_us > 0:
+                # retention clamp: identical spec for every query in
+                # the batch, carried on the shared exchange
                 shared_spec = prep["time_spec"]
                 shared_boundary = prep["boundary_pids"]
                 shared_pid_range = prep["pid_range"]
-                batch_time_ok = True
-            if (
-                prep["has_all_node"]
-                or prep.get("phrase_terms")
-                or not batch_time_ok
-            ):
-                # match-all needs marker rows, phrases need pos blobs,
-                # and per-query/format-1 time bounds need their own
-                # pid/bounds spec -- the shared batched exchange carries
-                # none of these, so these answer through the individual
-                # kernel path where results stay identical to sequential
+            if prep["has_all_node"] or prep.get("phrase_terms"):
+                # match-all needs marker rows and phrases need pos
+                # blobs -- the shared batched exchange carries neither,
+                # so these answer through the individual kernel path
+                # where results stay identical to sequential
                 # search_collect
                 fallback[q] = None
                 specs.append(None)
@@ -4756,7 +4572,7 @@ class SearchEngine(FeatureOpsMixin):
             tree, scoring, expansions = spec
             kernels[qid] = _make_kernel(
                 tree, scoring, n_docs, avgdl, k, pid_counts,
-                expansions, None, use_blockmax, idf_map=idf_map,
+                expansions, use_blockmax, idf_map=idf_map,
                 time_spec=shared_spec,
                 removed_map=self._removed_map,
             )

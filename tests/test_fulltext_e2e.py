@@ -196,7 +196,7 @@ def test_theta_seed_prunes_blocks(fine_engine, query, k):
         kern = _make_kernel(
             prep["tree"], prep["scoring_terms"], engine.n_docs,
             engine.avgdl, k, engine.pid_counts, prep["expansions"],
-            None, True, idf_map=prep["idf_map"], theta0=seed,
+            use_blockmax=True, idf_map=prep["idf_map"], theta0=seed,
             counter=counter,
         )
         outs = [

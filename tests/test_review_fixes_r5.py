@@ -89,8 +89,9 @@ def test_newest_fallback_is_ordered(eng, monkeypatch):
 def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     """considerIfLastIdGreaterThanN analog (LabFieldIndex.multiTxIndex
     :339-419): with doc-range bounds the kernel drops posting blocks
-    whose span misses [lo, hi) BEFORE decode. Identical results, fewer
-    varint decodes."""
+    whose span misses [lo, hi) BEFORE decode. The bounds resolve from a
+    `time_spec` whose boundary pid's 't' rows ride in the frame, as on
+    the distributed route. Identical results, fewer varint decodes."""
     import numpy as np
     import pandas as pd
 
@@ -102,12 +103,20 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
             (E.F.col("term") == "w000001") & (E.F.col("pid") == pid)
         )
         .toPandas()
+        .sort_values("first_doc", ignore_index=True)
     )
     assert len(pdf) >= 3, "need a multi-block term for the scenario"
     pdf["rk"] = "p"
-    n = int(eng.pid_counts[pid])
-    lo = int(pdf["first_doc"].iloc[len(pdf) // 2])
-    bounds = {pid: (lo, n)}
+    trows = eng.timeindex.filter(E.F.col("pid") == pid).toPandas()
+    trows["rk"] = "t"
+    warc = E._decode_times(trows["first_doc"], trows["ids_bin"])
+    assert warc.size == int(eng.pid_counts[pid])
+    # the window opens at the middle block's first doc and runs past the
+    # pid's newest doc: the pid is the range's lower boundary pid
+    t0 = int(warc[int(pdf["first_doc"].iloc[len(pdf) // 2])])
+    spec = (t0, int(warc[-1]) + 1, pid, pid + 1)
+    lo = int(np.searchsorted(warc, t0, "left"))
+    assert lo > int(pdf["last_doc"].iloc[0])  # a whole block lies below
 
     calls = {"n": 0}
     real = E.decode_postings
@@ -118,17 +127,17 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
 
     monkeypatch.setattr(E, "decode_postings", counting)
 
-    def run(tb):
+    def run(frame, time_spec):
         return E._make_kernel(
             ("term", "w000001"), ["w000001"], eng.n_docs, eng.avgdl,
-            0, eng.pid_counts, {}, tb, False,
-            idf_map={"w000001": 1.0},
-        )(pdf.copy())
+            0, eng.pid_counts, {}, use_blockmax=False,
+            idf_map={"w000001": 1.0}, time_spec=time_spec,
+        )(frame.copy())
 
-    unbounded = run(None)
+    unbounded = run(pdf, None)
     n_unbounded = calls["n"]
     calls["n"] = 0
-    bounded = run(bounds)
+    bounded = run(pd.concat([pdf, trows], ignore_index=True), spec)
     n_bounded = calls["n"]
     assert n_bounded < n_unbounded  # blocks below lo never decoded
     want = unbounded[unbounded["doc_id"] >= lo].reset_index(drop=True)
