@@ -13,32 +13,31 @@ FullText.java:54-97):
   the pid partition level plus an exact per-pid docID interval mask, the
   analog of miru's buildTimeRangeMask closest-id bounds
   (MiruBitmaps.java:141, LabTimeIndex.java:191-208)
-- per-partition kernel: `repartition(pid)` + `mapInPandas` (one pandas
-  call per task, looping the pids it owns -- per-group invocation
-  overhead stays O(tasks), not O(pids)) -- decode posting blocks to
-  NumPy, evaluate the boolean tree over sorted docID arrays
-  (and/or/andNot = intersect/union/setdiff -- MiruBitmaps.java:87-123),
-  score BM25 (k1=1.2, b=0.75) vectorized, emit a bounded per-partition
-  top-k (the reference's MinMaxPriorityQueue, FullText.java:129-157)
+- task kernel: `repartition(pid)` + `mapInPandas`, one pandas call per
+  task -- decode the task's posting blocks ONCE into composite
+  (pid << 32 | doc_id) NumPy arrays, evaluate the boolean tree over
+  sorted id arrays (and/or/andNot = intersect/union/setdiff --
+  MiruBitmaps.java:87-123), AND the time and tombstone masks, score BM25
+  (k1=1.2, b=0.75) vectorized -- or, for the TIME strategy, take the
+  newest ids -- and emit the task's bounded top-k (the reference's
+  MinMaxPriorityQueue, FullText.java:129-157)
 - global merge: orderBy(score desc, pid asc, doc_id asc).limit(k) --
   Spark's TakeOrderedAndProject is the FullTextAnswerMerger k-way merge
   (FullTextAnswerMerger.java:30-69)
 - winners join back to docmap for display fields (forward-index gather,
   FullText.gatherValues FullText.java:253-280).
 
-**Block-max pruning (exact).** Posting blocks are doc-range aligned across
-terms (blk = doc_id // block_span with one span for the whole index), so
-for a blk range the metadata-only bound
-    ub_total(blk) = sum over scoring terms t of
-                    idf_t * BM25_tf(max_tf_t(blk), min_dl_t(blk))
-dominates every doc's score in that range, and scoring any *subset of blks*
-with the exhaustive kernel is exact for the docs it contains (every posting
-of those docs for every fetched term lives in those blks). Two phases:
-(1) score the highest-ub blks until k docs are found -> threshold theta;
-(2) score all blks with ub_total >= theta and merge. Docs in skipped blks
-are bounded below theta, so the final top-k is rank-identical to the
-exhaustive scorer -- miru's atomized-container skipping
-(LabFieldIndex.multiTxIndex:339-419) upgraded to block-max WAND semantics.
+**Block-max pruning (exact, serving node only, off by default).** Posting
+blocks are doc-range aligned across terms (blk = doc_id // block_span with
+one span for the whole index), so for a (pid, blk) cell the metadata-only
+bound  sum over scoring terms t of idf_t * BM25_tf(max_tf_t, min_dl_t)
+dominates every doc's score in it, and scoring a cell subset is exact for
+the docs it contains. `SearchEngine._blockmax_local` runs the two phases
+(score the highest-bound cells until k docs -> theta; score every cell
+whose bound reaches theta) once LOCAL_BLOCKMAX_MIN_POSTINGS is lowered --
+miru's atomized-container skipping (LabFieldIndex.multiTxIndex:339-419)
+upgraded to block-max WAND semantics. The distributed kernel is
+exhaustive.
 
 Scores are float64 and term contributions accumulate in sorted term order,
 matching the pure-Python oracle bit-for-bit.
@@ -54,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..codec import decode_grouped_deltas, decode_postings, decode_varint
+from ..codec import decode_grouped_deltas, decode_varint
 from ..index.build import _POSTING_COLS, IndexPaths
 from .featureops import FeatureOpsMixin
 from ..oracle import B, K1, MAX_WILDCARD_EXPANSION, bm25_idf
@@ -309,6 +308,94 @@ def _doc_interval(warc: np.ndarray, t0_us: int, t1_us: int) -> tuple:
     )
 
 
+def _decode_rows(cols) -> tuple[dict, dict]:
+    """The one 'p'-row posting decoder. `cols` maps column name -> array
+    (a pandas frame, or a dict of pyarrow columns as NumPy arrays) with
+    `term`, `pid`, `blk`, `n`, `ids_bin` and optionally `tfs_bin`,
+    `dls_bin`, `pos_bin`. Returns ({term: (cids, tfs, dls)},
+    {term: (cids, tfs, pos)}): ascending composite (pid << 32 | doc_id)
+    ids (a per-pid caller passes pid 0 for local docIDs), and the
+    self-contained position triple `_eval_phrase` reads for every term
+    whose rows carry pos_bin. ONE varint decode per term over its joined
+    blobs, then a vectorized per-block rebase (each block's first gap
+    is absolute within its pid). A term whose tf/dl blobs were shed
+    (filter-only) reuses its id array in their slots."""
+    dec: dict = {}
+    pos: dict = {}
+    terms = np.asarray(cols["term"], dtype=object)
+    if not terms.size:
+        return dec, pos
+    _u, tcode = np.unique(terms, return_inverse=True)
+    pids = np.asarray(cols["pid"], dtype=np.int64)
+    order = np.lexsort(
+        (np.asarray(cols["blk"], dtype=np.int64), pids, tcode)
+    )
+    tcode, pids = tcode[order], pids[order]
+    ns = np.asarray(cols["n"], dtype=np.int64)[order]
+
+    def blobs(c):
+        return np.asarray(cols[c], dtype=object)[order] if c in cols else None
+
+    ids_b, tfs_b, dls_b, pos_b = (
+        blobs(c) for c in ("ids_bin", "tfs_bin", "dls_bin", "pos_bin")
+    )
+    bnd = np.flatnonzero(tcode[1:] != tcode[:-1]) + 1
+    starts = np.concatenate(([0], bnd, [terms.size]))
+    for s, e in zip(starts[:-1].tolist(), starts[1:].tolist()):
+        gaps = decode_varint(b"".join(ids_b[s:e]))
+        acc = np.cumsum(gaps)
+        row_n = ns[s:e]
+        rs = np.zeros(e - s, dtype=np.int64)
+        np.cumsum(row_n[:-1], out=rs[1:])
+        base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
+        cids = acc - np.repeat(base, row_n)
+        tfs = dls = cids
+        if tfs_b is not None and tfs_b[s] is not None:
+            tfs = decode_varint(b"".join(tfs_b[s:e]))
+            if dls_b is not None and dls_b[s] is not None:
+                dls = decode_varint(b"".join(dls_b[s:e]))
+        t = terms[order[s]]
+        dec[t] = (cids, tfs, dls)
+        if pos_b is not None and pos_b[s] is not None:
+            pos[t] = (
+                cids, tfs, decode_grouped_deltas(b"".join(pos_b[s:e]), tfs)
+            )
+    return dec, pos
+
+
+def _universe(pids, pid_counts: dict, bounds: dict) -> np.ndarray:
+    """Match-all universe: the sorted composite ids of `pids` (ascending),
+    each clipped to its [lo, hi) interval in `bounds`."""
+    spans = []
+    for p in pids:
+        n = int(pid_counts.get(int(p), 0))
+        lo, hi = bounds.get(int(p), (0, n))
+        lo, hi = max(lo, 0), min(hi, n)
+        if hi > lo:
+            spans.append((int(p) << 32) + np.arange(lo, hi, dtype=np.int64))
+    return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
+
+
+def _bounded_rows(rows, bounds: dict):
+    """considerIfLastIdGreaterThanN, block-granular: drop the posting rows
+    of a bounded pid whose [first_doc, last_doc] span misses its [lo, hi)
+    BEFORE the varint decode (the reference skips whole terms whose
+    lastId <= N during multi-term walks, LabFieldIndex.multiTxIndex
+    :339-419; blocks are delta-encoded per block, so dropping one is
+    decode-safe). Admissible for every node kind: matches are
+    bound-filtered before scoring, and a dropped negation block could
+    only remove docs the bound drops anyway."""
+    if not bounds or not len(rows):
+        return rows
+    pids = rows["pid"].to_numpy()
+    first = rows["first_doc"].to_numpy()
+    last = rows["last_doc"].to_numpy()
+    keep = np.ones(len(rows), dtype=bool)
+    for p, (lo, hi) in bounds.items():
+        keep &= (pids != p) | ((last >= lo) & (first < hi))
+    return rows if keep.all() else rows[keep]
+
+
 def _bucket_counts(ts: np.ndarray, bucket_us: int, origin_us: int,
                    count: int):
     """Histogram timestamps into (bucket, count) arrays: epoch-aligned
@@ -331,7 +418,7 @@ _OUT_TYPES = {
 
 
 def _kernel_columns(agg: str | None, facet_prefixes) -> list[str]:
-    """Output columns of the per-pid kernel for one agg mode: the one
+    """Output columns of the distributed kernel for one agg mode: the one
     list both `kernel_frame`'s mapInPandas schema and the kernel's
     empty frames are built from."""
     cols = ["pid", "doc_id", "score"]
@@ -345,11 +432,12 @@ def _kernel_columns(agg: str | None, facet_prefixes) -> list[str]:
     return cols
 
 
-def _per_pid_dispatch(kernel):
-    """mapInPandas wrapper: consume a task's (pid-co-located) block rows,
-    run the per-pid kernel on each pid group. The rows reaching a task are
-    only the query's fetched posting blocks for its pids -- bounded by the
-    query's term postings, not by corpus size."""
+def _task_dispatch(kernel, by: str | None):
+    """mapInPandas wrapper: concatenate a task's (pid-co-located) rows and
+    run `kernel` once per `by` group -- once per task when `by` is None.
+    The rows reaching a task are only the query's fetched posting blocks
+    for its pids -- bounded by the query's term postings, not by corpus
+    size."""
     import pandas as pd
 
     def run(batches):
@@ -357,7 +445,8 @@ def _per_pid_dispatch(kernel):
         if not dfs:
             return
         pdf = pd.concat(dfs, ignore_index=True)
-        for _pid, grp in pdf.groupby("pid", sort=False):
+        groups = [(None, pdf)] if by is None else pdf.groupby(by, sort=False)
+        for _key, grp in groups:
             out = kernel(grp)
             if len(out):
                 yield out
@@ -367,22 +456,26 @@ def _per_pid_dispatch(kernel):
 
 def _hits_of(matches: np.ndarray, postings: dict, terms: list):
     """(value_idx, position-into-matches) arrays for every posting of
-    `terms` that lands in the sorted match set -- one concatenated
-    searchsorted pass (the kernel-side twin of SearchEngine._facet_hits)."""
-    va, pa = [], []
+    `terms` that lands in the sorted match set, grouped by value in
+    `terms` order with positions ascending within each value -- ONE
+    concatenated searchsorted pass over every value's postings instead
+    of a per-value Python loop (at hundreds of values the loop overhead
+    dominates). Positions let callers reuse match-aligned arrays
+    (timestamps, buckets) with plain fancy indexing. Serves the agg
+    kernel and the serving node's facet ops alike."""
+    arrs, vidx = [], []
     for i, t in enumerate(terms):
         c = postings.get(t)
-        if c is None or not c.size or not matches.size:
-            continue
-        pos = np.minimum(np.searchsorted(matches, c), matches.size - 1)
-        m = matches[pos] == c
-        if m.any():
-            va.append(np.full(int(m.sum()), i, dtype=np.int64))
-            pa.append(pos[m])
-    if not va:
+        if c is not None and c.size:
+            arrs.append(c)
+            vidx.append(np.full(c.size, i, dtype=np.int64))
+    if not arrs or not matches.size:
         z = np.empty(0, dtype=np.int64)
         return z, z
-    return np.concatenate(va), np.concatenate(pa)
+    cat = np.concatenate(arrs)
+    pos = np.minimum(np.searchsorted(matches, cat), matches.size - 1)
+    hit = matches[pos] == cat
+    return np.concatenate(vidx)[hit], pos[hit]
 
 
 def _pair_expand(ai, ap, bi, bp, nb: int):
@@ -448,20 +541,13 @@ def _interp_buckets(
 
 def _make_kernel(
     tree,
-    scoring_terms: list[str],
-    n_docs: int,
-    avgdl: float,
+    *,
     k: int,
     pid_counts: dict,
     expansions: dict,
-    use_blockmax: bool,
-    idf_map: dict | None = None,
+    agg: str,
     time_spec: tuple | None = None,
     removed_map: dict | None = None,
-    theta0: float = 0.0,
-    counter: dict | None = None,
-    strategy: str = "tfidf",
-    agg: str | None = None,
     bucket_us: int = 0,
     bucket_origin_us: int = 0,
     bucket_count: int = 0,
@@ -472,8 +558,19 @@ def _make_kernel(
     tuple_specs: list | None = None,
     facet_prefixes: list | None = None,
 ):
-    """Build the per-partition applyInPandas kernel (closure ships to
-    executors with the task -- all members are small).
+    """Build the per-pid match-set aggregation kernel (closure ships to
+    executors with the task -- all members are small). It never scores
+    and never ranks: every top-k search runs `_make_composite_kernel`.
+
+    `agg` picks the reduction over one pid's match set: "count" emits
+    one (pid, 0, match_count) row; "waveform" emits one (pid,
+    bucket_index, count) row per `bucket_us` bucket, timestamps resolved
+    from the pid's own 't' time-index rows inside the same task -- the
+    analytics-plugin waveform (Analytics.java:164-183 ANDs the
+    constrained filter with per-bucket time bitmaps; here matched docIDs
+    index the pid's time array and histogram); "distincts", "aggregate",
+    "waveforms", "metrics", "pairs" and "stumptown" are the facet and
+    stream-page reductions documented inline.
 
     `facet_prefixes` switches the distincts/aggregate/waveforms/metrics
     facet modes from a driver-enumerated `facet_terms` LIST to streamed
@@ -486,25 +583,12 @@ def _make_kernel(
     `user`/`guid` facet has millions of values; this path's driver
     footprint stays O(result), not O(value space).
 
-    `agg` switches the kernel from top-k retrieval to match-set
-    aggregation (no scoring, no heap): "count" emits one
-    (pid, 0, match_count) row per pid; "waveform" emits one
-    (pid, bucket_index, count) row per epoch-aligned `bucket_us` bucket,
-    timestamps resolved from the pid's own 't' time-index rows inside
-    the same task -- the analytics-plugin waveform (Analytics.java
-    :164-183 ANDs the constrained filter with per-bucket time bitmaps;
-    here matched docIDs index the pid's time array and histogram).
-
-    idf arrives one of two ways: `idf_map` computed driver-side from the
-    pinned term dictionary (the normal, zero-extra-job path), or -- when
-    the vocabulary is too large to pin -- a `df` column broadcast-joined
-    onto the posting blocks.
-
     `time_spec=(t0_us, t1_us, pid_lo, pid_hi)` makes the kernel resolve
-    each boundary pid's exact [lo, hi) docID interval from its 't'
+    a boundary pid's exact [lo, hi) docID interval from its 't'
     time-index rows inside the same job (LabTimeIndex getClosestId,
-    LabTimeIndex.java:191-208). Match, masks and scores come from the
-    shared `_evaluate`, over the pid's local docIDs as pid 0."""
+    LabTimeIndex.java:191-208). Postings decode through `_decode_rows`
+    and the match set comes from the shared `_evaluate`, both over the
+    pid's local docIDs as pid 0."""
     import pandas as pd
 
     has_all = "all" in _tree_tags(tree)
@@ -525,514 +609,242 @@ def _make_kernel(
             warc_vals, bucket_us, bucket_origin_us, bucket_count
         )
 
-    def resolve_bounds(pid: int, warc):
-        """Per-pid [lo, hi) docID interval, or None when unbounded."""
-        if time_spec is None:
-            return None
-        t0_us, t1_us, pid_lo, pid_hi = time_spec
-        if pid_lo < pid < pid_hi or warc is None:
-            # interior pid (whole partition inside the range) or no 't'
-            # rows shipped for it
-            return (0, int(pid_counts.get(pid, 0)))
-        return _doc_interval(warc, t0_us, t1_us)
-
-    def decode_terms(rows: "pd.DataFrame"):
-        term_ids, term_tfs, term_dls = {}, {}, {}
-        term_pos: dict = {}
-        has_pos = "pos_bin" in rows.columns
-        for term, grp in rows.groupby("term", sort=True):
-            ids = np.concatenate(
-                [decode_postings(b) for b in grp["ids_bin"]]
-            ) if len(grp) else np.empty(0, dtype=np.int64)
-            term_ids[term] = ids
-            if len(grp) and grp["tfs_bin"].iloc[0] is None:
-                # filter-only term: tf/dl blobs were nulled before the
-                # exchange and are never read (non-scoring)
-                term_tfs[term] = term_dls[term] = ids
-                continue
-            term_tfs[term] = np.concatenate(
-                [decode_varint(b) for b in grp["tfs_bin"]]
-            ) if len(grp) else ids
-            term_dls[term] = np.concatenate(
-                [decode_varint(b) for b in grp["dls_bin"]]
-            ) if len(grp) else ids
-            if has_pos and len(grp) and grp["pos_bin"].iloc[0] is not None:
-                # phrase member: per-occurrence positions ride along
-                # (nulled before the exchange for every other term)
-                term_pos[term] = (
-                    ids,
-                    term_tfs[term],
-                    decode_grouped_deltas(
-                        b"".join(grp["pos_bin"]), term_tfs[term]
-                    ),
-                )
-        return term_ids, term_tfs, term_dls, term_pos
-
-    def score_subset(
-        pid: int, rows: "pd.DataFrame", idf: dict, bounds, rem=None,
-        ids_out: dict | None = None,
-    ):
-        """Exact match+score over a doc-range-aligned blk subset.
-        Returns (doc_ids, scores) sorted by doc_id. `rem` is the pid's
-        sorted removed-docID array (tombstone mask, the query-side
-        andNot(removalIndex) of MiruIndexer.remove). `ids_out` (distincts
-        mode) receives the decoded per-term docID arrays."""
-        if bounds is not None and len(rows):
-            lo, hi = bounds
-            if lo > 0 or hi < int(pid_counts.get(pid, 1 << 62)):
-                # considerIfLastIdGreaterThanN, block-granular: a block
-                # whose docID span misses [lo, hi) cannot contribute a
-                # bounded match, a bounded score, or a bounded facet
-                # hit -- drop it BEFORE the varint decode (the
-                # reference skips whole terms whose lastId <= N during
-                # multi-term walks, LabFieldIndex.multiTxIndex:339-419;
-                # blocks are delta-encoded per block, so per-block
-                # dropping is decode-safe). Admissible for every node
-                # kind: matches are bound-filtered before scoring, and
-                # a dropped negation block could only remove docs the
-                # bound drops anyway.
-                keep = (rows["last_doc"].to_numpy() >= lo) & (
-                    rows["first_doc"].to_numpy() < hi
-                )
-                if not keep.all():
-                    rows = rows[keep]
-        term_ids, term_tfs, term_dls, term_pos = decode_terms(rows)
-        if ids_out is not None:
-            ids_out.update(term_ids)
-        n_docs_pid = int(pid_counts.get(pid, 0))
-        lo, hi = bounds if bounds is not None else (0, n_docs_pid)
-        universe = (
-            np.arange(max(lo, 0), min(hi, n_docs_pid), dtype=np.int64)
-            if has_all else np.empty(0, dtype=np.int64)
-        )
-        return _evaluate(
-            tree, term_ids, term_tfs, term_dls, expansions, universe,
-            term_pos, {0: bounds} if bounds is not None else {}, rem,
-            scoring_terms, idf, avgdl, strategy != "time",
-        )
-
-    def topk_of(ids: np.ndarray, scores: np.ndarray):
-        if strategy == "time":
-            # TIME strategy: newest-k = largest docIDs (time-ordered ids,
-            # FullText.collectTime:222-251 descending iterator)
-            order = np.argsort(-ids)
-        else:
-            order = np.lexsort((ids, -scores))
-        if k > 0:
-            order = order[:k]
-        return ids[order], scores[order]
+    def value_hits(ids: np.ndarray, ids_out: dict):
+        """(facet terms, value_idx, position-into-ids) of every facet
+        posting inside the match set, plus per-value hit counts."""
+        fts = facet_keys(ids_out) if fpfx is not None else (facet_terms or [])
+        vi, pi = _hits_of(ids, ids_out, fts)
+        return fts, vi, pi, np.bincount(vi, minlength=len(fts))
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if pdf.empty:
-            return empty()
         pid = int(pdf["pid"].iloc[0])
-        trows = None
-        rem = removed_map.get(pid) if removed_map is not None else None
-        if "rk" in pdf.columns:
-            rk = pdf["rk"].to_numpy()
-            if (rk == "t").any():
-                trows = pdf[rk == "t"]
-            xrows = pdf[rk == "x"]  # unpinned tombstones ride along
-            if len(xrows):
-                rem = np.unique(
-                    xrows["first_doc"].to_numpy().astype(np.int64)
-                )
-            pdf = pdf[rk == "p"]  # 'z' marker rows carry no postings
-        if pdf.empty and not has_all:
+        rk = pdf["rk"].to_numpy()
+        trows = pdf[rk == "t"]
+        xrows = pdf[rk == "x"]  # unpinned tombstones ride along
+        rem = (
+            np.unique(xrows["first_doc"].to_numpy().astype(np.int64))
+            if len(xrows)
+            else removed_map.get(pid) if removed_map is not None
+            else None
+        )
+        rows = pdf[rk == "p"]  # 'z' marker rows carry no postings
+        if rows.empty and not has_all:
             return empty()
         # the pid's time array, decoded once: it serves both the
         # boundary interval and every time-bucketing agg mode
         warc = (
-            None if trows is None
-            else _decode_times(trows["first_doc"], trows["ids_bin"])
+            _decode_times(trows["first_doc"], trows["ids_bin"])
+            if len(trows) else None
         )
-        bounds = resolve_bounds(pid, warc)
-        pdf = pdf.sort_values(["term", "blk"], kind="stable")
-        if idf_map is not None:
-            idf = idf_map
-        else:
-            idf = {
-                t: bm25_idf(n_docs, int(d))
-                for t, d in zip(pdf["term"], pdf["df"])
-                if t is not None and not pd.isna(d)
+        bounds: dict = {}
+        if time_spec is not None and warc is not None:
+            t0_us, t1_us, pid_lo, pid_hi = time_spec
+            if not pid_lo < pid < pid_hi:  # interior pids are unbounded
+                bounds = {0: _doc_interval(warc, t0_us, t1_us)}
+        if bounds:
+            rows = _bounded_rows(rows, {pid: bounds[0]})
+        dec, term_pos = _decode_rows(rows.assign(pid=0))
+        ids_out = {t: v[0] for t, v in dec.items()}
+        universe = (
+            _universe([0], {0: pid_counts.get(pid, 0)}, bounds)
+            if has_all else np.empty(0, dtype=np.int64)
+        )
+        ids, _ = _evaluate(
+            tree, ids_out, ids_out, ids_out, expansions, universe,
+            term_pos, bounds, rem, [], {}, 1.0, False,
+        )
+
+        if agg == "aggregate":
+            # stream-page gather: per facet value, this pid's newest
+            # matching doc (max docID -- docIDs are time-ordered) and
+            # its match count (AggregateCounts.java distinct-latest
+            # + count); one row per present value leaves the task
+            fts, _vi, pi, cnt = value_hits(ids, ids_out)
+            present = np.flatnonzero(cnt)
+            # hits are grouped by value, positions ascending: a value's
+            # newest doc is its last hit
+            last = np.cumsum(cnt[present]) - 1
+            out = {
+                "pid": pid,
+                "doc_id": ids[pi[last]].astype(np.int64),
+                "score": present.astype(np.float64),
+                "cnt": cnt[present].astype(np.int64),
             }
-
-        if agg is not None:
-            ids_out: dict | None = (
-                {}
-                if agg in ("distincts", "metrics", "aggregate",
-                           "waveforms", "pairs")
-                else None
-            )
-            ids, _ = score_subset(
-                pid, pdf, idf, bounds, rem, ids_out=ids_out
-            )
-            if agg == "aggregate":
-                # stream-page gather: per facet value, this pid's newest
-                # matching doc (max docID -- docIDs are time-ordered) and
-                # its match count (AggregateCounts.java distinct-latest
-                # + count); one row per present value leaves the task
-                o_idx, o_doc, o_cnt = [], [], []
-                o_term: list = []
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size or not ids.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if inter.size:
-                        o_idx.append(float(i))
-                        o_doc.append(int(inter[-1]))
-                        o_cnt.append(int(inter.size))
-                        o_term.append(t)
-                out = {
-                    "pid": pid,
-                    "doc_id": np.array(o_doc, dtype=np.int64),
-                    "score": np.array(o_idx, dtype=np.float64),
-                    "cnt": np.array(o_cnt, dtype=np.int64),
-                }
-                if fpfx is not None:
-                    out["score"] = np.zeros(
-                        len(o_term), dtype=np.float64
-                    )
-                    out["term"] = o_term
-                return pd.DataFrame(out)
-            if agg == "pairs":
-                # feature-tuple doc-co-occurrence counts over the match
-                # set -- the counting core of gatherFeatures
-                # (MiruAggregateUtil.gatherFeatures:77-291: per answer
-                # activity, stream the feature fields' terms and count
-                # each observed combination). Only (packed tuple, count)
-                # rows leave the task; the cross product is per-DOC
-                # (multi-valued fields expand), never across docs.
-                # `tuple_specs` batches SEVERAL features into this one
-                # pass (strut's catwalk features): each spec owns a
-                # disjoint int64 key range via its offset, so every
-                # feature's counts ride the same exchange.
-                if tuple_specs is not None:
-                    specs = tuple_specs
-                else:
-                    groups = [facet_terms or [], facet_terms2 or []]
-                    if facet_terms3:
-                        groups.append(facet_terms3)
-                    specs = [(0, groups)]
-                all_k, all_c = [], []
-                for off, groups in specs:
-                    keys, counts = _tuple_counts(ids, ids_out, groups)
-                    if keys.size:
-                        all_k.append(keys + off)
-                        all_c.append(counts)
-                z = np.empty(0, dtype=np.int64)
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": np.concatenate(all_k) if all_k else z,
-                        "score": (
-                            np.concatenate(all_c) if all_c else z
-                        ).astype(np.float64),
-                    }
-                )
-            if agg == "waveforms":
-                # per-facet-value waveforms in ONE pass (trending's
-                # batched shape: TrendingInjectable computes an
-                # analytics waveform per distinct term) -- emits
-                # (pid, bucket, value_idx, count) rows
-                if warc is None or ids.size == 0:
-                    return empty()
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                o_b, o_v, o_c = [], [], []
-                o_t: list = []
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if not inter.size:
-                        continue
-                    ub, cnt = bucket_of(warc[inter])
-                    o_b.append(ub)
-                    o_v.append(np.full(ub.size, i, dtype=np.int64))
-                    o_c.append(cnt)
-                    o_t.extend([t] * ub.size)
-                if not o_b:
-                    return empty()
-                out = {
-                    "pid": pid,
-                    "doc_id": np.concatenate(o_b),
-                    "score": np.concatenate(o_v).astype(np.float64),
-                    "cnt": np.concatenate(o_c).astype(np.int64),
-                }
-                if fpfx is not None:
-                    out["score"] = np.zeros(
-                        len(o_t), dtype=np.float64
-                    )
-                    out["term"] = o_t
-                return pd.DataFrame(out)
-            if agg == "metrics":
-                # per-bucket SUM of a numeric field over the match set
-                # (Metrics.metricingSum, Metrics.java:82-98: sum over
-                # bit-slice bitmaps of multiplier x boundedCardinality;
-                # here the decomposition is per value-term: sum over
-                # composed numeric terms of value x |match AND postings|)
-                if warc is None or ids.size == 0:
-                    return empty()
-                acc: dict = {}
-                if fpfx is not None:
-                    # streamed numeric facet: the value is decodable
-                    # from the composed term itself (order-preserving
-                    # encoding, fields.encode_num) -- no driver list
-                    from ..fields import FIELD_SEP, decode_num
-
-                    fts = facet_keys(ids_out)
-                    fvs = [
-                        float(decode_num(t.split(FIELD_SEP, 1)[1]))
-                        for t in fts
-                    ]
-                else:
-                    fts, fvs = facet_terms or [], facet_values or []
-                for t, v in zip(fts, fvs):
-                    c = ids_out.get(t)
-                    if c is None or not c.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if not inter.size:
-                        continue
-                    ub, cnt = bucket_of(warc[inter])
-                    for b, n in zip(ub, cnt):
-                        acc[int(b)] = acc.get(int(b), 0.0) + v * int(n)
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": np.array(
-                            sorted(acc), dtype=np.int64
-                        ),
-                        "score": np.array(
-                            [acc[b] for b in sorted(acc)],
-                            dtype=np.float64,
-                        ),
-                    }
-                )
-            if agg == "distincts":
-                # |match AND facet-term postings| per facet value --
-                # the distincts gatherer (DistinctsQuery filter +
-                # gatherDistinctsForField) as per-pid intersection
-                # counts; only (value_idx, count) rows leave the task
-                out_idx, out_cnt = [], []
-                out_t: list = []
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size or not ids.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    n = int((ids[pos] == c).sum())
-                    if n:
-                        out_idx.append(i)
-                        out_cnt.append(float(n))
-                        out_t.append(t)
-                out = {
-                    "pid": pid,
-                    "doc_id": np.array(out_idx, dtype=np.int64),
-                    "score": np.array(out_cnt, dtype=np.float64),
-                }
-                if fpfx is not None:
-                    out["doc_id"] = np.zeros(
-                        len(out_t), dtype=np.int64
-                    )
-                    out["term"] = out_t
-                return pd.DataFrame(out)
-            if agg == "stumptown":
-                # ONE pass over this pid's match set yields BOTH outputs
-                # (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
-                # activities off the answer's descending iterator + the
-                # same answer's boundedCardinalities waveform): bucket
-                # rows tagged pid=-1, newest-k candidate rows with the
-                # real pid (score 0, TIME semantics -- docIDs are
-                # time-ordered within a pid)
-                if ids.size == 0:
-                    return empty()
-                out_pid: list = []
-                out_doc: list = []
-                out_sc: list = []
-                if warc is not None:
-                    b_idx, cnt = bucket_of(warc[ids])
-                    out_pid.extend([-1] * b_idx.size)
-                    out_doc.extend(b_idx.tolist())
-                    out_sc.extend(cnt.astype(np.float64).tolist())
-                newest = ids[-k:] if k > 0 else ids[:0]
-                out_pid.extend([pid] * newest.size)
-                out_doc.extend(newest.tolist())
-                out_sc.extend([0.0] * newest.size)
-                return pd.DataFrame(
-                    {
-                        "pid": np.array(out_pid, dtype=np.int64),
-                        "doc_id": np.array(out_doc, dtype=np.int64),
-                        "score": np.array(out_sc, dtype=np.float64),
-                    }
-                )
-            if agg == "waveform":
-                if warc is None or ids.size == 0:
-                    return empty()
-                b_idx, cnt = bucket_of(warc[ids])
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": b_idx.astype(np.int64),
-                        "score": cnt.astype(np.float64),
-                    }
-                )
+            if fpfx is not None:
+                out["score"] = np.zeros(present.size, dtype=np.float64)
+                out["term"] = [fts[i] for i in present.tolist()]
+            return pd.DataFrame(out)
+        if agg == "pairs":
+            # feature-tuple doc-co-occurrence counts over the match
+            # set -- the counting core of gatherFeatures
+            # (MiruAggregateUtil.gatherFeatures:77-291: per answer
+            # activity, stream the feature fields' terms and count
+            # each observed combination). Only (packed tuple, count)
+            # rows leave the task; the cross product is per-DOC
+            # (multi-valued fields expand), never across docs.
+            # `tuple_specs` batches SEVERAL features into this one
+            # pass (strut's catwalk features): each spec owns a
+            # disjoint int64 key range via its offset, so every
+            # feature's counts ride the same exchange.
+            if tuple_specs is not None:
+                specs = tuple_specs
+            else:
+                groups = [facet_terms or [], facet_terms2 or []]
+                if facet_terms3:
+                    groups.append(facet_terms3)
+                specs = [(0, groups)]
+            all_k, all_c = [], []
+            for off, groups in specs:
+                keys, counts = _tuple_counts(ids, ids_out, groups)
+                if keys.size:
+                    all_k.append(keys + off)
+                    all_c.append(counts)
+            z = np.empty(0, dtype=np.int64)
             return pd.DataFrame(
                 {
-                    "pid": [pid],
-                    "doc_id": [0],
-                    "score": [float(ids.size)],
+                    "pid": pid,
+                    "doc_id": np.concatenate(all_k) if all_k else z,
+                    "score": (
+                        np.concatenate(all_c) if all_c else z
+                    ).astype(np.float64),
                 }
             )
+        if agg == "waveforms":
+            # per-facet-value waveforms in ONE pass (trending's
+            # batched shape: TrendingInjectable computes an
+            # analytics waveform per distinct term) -- emits
+            # (pid, bucket, value_idx, count) rows
+            if warc is None or ids.size == 0:
+                return empty()
+            fts, _vi, pi, cnt = value_hits(ids, ids_out)
+            present = np.flatnonzero(cnt)
+            if not present.size:
+                return empty()
+            ends = np.cumsum(cnt[present]).tolist()
+            hit_ts = warc[ids[pi]]
+            o_b, o_c, o_v = [], [], []
+            o_t: list = []
+            for i, s, e in zip(present.tolist(), [0] + ends[:-1], ends):
+                ub, bc = bucket_of(hit_ts[s:e])
+                o_b.append(ub)
+                o_c.append(bc)
+                o_v.append(np.full(ub.size, i, dtype=np.int64))
+                o_t.extend([fts[i]] * ub.size)
+            out = {
+                "pid": pid,
+                "doc_id": np.concatenate(o_b),
+                "score": np.concatenate(o_v).astype(np.float64),
+                "cnt": np.concatenate(o_c).astype(np.int64),
+            }
+            if fpfx is not None:
+                out["score"] = np.zeros(len(o_t), dtype=np.float64)
+                out["term"] = o_t
+            return pd.DataFrame(out)
+        if agg == "metrics":
+            # per-bucket SUM of a numeric field over the match set
+            # (Metrics.metricingSum, Metrics.java:82-98: sum over
+            # bit-slice bitmaps of multiplier x boundedCardinality;
+            # here the decomposition is per value-term: sum over
+            # composed numeric terms of value x |match AND postings|)
+            if warc is None or ids.size == 0:
+                return empty()
+            acc: dict = {}
+            if fpfx is not None:
+                # streamed numeric facet: the value is decodable
+                # from the composed term itself (order-preserving
+                # encoding, fields.encode_num) -- no driver list
+                from ..fields import FIELD_SEP, decode_num
 
-        if not use_blockmax or has_all or k <= 0 or strategy == "time":
-            ids, scores = score_subset(pid, pdf, idf, bounds, rem)
-            out_ids, out_scores = topk_of(ids, scores)
-        else:
-            # ---- exact block-max pruning over aligned blk ranges ----
-            ub_row = np.where(
-                pdf["term"].isin(scoring_terms).to_numpy(),
-                pdf["term"].map(idf).fillna(0.0).to_numpy()
-                * _bm25_tf_part(
-                    pdf["max_tf"].to_numpy().astype(np.float64),
-                    pdf["min_dl"].to_numpy().astype(np.float64),
-                    avgdl,
-                ),
-                0.0,
+                fts = facet_keys(ids_out)
+                fvs = [
+                    float(decode_num(t.split(FIELD_SEP, 1)[1]))
+                    for t in fts
+                ]
+            else:
+                fts, fvs = facet_terms or [], facet_values or []
+            # per-term loop on purpose: the float sum order is part of
+            # route identity with the serving node's metrics
+            for t, v in zip(fts, fvs):
+                c = ids_out.get(t)
+                if c is None or not c.size:
+                    continue
+                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
+                inter = c[ids[pos] == c]
+                if not inter.size:
+                    continue
+                ub, cnt = bucket_of(warc[inter])
+                for b, n in zip(ub, cnt):
+                    acc[int(b)] = acc.get(int(b), 0.0) + v * int(n)
+            return pd.DataFrame(
+                {
+                    "pid": pid,
+                    "doc_id": np.array(sorted(acc), dtype=np.int64),
+                    "score": np.array(
+                        [acc[b] for b in sorted(acc)], dtype=np.float64
+                    ),
+                }
             )
-            blk_ub = (
-                pd.Series(ub_row, index=pdf.index)
-                .groupby(pdf["blk"].to_numpy())
-                .sum()
-                .sort_values(ascending=False)
+        if agg == "distincts":
+            # |match AND facet-term postings| per facet value -- the
+            # distincts gatherer (DistinctsQuery filter +
+            # gatherDistinctsForField) as per-pid intersection counts;
+            # only (value_idx, count) rows leave the task
+            fts, _vi, _pi, cnt = value_hits(ids, ids_out)
+            present = np.flatnonzero(cnt)
+            out = {
+                "pid": pid,
+                "doc_id": present.astype(np.int64),
+                "score": cnt[present].astype(np.float64),
+            }
+            if fpfx is not None:
+                out["doc_id"] = np.zeros(present.size, dtype=np.int64)
+                out["term"] = [fts[i] for i in present.tolist()]
+            return pd.DataFrame(out)
+        if agg == "stumptown":
+            # ONE pass over this pid's match set yields BOTH outputs
+            # (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
+            # activities off the answer's descending iterator + the
+            # same answer's boundedCardinalities waveform): bucket
+            # rows tagged pid=-1, newest-k candidate rows with the
+            # real pid (score 0, TIME semantics -- docIDs are
+            # time-ordered within a pid)
+            if ids.size == 0:
+                return empty()
+            out_pid: list = []
+            out_doc: list = []
+            out_sc: list = []
+            if warc is not None:
+                b_idx, cnt = bucket_of(warc[ids])
+                out_pid.extend([-1] * b_idx.size)
+                out_doc.extend(b_idx.tolist())
+                out_sc.extend(cnt.astype(np.float64).tolist())
+            newest = ids[-k:] if k > 0 else ids[:0]
+            out_pid.extend([pid] * newest.size)
+            out_doc.extend(newest.tolist())
+            out_sc.extend([0.0] * newest.size)
+            return pd.DataFrame(
+                {
+                    "pid": np.array(out_pid, dtype=np.int64),
+                    "doc_id": np.array(out_doc, dtype=np.int64),
+                    "score": np.array(out_sc, dtype=np.float64),
+                }
             )
-            n_blocks_all = len(blk_ub)
-            if theta0 > 0.0:
-                # cross-partition theta: the driver's seed score (the
-                # k-th best of the densest pid, computed job-free on the
-                # serving node) is a lower bound on the GLOBAL k-th
-                # score, so any block whose upper bound cannot reach it
-                # can never contribute to the merged top-k -- prune it
-                # before phase 1 even starts. This is the one-partition-
-                # at-a-time solution-state handoff of the reference's
-                # solver turned into a broadcast seed.
-                blk_ub = blk_ub[blk_ub.to_numpy() >= theta0]
-            blks_desc = blk_ub.index.to_numpy()
-            # phase 1: grow the scored prefix until >= k docs matched
-            scored_ids = np.empty(0, dtype=np.int64)
-            scored_scores = np.empty(0, dtype=np.float64)
-            m = min(4, len(blks_desc))
-            scored_blks: set = set()
-            while True:
-                subset = set(blks_desc[:m].tolist())
-                new = subset - scored_blks
-                if new:
-                    sub_rows = pdf[pdf["blk"].isin(subset)]
-                    scored_ids, scored_scores = score_subset(
-                        pid, sub_rows, idf, bounds, rem
-                    )
-                    scored_blks = subset
-                if scored_ids.size >= k or m >= len(blks_desc):
-                    break
-                m = min(m * 4, len(blks_desc))
-            if scored_ids.size >= k:
-                kth = np.partition(-scored_scores, k - 1)
-                theta = max(-kth[k - 1], theta0)
-                # phase 2: every blk whose bound can reach theta
-                cand = set(blk_ub.index[blk_ub.to_numpy() >= theta].tolist())
-                cand |= scored_blks
-                if cand != scored_blks:
-                    sub_rows = pdf[pdf["blk"].isin(cand)]
-                    scored_ids, scored_scores = score_subset(
-                        pid, sub_rows, idf, bounds, rem
-                    )
-                    scored_blks = cand
-            if counter is not None:
-                counter["blocks_scored"] = (
-                    counter.get("blocks_scored", 0) + len(scored_blks)
-                )
-                counter["blocks_total"] = (
-                    counter.get("blocks_total", 0) + n_blocks_all
-                )
-            out_ids, out_scores = topk_of(scored_ids, scored_scores)
-
+        if agg == "waveform":
+            if warc is None or ids.size == 0:
+                return empty()
+            b_idx, cnt = bucket_of(warc[ids])
+            return pd.DataFrame(
+                {
+                    "pid": pid,
+                    "doc_id": b_idx.astype(np.int64),
+                    "score": cnt.astype(np.float64),
+                }
+            )
         return pd.DataFrame(
-            {"pid": pid, "doc_id": out_ids, "score": out_scores}
+            {"pid": [pid], "doc_id": [0], "score": [float(ids.size)]}
         )
 
     return kernel
-
-
-def _decode_pdf_composite(pdf):
-    """Task-level composite decode: ALL of a task's posting rows ->
-    {term: (cids, tfs, dls)} with absolute composite (pid << 32 |
-    doc_id) ids, plus {term: df} when a `df` column rides (unpinned
-    vocabulary). ONE varint pass per term over the concatenated blobs
-    -- the kernel twin of SearchEngine._decode_posting_table, built
-    from the pandas chunk mapInPandas hands the task. Filter-only
-    terms arrive with nulled tf/dl blobs (shed before the exchange)
-    and reuse their id array as the sentinel, exactly like the
-    per-pid kernel's decode_terms."""
-    import pandas as pd
-
-    pdf = pdf.sort_values(["term", "pid", "blk"], kind="stable")
-    terms = pdf["term"].to_numpy()
-    pids = pdf["pid"].to_numpy().astype(np.int64)
-    ns = pdf["n"].to_numpy().astype(np.int64)
-    ids_bins = pdf["ids_bin"].to_numpy()
-    has_blobs = "tfs_bin" in pdf.columns
-    tfs_bins = pdf["tfs_bin"].to_numpy() if has_blobs else None
-    dls_bins = pdf["dls_bin"].to_numpy() if has_blobs else None
-    dfs = pdf["df"].to_numpy() if "df" in pdf.columns else None
-    dec: dict = {}
-    dfmap: dict = {}
-    bnd = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-    starts = np.concatenate(([0], bnd, [len(terms)]))
-    for gi in range(len(starts) - 1):
-        s, e = int(starts[gi]), int(starts[gi + 1])
-        t = terms[s]
-        gaps = decode_varint(b"".join(ids_bins[s:e]))
-        acc = np.cumsum(gaps)
-        row_n = ns[s:e]
-        rs = np.zeros(e - s, dtype=np.int64)
-        np.cumsum(row_n[:-1], out=rs[1:])
-        base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
-        cids = acc - np.repeat(base, row_n)
-        if not has_blobs or tfs_bins[s] is None:
-            dec[t] = (cids, cids, cids)
-        else:
-            dec[t] = (
-                cids,
-                decode_varint(b"".join(tfs_bins[s:e])),
-                decode_varint(b"".join(dls_bins[s:e])),
-            )
-        if dfs is not None and not pd.isna(dfs[s]):
-            dfmap[t] = int(dfs[s])
-    return dec, dfmap
 
 
 def _make_composite_kernel(
@@ -1045,67 +857,79 @@ def _make_composite_kernel(
     time_spec: tuple | None,
     removed_comp: np.ndarray | None,
     idf_map: dict | None,
+    pid_counts: dict,
+    strategy: str = "tfidf",
 ):
-    """Task-level composite-id kernel for the plain scoring search:
-    instead of looping the task's pids through the per-pid kernel
-    (O(pids x terms) small-array NumPy calls -- the latency floor of
-    wide queries at fine-grained time partitioning), decode the whole
-    task ONCE into composite (pid << 32 | doc_id) arrays and run ONE
-    `_evaluate` + ONE top-k over all of the task's pids -- the same
-    evaluator call the serving node makes (_search_local), so scores
-    are bit-identical to it and to the per-pid kernel (same per-doc
-    contributions in the same sorted-term order), and the task's k best
-    rows by (score desc, pid, doc_id) are exactly its contribution to
-    the global TakeOrdered merge. `removed_comp` is the pinned sorted
-    composite tombstone array.
+    """The distributed top-k kernel, for every search shape: decode a
+    task's rows ONCE into composite (pid << 32 | doc_id) arrays and run
+    ONE `_evaluate` + ONE top-k over all of the task's pids -- the same
+    evaluator call the serving node makes (_search_local), so scores are
+    bit-identical to it (same per-doc contributions in the same
+    sorted-term order), and the task's k best rows by (score desc, pid,
+    doc_id) are exactly its contribution to the global TakeOrdered
+    merge. With strategy "time" nothing is scored and the task's k
+    largest ids (newest first, FullText.collectTime:222-251) go out with
+    score 0.
 
-    Used when agg is None, strategy is score-ranked, no phrase members,
-    no match-all marker rows and no unpinned tombstones ride the
-    exchange; every other shape stays on the per-pid kernel."""
+    Row kinds: 'p' posting blocks (phrase members carry pos_bin);
+    't' time-index rows of the boundary pids, which resolve each one's
+    exact [lo, hi) interval and drop blocks outside it before decode;
+    'z' match-all markers, one per relevant pid, which span the
+    `pid_counts` universe; 'x' unpinned tombstones (doc_id in
+    first_doc), which join the pinned sorted composite `removed_comp`."""
     import pandas as pd
 
-    def run(batches):
-        dfs_ = [b for b in batches if len(b)]
-        if not dfs_:
-            return
-        pdf = pd.concat(dfs_, ignore_index=True)
+    has_all = "all" in _tree_tags(tree)
+    score = strategy != "time"
+
+    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        rk = pdf["rk"].to_numpy()
+        pids = pdf["pid"].to_numpy().astype(np.int64)
         bounds: dict = {}
-        if "rk" in pdf.columns:
-            rk = pdf["rk"].to_numpy()
-            trows = pdf[rk == "t"]
-            pdf = pdf[rk == "p"]
-            if time_spec is not None and len(trows):
-                # boundary pids whose 't' rows this task owns get their
-                # exact interval; interior pids are unbounded
-                t0_us, t1_us, _plo, _phi = time_spec
-                for p, tr in trows.groupby("pid", sort=True):
-                    bounds[int(p)] = _doc_interval(
-                        _decode_times(tr["first_doc"], tr["ids_bin"]),
-                        t0_us, t1_us,
-                    )
-        if not len(pdf):
-            return
-        dec, dfmap = _decode_pdf_composite(pdf)
-        idf = (
-            idf_map
-            if idf_map is not None
-            else {t: bm25_idf(n_docs, d) for t, d in dfmap.items()}
+        if time_spec is not None:
+            t0_us, t1_us, _plo, _phi = time_spec
+            for p, tr in pdf[rk == "t"].groupby("pid", sort=True):
+                bounds[int(p)] = _doc_interval(
+                    _decode_times(tr["first_doc"], tr["ids_bin"]),
+                    t0_us, t1_us,
+                )
+        rem = removed_comp
+        x = rk == "x"
+        if x.any():
+            xc = (pids[x] << 32) + pdf["first_doc"].to_numpy()[x].astype(
+                np.int64
+            )
+            rem = np.union1d(xc, rem) if rem is not None else np.unique(xc)
+        universe = (
+            _universe(np.unique(pids[rk == "z"]), pid_counts, bounds)
+            if has_all else np.empty(0, dtype=np.int64)
         )
+        rows = _bounded_rows(pdf[rk == "p"], bounds)
+        dec, term_pos = _decode_rows(rows)
+        if idf_map is not None:
+            idf = idf_map
+        else:
+            idf = {
+                t: bm25_idf(n_docs, int(d))
+                for t, d in zip(rows["term"], rows["df"])
+                if not pd.isna(d)
+            }
         matches, scores = _evaluate(
             tree,
             {t: v[0] for t, v in dec.items()},
             {t: v[1] for t, v in dec.items()},
             {t: v[2] for t, v in dec.items()},
-            expansions, np.empty(0, dtype=np.int64), None, bounds,
-            removed_comp, scoring_terms, idf, avgdl, True,
+            expansions, universe, term_pos, bounds, rem, scoring_terms,
+            idf, avgdl, score,
         )
-        if matches.size == 0:
-            return
-        order = np.lexsort((matches, -scores))
+        order = (
+            np.lexsort((matches, -scores)) if score
+            else np.arange(matches.size)[::-1]
+        )
         if k > 0:
             order = order[:k]
         cids = matches[order]
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "pid": (cids >> np.int64(32)).astype(np.int64),
                 "doc_id": (cids & np.int64(0xFFFFFFFF)).astype(np.int64),
@@ -1113,7 +937,7 @@ def _make_composite_kernel(
             }
         )
 
-    return run
+    return kernel
 
 
 class SearchEngine(FeatureOpsMixin):
@@ -1382,11 +1206,11 @@ class SearchEngine(FeatureOpsMixin):
         """Does the sorted term group cover at least half the pinned
         dictionary's [g[0], g[-1]] span? Dense groups range-select;
         sparse ones (floored enumerations) keep exact isin so their
-        holes' postings never ship. Unpinned dictionaries only produce
-        whole-field enumerations here -- dense by construction."""
+        holes' postings never ship. An unpinned dictionary cannot
+        measure the span, so its groups keep exact isin too."""
         ts = self._terms_sorted
         if ts is None:
-            return True
+            return False
         import bisect
 
         span = bisect.bisect_right(ts, g[-1]) - bisect.bisect_left(
@@ -1735,9 +1559,7 @@ class SearchEngine(FeatureOpsMixin):
         k: int = 10,
         locale: str | None = None,
         time_range_us: tuple[int, int] | None = None,
-        use_blockmax: bool = True,
         prep: dict | None = None,
-        theta0: float = 0.0,
         strategy: str = "tfidf",
         constraints=None,
         authz=None,
@@ -1752,26 +1574,26 @@ class SearchEngine(FeatureOpsMixin):
         tuple_specs: list | None = None,
         facet_prefixes: list | None = None,
     ) -> DataFrame:
-        """Build the distributed match+score frame for a query: one
-        mapInPandas kernel pass over the pruned posting blocks, yielding
-        (pid, doc_id, score) per-partition top-k rows. `search` collects
-        its global top-k; plan tests assert its physical shape.
+        """Build the distributed frame for a query: one mapInPandas
+        kernel pass over the pruned posting blocks. Without `agg` it is
+        `_make_composite_kernel` for every search shape, yielding each
+        task's (pid, doc_id, score) top-k by score, or its newest k with
+        `strategy="time"`; `search` and `newest` collect the global
+        top-k. Plan tests assert its physical shape.
 
-        `agg="count"|"waveform"|"distincts"` switches to match-set
-        aggregation (see _make_kernel): no term scores, so EVERY term
-        sheds its tf/dl blobs before the exchange; "waveform" ships every
-        relevant pid's 't' rows so bucketing happens in-task;
-        "distincts" fetches `facet_terms` postings alongside the query's
-        and emits only (value_idx, count) rows per task."""
+        `agg="count"|"waveform"|"distincts"|...` switches to the per-pid
+        match-set aggregation kernel (`_make_kernel`): no term scores,
+        so EVERY term sheds its tf/dl blobs before the exchange;
+        "waveform" ships every relevant pid's 't' rows so bucketing
+        happens in-task; "distincts" fetches `facet_terms` postings
+        alongside the query's and emits only (value_idx, count) rows per
+        task."""
         p = prep or self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
         tree = p["tree"]
         expansions = p["expansions"]
         scoring_terms = [] if agg is not None else p["scoring_terms"]
-        if agg is not None:
-            use_blockmax = False
-            theta0 = 0.0
         fetch_terms = p["fetch_terms"]
         facet_groups: list[list] = []
         if agg in ("distincts", "metrics", "aggregate", "waveforms",
@@ -1939,35 +1761,10 @@ class SearchEngine(FeatureOpsMixin):
                 )
             )
 
-        kernel = _make_kernel(
-            tree,
-            scoring_terms,
-            self.n_docs,
-            self.avgdl,
-            k,
-            self.pid_counts,
-            expansions,
-            use_blockmax,
-            idf_map=idf_map,
-            time_spec=time_spec,
-            removed_map=self._removed_map,
-            theta0=theta0,
-            strategy=strategy,
-            agg=agg,
-            bucket_us=bucket_us,
-            bucket_origin_us=bucket_origin_us,
-            bucket_count=bucket_count,
-            facet_terms=facet_terms,
-            facet_values=facet_values,
-            facet_terms2=facet_terms2,
-            facet_terms3=facet_terms3,
-            tuple_specs=tuple_specs,
-            facet_prefixes=facet_prefixes,
-        )
         # hash-co-locate each pid's fetched blocks on one task, then ONE
-        # pandas call per task loops the pids it owns -- same semantics as
-        # groupBy(pid).applyInPandas but without a per-group Arrow+pandas
-        # round trip (a query touches O(pids) groups; at fine-grained time
+        # pandas call per task -- same semantics as groupBy(pid)
+        # .applyInPandas but without a per-group Arrow+pandas round trip
+        # (a query touches O(pids) groups; at fine-grained time
         # partitioning that per-group overhead dominated latency). Task
         # count is bounded by the pids actually touched, not the session
         # shuffle-partition default (which would schedule ~200 mostly
@@ -2002,23 +1799,32 @@ class SearchEngine(FeatureOpsMixin):
             f"{c} {_OUT_TYPES[c]}"
             for c in _kernel_columns(agg, facet_prefixes)
         )
-        if (
-            agg is None
-            and strategy != "time"
-            and not phrase_terms
-            and not has_all_node
-            and not unpinned_removals
-        ):
-            # plain scoring search: the task-level composite kernel
-            # (one decode + one eval + one top-k per TASK) replaces the
-            # per-pid loop -- same scores bit-for-bit, O(terms) NumPy
-            # calls per task instead of O(pids x terms)
-            runner = _make_composite_kernel(
+        if agg is None:
+            kernel = _make_composite_kernel(
                 tree, scoring_terms, self.n_docs, self.avgdl, k,
                 expansions, time_spec, self._removed_comp, idf_map,
+                self.pid_counts, strategy,
             )
-            return src.mapInPandas(runner, out_schema)
-        return src.mapInPandas(_per_pid_dispatch(kernel), out_schema)
+            return src.mapInPandas(_task_dispatch(kernel, None), out_schema)
+        kernel = _make_kernel(
+            tree,
+            k=k,
+            pid_counts=self.pid_counts,
+            expansions=expansions,
+            agg=agg,
+            time_spec=time_spec,
+            removed_map=self._removed_map,
+            bucket_us=bucket_us,
+            bucket_origin_us=bucket_origin_us,
+            bucket_count=bucket_count,
+            facet_terms=facet_terms,
+            facet_values=facet_values,
+            facet_terms2=facet_terms2,
+            facet_terms3=facet_terms3,
+            tuple_specs=tuple_specs,
+            facet_prefixes=facet_prefixes,
+        )
+        return src.mapInPandas(_task_dispatch(kernel, "pid"), out_schema)
 
     # -- serving-node local path -------------------------------------------
     def _segment_files(self) -> list[str]:
@@ -2231,55 +2037,6 @@ class SearchEngine(FeatureOpsMixin):
             )
         return est
 
-    def _theta_seed(self, prep: dict, k: int) -> float:
-        """Cross-partition theta seed for the distributed block-max
-        kernel: score ONE pid (the densest relevant one) on the serving
-        node via the job-free pyarrow path and take its k-th score. That
-        score lower-bounds the global k-th, so every kernel task can
-        discard blocks whose upper bound cannot reach it (SURVEY §4's
-        custom optimization; the reference's analog is its solver
-        carrying solution state across replica hops). Returns 0.0 when
-        seeding is unavailable or too expensive (whole-corpus scans)."""
-        if (
-            self._term_df is None
-            or prep["has_all_node"]
-            or k <= 0
-            or (self._removed_df is not None and self._removed_map is None)
-            or not prep["relevant_pids"]
-        ):
-            return 0.0
-        # bound the seed's read: one pid's share of the postings
-        est = self._estimated_postings(prep)
-        if est // max(1, len(prep["relevant_pids"])) > self.local_max_postings:
-            return 0.0
-        seed_pid = max(
-            prep["relevant_pids"], key=lambda p: self.pid_counts.get(p, 0)
-        )
-        sub = dict(prep)
-        sub["pid_range"] = (int(seed_pid), int(seed_pid))
-        sub["relevant_pids"] = [int(seed_pid)]
-        sub["boundary_pids"] = [
-            p for p in prep["boundary_pids"] if int(p) == int(seed_pid)
-        ]
-        try:
-            rows = self._search_local(sub, k, use_blockmax=True)
-        except Exception:
-            # a failed seed only loses pruning, never correctness -- but
-            # a silent fallback would also hide real decode/schema bugs
-            # from the distributed path, so say something once
-            if not getattr(self, "_theta_seed_warned", False):
-                self._theta_seed_warned = True
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "theta seed failed; block-max runs unseeded",
-                    exc_info=True,
-                )
-            return 0.0
-        if len(rows) < k:
-            return 0.0
-        return float(rows[k - 1][4])
-
     def _route_facet_local(
         self, prep: dict, facet_terms, local, pinned: bool
     ) -> bool:
@@ -2374,28 +2131,6 @@ class SearchEngine(FeatureOpsMixin):
             set(prep["fetch_terms"]) - scoring - phrase_members
         )
 
-        # would the distributed kernel get a theta seed? (mirror of
-        # _theta_seed's cheap guards -- the seed itself is real work)
-        seed_ok = (
-            self._term_df is not None
-            and not prep["has_all_node"]
-            and k > 0
-            and (self._removed_df is None or self._removed_map is not None)
-            and bool(prep["relevant_pids"])
-            and est // max(1, len(prep["relevant_pids"]))
-            <= self.local_max_postings
-        )
-
-        # mirror of kernel_frame's dispatch: plain scoring searches run
-        # the task-level composite kernel; every other shape loops pids
-        composite = (
-            not prep["has_all_node"]
-            and not phrase_members
-            and not (
-                self._removed_df is not None and self._removed_map is None
-            )
-        )
-
         rep = {
             "query": query,
             "tree": repr(prep["tree"]),
@@ -2410,10 +2145,7 @@ class SearchEngine(FeatureOpsMixin):
                 "storage is reachable, then 1 job)"
             ),
             "distributed_reasons": reasons,
-            "kernel": (
-                None if local
-                else "composite-task" if composite else "per-pid"
-            ),
+            "kernel": None if local else "composite-task",
             "n_fetch_terms": len(prep["fetch_terms"]),
             "n_scoring_terms": len(prep["scoring_terms"]),
             "prefix_expansions": {
@@ -2452,14 +2184,6 @@ class SearchEngine(FeatureOpsMixin):
                 if local
                 else "composite-task kernel is exhaustive (one "
                 "vectorized pass; block-max not applicable)"
-                if composite
-                else (
-                    "exact block-max kernel"
-                    + (
-                        ", theta-seeded from the densest pid"
-                        if seed_ok else ", unseeded"
-                    )
-                )
             ),
             "tombstones": (
                 0 if self._removed_map is None
@@ -2548,20 +2272,12 @@ class SearchEngine(FeatureOpsMixin):
                     prep["pid_range"],
                     ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
                      "pos_bin"],
-                ),
-                positions=True,
-            )
+                )
+            )[1]
         bounds = self._local_bounds(prep)
-        spans = []
-        if prep["has_all_node"]:
-            for p in prep["relevant_pids"]:
-                n = int(self.pid_counts.get(p, 0))
-                lo, hi = bounds.get(int(p), (0, n))
-                lo, hi = max(lo, 0), min(hi, n)
-                if hi > lo:
-                    spans.append((int(p) << 32) + np.arange(lo, hi))
         universe = (
-            np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
+            _universe(prep["relevant_pids"], self.pid_counts, bounds)
+            if prep["has_all_node"] else np.empty(0, dtype=np.int64)
         )
 
         def evaluate(c, f, d):
@@ -2651,30 +2367,6 @@ class SearchEngine(FeatureOpsMixin):
             urls = dm["url"].take(pa.array(sel)).combine_chunks()
             out[p] = ((docs[sel], urls, warcs[sel]), sel.size)
         return out
-
-    def _facet_hits(
-        self, matches: np.ndarray, facet_terms: list, fmap: dict
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """All facet postings that land in the match set, as parallel
-        (value_idx, position-into-matches) arrays -- ONE concatenated
-        searchsorted pass over every value's postings instead of a
-        per-value Python loop (at hundreds of values the loop overhead
-        dominates). Positions let callers reuse match-aligned arrays
-        (timestamps, buckets) with plain fancy indexing."""
-        arrs, vidx = [], []
-        for i, t in enumerate(facet_terms):
-            c = fmap.get(t)
-            if c is not None and c.size:
-                arrs.append(c)
-                vidx.append(np.full(c.size, i, dtype=np.int64))
-        if not arrs or not matches.size:
-            z = np.empty(0, dtype=np.int64)
-            return z, z
-        cat = np.concatenate(arrs)
-        vall = np.concatenate(vidx)
-        pos = np.minimum(np.searchsorted(matches, cat), matches.size - 1)
-        hit = matches[pos] == cat
-        return vall[hit], pos[hit]
 
     def _times_of(self, matches: np.ndarray, times: dict) -> np.ndarray:
         """warc_us per matched composite id. Matches are sorted, so pid
@@ -3038,7 +2730,7 @@ class SearchEngine(FeatureOpsMixin):
                 fmap, _tfs, _dls = self._postings_maps(
                     facet_terms, prep["pid_range"]
                 )
-                vh, mp = self._facet_hits(matches, facet_terms, fmap)
+                vh, mp = _hits_of(matches, fmap, facet_terms)
                 nvals = len(facet_terms)
                 counts = np.bincount(vh, minlength=nvals)
                 latest = np.full(nvals, -1, dtype=np.int64)
@@ -3236,7 +2928,7 @@ class SearchEngine(FeatureOpsMixin):
             fmap, _tfs, _dls = self._postings_maps(
                 facet_terms, prep["pid_range"]
             )
-            vh, mp = self._facet_hits(matches, facet_terms, fmap)
+            vh, mp = _hits_of(matches, fmap, facet_terms)
             if segments and vh.size:
                 keep = valid[mp]
                 vh, mp = vh[keep], mp[keep]
@@ -3499,7 +3191,7 @@ class SearchEngine(FeatureOpsMixin):
             fmap, _tfs, _dls = self._postings_maps(
                 facet_terms, prep["pid_range"]
             )
-            vh, mp = self._facet_hits(matches, facet_terms, fmap)
+            vh, mp = _hits_of(matches, fmap, facet_terms)
             keep = valid[mp] if segments else slice(None)
             vh, mp = vh[keep], mp[keep]
             if not vh.size:
@@ -3675,7 +3367,7 @@ class SearchEngine(FeatureOpsMixin):
                 fmap, _tfs, _dls = self._postings_maps(
                     facet_terms, prep["pid_range"]
                 )
-                vh, _mp = self._facet_hits(matches, facet_terms, fmap)
+                vh, _mp = _hits_of(matches, fmap, facet_terms)
                 counts = np.bincount(vh, minlength=len(facet_terms))
                 trip = [
                     (t, _decode(t), int(n))
@@ -3748,66 +3440,12 @@ class SearchEngine(FeatureOpsMixin):
     _POSTING_COLS = ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
                      "dls_bin"]
 
-    def _decode_posting_table(self, tbl, positions: bool = False) -> dict:
-        """Decode a fetched posting-rows table into
-        {term: (cids, tfs, dls)} with absolute composite
-        (pid << 32 | doc_id) ids, ascending. With `positions` the third
-        slot decodes pos_bin instead of dls_bin -- {term: (cids, tfs,
-        pos)}, the self-contained triple _eval_phrase consumes."""
-        import pyarrow.compute as pc
-
-        out: dict = {}
-        if not tbl.num_rows:
-            return out
-        order = pc.sort_indices(
-            tbl,
-            sort_keys=[
-                ("term", "ascending"),
-                ("pid", "ascending"),
-                ("blk", "ascending"),
-            ],
+    @staticmethod
+    def _decode_posting_table(tbl) -> tuple[dict, dict]:
+        """`_decode_rows` over a fetched pyarrow posting-rows table."""
+        return _decode_rows(
+            {c: tbl[c].to_numpy() for c in tbl.column_names}
         )
-        tbl = tbl.take(order)
-        has_blobs = "tfs_bin" in tbl.column_names
-        terms = np.asarray(tbl["term"].to_pylist(), dtype=object)
-        pids = tbl["pid"].to_numpy().astype(np.int64)
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        ids_bins = tbl["ids_bin"].to_pylist()
-        tfs_bins = tbl["tfs_bin"].to_pylist() if has_blobs else None
-        if positions:
-            third_bins = tbl["pos_bin"].to_pylist()
-        else:
-            third_bins = tbl["dls_bin"].to_pylist() if has_blobs else None
-        bnd = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate(([0], bnd, [len(terms)]))
-        for gi in range(len(starts) - 1):
-            s, e = int(starts[gi]), int(starts[gi + 1])
-            t = terms[s]
-            # ONE varint decode per term over the concatenated blobs,
-            # then vectorized per-block rebase to absolute composite ids
-            # (first gap of each block is absolute within its pid)
-            gaps = decode_varint(b"".join(ids_bins[s:e]))
-            acc = np.cumsum(gaps)
-            row_n = ns[s:e]
-            rs = np.zeros(e - s, dtype=np.int64)
-            np.cumsum(row_n[:-1], out=rs[1:])
-            base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
-            cids = acc - np.repeat(base, row_n)
-            tfs = (
-                decode_varint(b"".join(tfs_bins[s:e]))
-                if has_blobs else cids
-            )
-            if positions:
-                third = decode_grouped_deltas(
-                    b"".join(third_bins[s:e]), tfs
-                )
-            else:
-                third = (
-                    decode_varint(b"".join(third_bins[s:e]))
-                    if has_blobs else cids
-                )
-            out[t] = (cids, tfs, third)
-        return out
 
     _EMPTY_POSTINGS = (
         np.empty(0, dtype=np.int64),
@@ -3859,7 +3497,7 @@ class SearchEngine(FeatureOpsMixin):
             ),
             columns=["pid", "term", "blk", "n", "ids_bin"],
         )
-        dec = self._decode_posting_table(tbl)
+        dec = self._decode_posting_table(tbl)[0]
         for t in sorted(dec):  # composed-term order == value order
             cids = dec[t][0]
             if not cids.size:
@@ -3880,8 +3518,8 @@ class SearchEngine(FeatureOpsMixin):
         slices the cached arrays by composite-id range (they are sorted),
         which is exactly what a ranged fetch would have decoded. A
         pid-bounded MISS fetches only the range and does NOT populate the
-        cache (the theta-seed path probes single pids of head terms whose
-        full span may exceed the serving-node budget)."""
+        cache (a head term's full span may exceed the serving-node
+        budget)."""
         term_cids: dict = {}
         term_tfs: dict = {}
         term_dls: dict = {}
@@ -3903,13 +3541,13 @@ class SearchEngine(FeatureOpsMixin):
             if text:
                 dec.update(self._decode_posting_table(
                     self._fetch_posting_rows(text, None, self._POSTING_COLS)
-                ))
+                )[0])
             if composed:
                 dec.update(self._decode_posting_table(
                     self._fetch_posting_rows(
                         composed, None, self._POSTING_COLS[:5]
                     )
-                ))
+                )[0])
             with self._post_cache_lock:
                 for t in missing:
                     if t in self._post_cache:
@@ -3953,11 +3591,11 @@ class SearchEngine(FeatureOpsMixin):
                         c, f, d = c[s:e], f[s:e], d[s:e]
                     term_cids[t], term_tfs[t], term_dls[t] = c, f, d
                 return term_cids, term_tfs, term_dls
-        # ranged miss (theta-seed probes) or eviction race: read exactly
-        # what the query needs, bypassing the cache
+        # ranged miss (time-ranged queries) or eviction race: read
+        # exactly what the query needs, bypassing the cache
         dec = self._decode_posting_table(
             self._fetch_posting_rows(fetch_terms, pid_range, self._POSTING_COLS)
-        )
+        )[0]
         for t, (c, f, d) in dec.items():
             term_cids[t], term_tfs[t], term_dls[t] = c, f, d
         return term_cids, term_tfs, term_dls
@@ -3985,8 +3623,8 @@ class SearchEngine(FeatureOpsMixin):
         and rank-identical to the distributed kernel (same tree evaluator,
         same sorted-term float64 summation order).
 
-        With `use_blockmax`, wide scoring queries run the SAME exact
-        block-max two-phase pruning as the distributed kernel, in
+        With `use_blockmax`, wide scoring queries run the engine's one
+        exact block-max two-phase pruning (`_blockmax_local`), in
         composite-id space: posting cells (pid, doc_id // block_span) are
         doc-range aligned across terms, so scoring a cell subset is exact
         for the docs it contains and cells whose summed term upper bound
@@ -4044,16 +3682,17 @@ class SearchEngine(FeatureOpsMixin):
     def _blockmax_local(
         self, cmap, fmap, dmap, scorer, scoring_set, idf, k
     ):
-        """Exact two-phase block-max over composite-id cells (the
-        serving-node twin of the kernel's pruning, engine.py kernel():
-        same admissibility argument). Phase 1 scores the highest-upper-
+        """Exact two-phase block-max over composite-id cells, the engine's
+        one block-max (the distributed kernel is exhaustive; see the
+        module docstring for the admissibility argument). Phase 1 scores
+        the highest-upper-
         bound cells until k docs survive the masks -> theta (a lower
         bound on the true k-th score, since subset scores are exact);
         phase 2 scores every cell whose bound can reach theta. Docs in
         skipped cells are bounded strictly below theta and can never
         enter the top-k. Cells carrying only filter-term postings ride
-        along with bound 0 so zero-score matches stay reachable (same as
-        the kernel's blk_ub rows). Records pruning stats on
+        along with bound 0 so zero-score matches stay reachable. Records
+        pruning stats on
         self._local_blockmax_stats for tests/telemetry."""
         span = int(self.meta.get("block_span", 1 << 30))
         term_cells: dict = {}
@@ -4198,13 +3837,17 @@ class SearchEngine(FeatureOpsMixin):
         volume fits `local_max_postings` run on the serving node itself
         (`_search_local`, zero Spark jobs -- the reference's
         route-to-partition-host topology); larger queries run the
-        distributed path below.
+        distributed path below. `use_blockmax` governs only the serving
+        node's block-max (`_blockmax_local`, off by default through
+        LOCAL_BLOCKMAX_MIN_POSTINGS); the distributed kernel is
+        exhaustive.
 
         Distributed path -- plans ONE Spark job on the pinned-dictionary
         path: prefix expansion is a driver bisect, idf a driver dict,
         time bounds resolve kernel-side from 't' rows, and match-all pids
         reach the kernel via tiny marker rows -- no per-query metadata
-        jobs. Job 1: kernel + bounded top-k merge (TakeOrdered) -> k rows
+        jobs. Job 1: the composite kernel (`_make_composite_kernel`, every
+        query shape) + bounded top-k merge (TakeOrdered) -> k rows
         on the driver. Job 2 (at the caller's collect): point-lookup
         gather of display fields -- the k (pid, doc_id) winners as
         pushed-down isin predicates over the forward index, exact-joined
@@ -4240,25 +3883,9 @@ class SearchEngine(FeatureOpsMixin):
                 ),
                 query, locale, highlight_from, use_stopwords,
             )
-        # the theta seed feeds ONLY the per-pid block-max kernel; plain
-        # scoring searches dispatch to the task-level composite kernel
-        # (exhaustive, ignores theta0), so seeding them is pure dead
-        # work on the serving node -- seed only the shapes that read it
-        composite_route = (
-            not prep["has_all_node"]
-            and not (prep.get("phrase_terms") or [])
-            and not (
-                self._removed_df is not None and self._removed_map is None
-            )
-        )
-        theta0 = (
-            self._theta_seed(prep, k)
-            if use_blockmax and not composite_route
-            else 0.0
-        )
         per_part = self.kernel_frame(
             query, k=k, locale=locale, time_range_us=time_range_us,
-            use_blockmax=use_blockmax, prep=prep, theta0=theta0,
+            prep=prep,
         )
         wrows = per_part.orderBy(
             F.desc("score"), F.asc("pid"), F.asc("doc_id")
@@ -4427,9 +4054,13 @@ class SearchEngine(FeatureOpsMixin):
     ) -> dict[str, list]:
         """Batch N queries into ONE Spark job (the qps path -- the
         reference's stress harness fires queries concurrently,
-        WikiMiruStressService.java:58-120). Each (query, pid) group runs
-        the same kernel as `search`; per-query results are identical to
-        sequential `search_collect` calls.
+        WikiMiruStressService.java:58-120). Each task runs the same
+        composite kernel as `search` once per query over the pids it
+        holds; per-query results are identical to sequential
+        `search_collect` calls. Match-all, phrase and unpinned-tombstone
+        queries answer through `search_collect` (the shared exchange
+        carries no marker, position or 'x' rows); `use_blockmax` reaches
+        only the serving node.
 
         Returns {query: [(pid, doc_id, score, url), ...]}.
         """
@@ -4565,28 +4196,20 @@ class SearchEngine(FeatureOpsMixin):
                 for t in fetch_all
                 if t in self._term_df
             }
-        kernels = {}
-        for qid, spec in enumerate(specs):
-            if spec is None:
-                continue
-            tree, scoring, expansions = spec
-            kernels[qid] = _make_kernel(
-                tree, scoring, n_docs, avgdl, k, pid_counts,
-                expansions, use_blockmax, idf_map=idf_map,
-                time_spec=shared_spec,
-                removed_map=self._removed_map,
+        kernels = {
+            qid: _make_composite_kernel(
+                spec[0], spec[1], n_docs, avgdl, k, spec[2], shared_spec,
+                self._removed_comp, idf_map, pid_counts,
             )
+            for qid, spec in enumerate(specs)
+            if spec is not None
+        }
 
-        def dispatch(batches):
-            dfs = [b for b in batches if len(b)]
-            if not dfs:
-                return
-            pdf = pd.concat(dfs, ignore_index=True)
-            for (qid, _pid), grp in pdf.groupby(["qid", "pid"], sort=False):
-                res = kernels[int(qid)](grp.drop(columns=["qid"]))
-                if len(res):
-                    res.insert(0, "qid", int(qid))
-                    yield res
+        def per_query(grp):
+            qid = int(grp["qid"].iloc[0])
+            res = kernels[qid](grp.drop(columns=["qid"]))
+            res.insert(0, "qid", qid)
+            return res
 
         nparts = max(
             1,
@@ -4596,7 +4219,8 @@ class SearchEngine(FeatureOpsMixin):
             ),
         )
         per = tagged.repartition(nparts, "qid", "pid").mapInPandas(
-            dispatch, "qid int, pid long, doc_id long, score double"
+            _task_dispatch(per_query, "qid"),
+            "qid int, pid long, doc_id long, score double",
         )
         w = Window.partitionBy("qid").orderBy(
             F.desc("score"), F.asc("pid"), F.asc("doc_id")
@@ -4702,7 +4326,7 @@ class SearchEngine(FeatureOpsMixin):
             else:
                 per = self.kernel_frame(
                     query, k=k, locale=locale, time_range_us=time_range_us,
-                    use_blockmax=False, prep=prep, strategy="time",
+                    prep=prep, strategy="time",
                 )
                 wrows = per.orderBy(
                     F.desc("pid"), F.desc("doc_id")

@@ -322,7 +322,9 @@ class FeatureOpsMixin:
                 fmap, _t, _d = self._postings_maps(
                     terms, prep["pid_range"]
                 )
-                vh, _mp = self._facet_hits(matches, terms, fmap)
+                from .engine import _hits_of
+
+                vh, _mp = _hits_of(matches, fmap, terms)
                 counts = np.bincount(vh, minlength=len(terms))
         else:
             rows = (

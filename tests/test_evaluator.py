@@ -1,6 +1,7 @@
-"""The shared match/mask/score evaluator (`_evaluate`) and the per-pid
-kernel's output schema, checked in pure NumPy/pandas -- no Spark, no
-index build. Also the engine's open-time index-format check."""
+"""The shared match/mask/score evaluator (`_evaluate`), the composite
+top-k kernel over encoded posting rows, and the per-pid agg kernel's
+output schema, checked in pure NumPy/pandas -- no Spark, no index
+build. Also the engine's open-time index-format check."""
 
 import json
 import os
@@ -13,11 +14,14 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import miru_spark.query.engine as E
+from miru_spark.codec import encode_postings, encode_varint
 from miru_spark.oracle import B, K1
 from miru_spark.query.engine import (
     SearchEngine,
     _evaluate,
     _kernel_columns,
+    _make_composite_kernel,
     _make_kernel,
 )
 
@@ -183,9 +187,217 @@ def test_evaluate_composite_equals_per_pid_and_reference(sc):
     assert cs.tobytes() == np.concatenate(per_s).tobytes()
 
 
+SPAN = 8  # docIDs per posting block
+# kernel input columns; a row kind's unused columns are null
+BLANK = dict.fromkeys([
+    "pid", "term", "blk", "n", "first_doc", "last_doc", "ids_bin",
+    "tfs_bin", "dls_bin", "pos_bin", "rk",
+])
+PHRASE = ("phrase", (("a", 0), ("b", 1)))
+
+
+@st.composite
+def _kernel_scenarios(draw):
+    pids = sorted(
+        draw(st.sets(st.integers(1, 6), min_size=2, max_size=3))
+    )
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    docs = {}
+    for p in pids:
+        n = draw(st.integers(1, 40))
+        dls = rng.integers(1, 30, size=n)
+        post = {}
+        for t in TERMS:
+            ids = np.flatnonzero(rng.random(n) < draw(st.sampled_from(
+                [0.0, 0.3, 0.7, 1.0]
+            ))).astype(np.int64)
+            tfs = rng.integers(1, 4, size=ids.size)
+            # per-occurrence token positions, tf distinct ones per doc
+            pos = [np.sort(rng.choice(5, int(f), replace=False)) for f in tfs]
+            post[t] = (ids, tfs, dls[ids], pos)
+        warc = p * 10_000 + np.cumsum(rng.integers(1, 5, size=n))
+        removed = np.flatnonzero(
+            rng.random(n) < draw(st.sampled_from([0.0, 0.2]))
+        ).astype(np.int64)
+        docs[p] = (n, post, warc, removed)
+    lo_w, hi_w = docs[pids[0]][2], docs[pids[-1]][2]
+    time_range = (
+        (int(lo_w[draw(st.integers(0, lo_w.size - 1))]),
+         int(hi_w[draw(st.integers(0, hi_w.size - 1))]))
+        if draw(st.booleans()) else None
+    )
+    tree = draw(_trees)
+    join = draw(st.sampled_from([None, "and", "or"]))
+    return {
+        "docs": docs,
+        "tree": tree if join is None else (join, [tree, PHRASE]),
+        "join": join,
+        "base": tree,
+        "scoring": sorted(draw(st.sets(st.sampled_from(TERMS)))),
+        "idf": {
+            t: draw(st.floats(0.05, 8.0, allow_nan=False)) for t in TERMS
+        },
+        "time_range": time_range,
+        "x_rows": draw(st.booleans()),
+        "k": draw(st.integers(0, 6)),
+    }
+
+
+def _kernel_frame(sc):
+    """Encoded rows as `kernel_frame` ships them: 'p' blocks (shed
+    tf/dl blobs for filter-only terms, pos_bin for phrase members), the
+    boundary pids' 't' rows, one 'z' marker per pid for match-all, and
+    'x' tombstone rows when unpinned."""
+    import pandas as pd
+
+    phrase = sc["join"] is not None
+    keep = set(sc["scoring"]) | ({"a", "b"} if phrase else set())
+    rows = []
+    for p, (n, post, warc, removed) in sc["docs"].items():
+        for t, (ids, tfs, dls, pos) in post.items():
+            blk = ids // SPAN
+            for b in np.unique(blk).tolist():
+                sel = np.flatnonzero(blk == b)
+                gaps = [np.diff(pos[i], prepend=0) for i in sel.tolist()]
+                rows.append({
+                    "pid": p, "term": t, "blk": b, "n": sel.size,
+                    "first_doc": int(ids[sel[0]]),
+                    "last_doc": int(ids[sel[-1]]),
+                    "ids_bin": encode_postings(ids[sel]),
+                    "tfs_bin": encode_varint(tfs[sel]) if t in keep else None,
+                    "dls_bin": encode_varint(dls[sel]) if t in keep else None,
+                    "pos_bin": (
+                        encode_varint(np.concatenate(gaps))
+                        if phrase and t in ("a", "b") else None
+                    ),
+                    "rk": "p",
+                })
+        boundary = (min(sc["docs"]), max(sc["docs"]))
+        if sc["time_range"] is not None and p in boundary:
+            for s in range(0, n, SPAN):
+                rows.append({
+                    "pid": p, "first_doc": s, "rk": "t",
+                    "ids_bin": encode_varint(
+                        np.diff(warc[s:s + SPAN], prepend=0)
+                    ),
+                })
+        if "all" in E._tree_tags(sc["tree"]):
+            rows.append({"pid": p, "rk": "z"})
+        if sc["x_rows"]:
+            rows.extend(
+                {"pid": p, "first_doc": int(d), "rk": "x"}
+                for d in removed.tolist()
+            )
+    return pd.DataFrame([{**BLANK, **r} for r in rows], columns=list(BLANK))
+
+
+def _ref_answer(sc, strategy):
+    """Python-set match + sorted-term float sum reference, as
+    [(pid, doc_id, score)] in the kernel's output order."""
+    hits = []
+    for p, (n, post, warc, removed) in sc["docs"].items():
+        post3 = {t: v[:3] for t, v in post.items()}
+        want = _ref_matches(sc["base"], n, post3)
+        if sc["join"] is not None:
+            (ia, pa), (ib, pb) = [(post[t][0], post[t][3]) for t in "ab"]
+            # "a b": some occurrence of a directly followed by one of b
+            ph = {
+                d for d in set(ia.tolist()) & set(ib.tolist())
+                if set((pa[int(np.searchsorted(ia, d))] + 1).tolist())
+                & set(pb[int(np.searchsorted(ib, d))].tolist())
+            }
+            want = want & ph if sc["join"] == "and" else want | ph
+        if sc["time_range"] is not None and p in (
+            min(sc["docs"]), max(sc["docs"])
+        ):
+            t0, t1 = sc["time_range"]
+            want = {d for d in want if t0 <= warc[d] <= t1}
+        want -= set(removed.tolist())
+        for d in want:
+            s = (
+                _ref_score(d, post3, sc["scoring"], sc["idf"])
+                if strategy == "tfidf" else 0.0
+            )
+            hits.append((p, d, s))
+    if strategy == "tfidf":
+        hits.sort(key=lambda h: (-h[2], h[0], h[1]))
+    else:
+        hits.sort(key=lambda h: (h[0], h[1]), reverse=True)
+    return hits[: sc["k"]] if sc["k"] > 0 else hits
+
+
+@settings(max_examples=60, deadline=None)
+@given(_kernel_scenarios())
+def test_composite_kernel_equals_reference(sc):
+    """`_make_composite_kernel` over codec-encoded rows -- match-all
+    markers, pinned or 'x'-row tombstones, phrase positions and a
+    boundary-pid time range -- equals the Python reference under both
+    strategies, scores bit-identical. Posting blocks of a boundary pid
+    outside its [lo, hi) never reach the shared decoder."""
+    pdf = _kernel_frame(sc)
+    docs = sc["docs"]
+    pids = sorted(docs)
+    time_spec = None
+    keep_lo = {}
+    if sc["time_range"] is not None:
+        t0, t1 = sc["time_range"]
+        time_spec = (t0, t1, pids[0], pids[-1])
+        for p in (pids[0], pids[-1]):
+            w = docs[p][2]
+            keep_lo[p] = E._doc_interval(w, t0, t1)
+    removed_comp = None
+    if not sc["x_rows"]:
+        removed_comp = np.concatenate(
+            [(p << 32) + docs[p][3] for p in pids]
+        )
+        removed_comp = removed_comp if removed_comp.size else None
+    decoded = []
+    real = E._decode_rows
+
+    def counting(cols):
+        decoded.extend(
+            zip(cols["pid"], cols["first_doc"], cols["last_doc"])
+        )
+        return real(cols)
+
+    E._decode_rows = counting
+    try:
+        for strategy in ("tfidf", "time"):
+            decoded.clear()
+            kern = _make_composite_kernel(
+                sc["tree"], sc["scoring"], 100, AVGDL, sc["k"], {},
+                time_spec, removed_comp, sc["idf"],
+                {p: docs[p][0] for p in pids}, strategy,
+            )
+            out = kern(pdf.copy())
+            got = list(zip(
+                out["pid"].tolist(), out["doc_id"].tolist(),
+                out["score"].tolist(),
+            ))
+            want = _ref_answer(sc, strategy)
+            assert [g[:2] for g in got] == [w[:2] for w in want]
+            assert (
+                np.array([g[2] for g in got], dtype=np.float64).tobytes()
+                == np.array([w[2] for w in want], dtype=np.float64).tobytes()
+            )
+            p_rows = pdf[pdf["rk"] == "p"]
+            expect = 0
+            for p, f, l in zip(
+                p_rows["pid"], p_rows["first_doc"], p_rows["last_doc"]
+            ):
+                lo, hi = keep_lo.get(p, (0, 1 << 40))
+                expect += int(l >= lo and f < hi)
+            for p, f, l in decoded:
+                lo, hi = keep_lo.get(p, (0, 1 << 40))
+                assert l >= lo and f < hi, (p, f, l, lo, hi)
+            assert len(decoded) == expect
+    finally:
+        E._decode_rows = real
+
+
 def _waveforms_kernel(prefix):
     return _make_kernel(
-        ("term", "w1"), [], 10, AVGDL, 0, {7: 6}, {}, False, idf_map={},
+        ("term", "w1"), k=0, pid_counts={7: 6}, expansions={},
         agg="waveforms", bucket_us=1000, facet_prefixes=[prefix],
     )
 
@@ -196,7 +408,6 @@ def test_streamed_waveforms_empty_frames_keep_term_column():
     set) must carry the same columns the mapInPandas schema names."""
     import pandas as pd
 
-    from miru_spark.codec import encode_postings, encode_varint
     from miru_spark.fields import FIELD_SEP
 
     prefix = f"site{FIELD_SEP}"

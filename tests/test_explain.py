@@ -70,10 +70,10 @@ def test_explain_distributed_route_reasons(eng):
         # plain scoring search: the composite task kernel (exhaustive)
         assert rep["kernel"] == "composite-task"
         assert "composite" in rep["blockmax"]
-        # match-all shapes stay on the per-pid kernel
+        # match-all shapes run the same composite task kernel
         rep_all = eng.explain(None, constraints="lang:de")
         if rep_all["route"] == "distributed-kernel":
-            assert rep_all["kernel"] == "per-pid"
+            assert rep_all["kernel"] == "composite-task"
             assert "block-max" in rep_all["blockmax"]
     finally:
         eng.local_max_postings = old

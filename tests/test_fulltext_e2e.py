@@ -158,8 +158,8 @@ def test_blockmax_equals_exhaustive(engine, query):
 
 @pytest.fixture(scope="module")
 def fine_engine(spark, tmp_path_factory):
-    """Fine-grained blocks (span 16) so per-block upper bounds vary
-    enough for cross-partition theta pruning to bite at test scale."""
+    """Fine-grained blocks (span 16): many small blocks per pid, where
+    per-block upper bounds vary at test scale."""
     index_dir = str(tmp_path_factory.mktemp("idx_fine"))
     wt = webtext_df(spark, N_DOCS, parallelism=4)
     build_index(
@@ -169,58 +169,9 @@ def fine_engine(spark, tmp_path_factory):
     return SearchEngine(spark, index_dir)
 
 
-@pytest.mark.parametrize("query,k", [("w000007", 3), ("w000009 OR w000033", 3)])
-def test_theta_seed_prunes_blocks(fine_engine, query, k):
-    """Cross-partition theta: the driver-computed seed (k-th score of
-    the densest pid, obtained job-free on the serving node) must leave
-    the merged top-k identical while scoring strictly fewer blocks
-    across the other pids."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from miru_spark.query.engine import _make_kernel
-
-    engine = fine_engine
-    prep = engine._prep_query(query, None, None)
-    theta0 = engine._theta_seed(prep, k)
-    assert theta0 > 0.0
-
-    pdf = (
-        engine.postings.filter(F.col("term").isin(prep["fetch_terms"]))
-        .toPandas()
-    )
-    results = {}
-    counters = {}
-    for name, seed in (("no_seed", 0.0), ("seeded", theta0)):
-        counter = {}
-        kern = _make_kernel(
-            prep["tree"], prep["scoring_terms"], engine.n_docs,
-            engine.avgdl, k, engine.pid_counts, prep["expansions"],
-            use_blockmax=True, idf_map=prep["idf_map"], theta0=seed,
-            counter=counter,
-        )
-        outs = [
-            kern(grp) for _pid, grp in pdf.groupby("pid", sort=True)
-        ]
-        allr = pd.concat([o for o in outs if len(o)], ignore_index=True)
-        top = allr.sort_values(
-            ["score", "pid", "doc_id"], ascending=[False, True, True]
-        ).head(k)
-        results[name] = list(
-            zip(top["pid"].tolist(), top["doc_id"].tolist(),
-                [round(s, 9) for s in top["score"].tolist()])
-        )
-        counters[name] = counter
-    assert results["seeded"] == results["no_seed"]
-    assert (
-        counters["seeded"]["blocks_scored"]
-        < counters["no_seed"]["blocks_scored"]
-    ), counters
-
-
 def test_theta_seeded_distributed_equals_local(fine_engine):
-    """End-to-end: the seeded distributed path returns exactly the
-    serving-node result (theta pruning is invisible in the answer)."""
+    """End-to-end on fine-grained blocks: the distributed path returns
+    exactly the serving-node result."""
     for query in ("w000007", "w000009 OR w000033", "w000001 AND w000004"):
         a = fine_engine.search_collect(query, k=10, local=True)
         b = fine_engine.search_collect(query, k=10, local=False)

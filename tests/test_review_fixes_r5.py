@@ -88,10 +88,11 @@ def test_newest_fallback_is_ordered(eng, monkeypatch):
 
 def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     """considerIfLastIdGreaterThanN analog (LabFieldIndex.multiTxIndex
-    :339-419): with doc-range bounds the kernel drops posting blocks
-    whose span misses [lo, hi) BEFORE decode. The bounds resolve from a
-    `time_spec` whose boundary pid's 't' rows ride in the frame, as on
-    the distributed route. Identical results, fewer varint decodes."""
+    :339-419): with doc-range bounds the composite kernel drops posting
+    blocks whose span misses [lo, hi) BEFORE the shared decoder. The
+    bounds resolve from a `time_spec` whose boundary pid's 't' rows ride
+    in the frame, as on the distributed route. Identical results, fewer
+    blocks decoded."""
     import numpy as np
     import pandas as pd
 
@@ -119,19 +120,18 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     assert lo > int(pdf["last_doc"].iloc[0])  # a whole block lies below
 
     calls = {"n": 0}
-    real = E.decode_postings
+    real = E._decode_rows
 
-    def counting(b):
-        calls["n"] += 1
-        return real(b)
+    def counting(cols):
+        calls["n"] += len(cols["term"])  # posting blocks decoded
+        return real(cols)
 
-    monkeypatch.setattr(E, "decode_postings", counting)
+    monkeypatch.setattr(E, "_decode_rows", counting)
 
     def run(frame, time_spec):
-        return E._make_kernel(
+        return E._make_composite_kernel(
             ("term", "w000001"), ["w000001"], eng.n_docs, eng.avgdl,
-            0, eng.pid_counts, {}, use_blockmax=False,
-            idf_map={"w000001": 1.0}, time_spec=time_spec,
+            0, {}, time_spec, None, {"w000001": 1.0}, eng.pid_counts,
         )(frame.copy())
 
     unbounded = run(pdf, None)
@@ -144,6 +144,41 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     got = bounded.reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     assert np.allclose(got["score"], want["score"])
+
+
+def test_unpinned_sparse_facet_list_selects_with_isin(spark, eng):
+    """ADVICE r5 (`_range_dense`): an unpinned dictionary cannot measure
+    a value list's span, so a sparse explicit list above FACET_ISIN_MAX
+    selects with isin, not with a [first, last] term range that ships
+    its holes' postings. The distincts answer is the pinned engine's."""
+    import re
+
+    import numpy as np
+
+    import miru_spark.query.engine as E
+
+    sparse = eng.field_terms("site")[::40]
+    assert len(sparse) >= 5
+    un = SearchEngine(spark, eng.paths.root, max_pinned_terms=0)
+    try:
+        assert un._terms_sorted is None
+        un.FACET_ISIN_MAX = 2
+        df = un.kernel_frame(
+            "w000001", k=0, agg="distincts", facet_terms=sparse
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"term#\d+ (IN \(|INSET )", plan), plan
+        assert not re.search(r"term#\d+ [<>]=", plan), plan
+        got: dict = {}
+        for r in df.collect():
+            got[r["doc_id"]] = got.get(r["doc_id"], 0.0) + r["score"]
+    finally:
+        un.close()
+    # the pinned serving node's job-free count of the same values
+    m = eng._local_match_ids(eng._prep_query("w000001", None, None))
+    vh, _pos = E._hits_of(m, eng._postings_maps(sparse, None)[0], sparse)
+    want = np.bincount(vh, minlength=len(sparse))
+    assert got and got == {i: float(c) for i, c in enumerate(want) if c}
 
 
 def test_search_many_gather_fallback(eng, monkeypatch):
