@@ -27,6 +27,19 @@ FullText.java:54-97):
 - winners join back to docmap for display fields (forward-index gather,
   FullText.gatherValues FullText.java:253-280).
 
+**Analytics: one reducer per agg mode, run by both routes.** count,
+waveform, stumptown, distincts, aggregate, waveforms, metrics and pairs
+each have ONE module-level reducer (`_REDUCERS`) over a sorted composite
+match set, its decoded postings map and a composite id -> warc_us lookup
+(`_times_of`), returning {column: ndarray}. The serving node runs it on
+the query's match set (`SearchEngine._agg`, zero Spark jobs); the same
+kernel as every search runs it once per task, and the task outputs merge
+in Spark by one fixed rule per column (`_AGG_MERGE`: counts and sums
+add, `latest` takes the max; stumptown's `newest` keeps the k largest
+ids) -- miru's one Question.askLocal per partition plus one
+MiruAnswerMerger. One routing rule (`SearchEngine._route`) picks the
+route for every op.
+
 **Block-max pruning (exact, serving node only, off by default).** Posting
 blocks are doc-range aligned across terms (blk = doc_id // block_span with
 one span for the whole index), so for a (pid, blk) cell the metadata-only
@@ -396,40 +409,69 @@ def _bounded_rows(rows, bounds: dict):
     return rows if keep.all() else rows[keep]
 
 
-def _bucket_counts(ts: np.ndarray, bucket_us: int, origin_us: int,
-                   count: int):
-    """Histogram timestamps into (bucket, count) arrays: epoch-aligned
-    when `count` is 0, else `count` equal segments from origin_us (the
-    reference's divideTimeRangeIntoNSegments shape --
-    StumptownQuestion.java:115-129, AnalyticsQuery; the tail beyond
-    origin + count*dur is truncated exactly like its closestId edge
-    array)."""
+def _bucket_index(ts: np.ndarray, spec: dict):
+    """Bucket of every timestamp and the mask of those the bucketing
+    keeps (None: all of them): epoch-aligned `bucket_us` buckets when
+    `bucket_count` is 0, else `bucket_count` equal segments from
+    `bucket_origin_us` (the reference's divideTimeRangeIntoNSegments
+    shape -- StumptownQuestion.java:115-129, AnalyticsQuery; the tail
+    beyond origin + count*dur is truncated exactly like its closestId
+    edge array)."""
+    bucket_us, count = spec["bucket_us"], spec["bucket_count"]
     if count:
-        rel = ts - origin_us
-        rel = rel[(rel >= 0) & (rel < count * bucket_us)]
-        return np.unique(rel // bucket_us, return_counts=True)
-    return np.unique(ts // bucket_us, return_counts=True)
+        rel = ts - spec["bucket_origin_us"]
+        return rel // bucket_us, (rel >= 0) & (rel < count * bucket_us)
+    return ts // bucket_us, None
 
 
 _OUT_TYPES = {
-    "pid": "long", "doc_id": "long", "score": "double", "cnt": "long",
-    "term": "string",
+    "pid": "long", "doc_id": "long", "score": "double", "term": "string",
+    "bucket": "long", "key": "long", "cnt": "long", "sum": "double",
+    "hits": "long", "latest": "long", "newest": "long",
 }
+_NP_TYPES = {"long": np.int64, "double": np.float64, "string": object}
+
+# Output columns of each agg mode's reducer (`_REDUCERS`); a search
+# emits (pid, doc_id, score). Key columns group across tasks and every
+# value column merges by one fixed rule (`_AGG_MERGE`), so a reducer over
+# the union of some pids' matches equals the merge of its outputs over
+# any split of those pids into tasks. stumptown's `newest` keeps the k
+# largest ids; its newest rows carry bucket 0 and cnt 0, its bucket
+# rows newest -1.
+_AGG_COLUMNS = {
+    "count": ("cnt",),
+    "waveform": ("bucket", "cnt"),
+    "stumptown": ("bucket", "cnt", "newest"),
+    "distincts": ("term", "cnt"),
+    "aggregate": ("term", "cnt", "latest"),
+    "waveforms": ("term", "bucket", "cnt"),
+    "metrics": ("bucket", "sum", "hits", "cnt"),
+    "pairs": ("key", "cnt"),
+}
+_AGG_KEYS = ("term", "bucket", "key")
+_AGG_MERGE = {"cnt": "sum", "sum": "sum", "hits": "sum", "latest": "max"}
+# agg modes that bucket matches by time: every relevant pid's 't' rows
+# ride to the kernel
+_TIME_AGGS = ("waveform", "stumptown", "waveforms", "metrics")
 
 
-def _kernel_columns(agg: str | None, facet_prefixes) -> list[str]:
+def _kernel_columns(agg: str | None) -> list[str]:
     """Output columns of the distributed kernel for one agg mode: the one
     list both `kernel_frame`'s mapInPandas schema and the kernel's
-    empty frames are built from."""
-    cols = ["pid", "doc_id", "score"]
-    if agg in ("aggregate", "waveforms"):
-        cols.append("cnt")
-    # streamed facet mode emits the composed value term itself (metrics
-    # excepted: its values decode in-kernel and only per-bucket sums
-    # leave the task)
-    if facet_prefixes and agg != "metrics":
-        cols.append("term")
-    return cols
+    frames are built from."""
+    return list(_AGG_COLUMNS.get(agg, ("pid", "doc_id", "score")))
+
+
+def _agg_spec(**kw) -> dict:
+    """An agg op's reducer spec: `kernel_frame`'s agg keyword arguments
+    (k, bucketing, facet value list or prefixes, tuple specs), defaults
+    filled in."""
+    spec = {
+        "k": 0, "bucket_us": 0, "bucket_origin_us": 0, "bucket_count": 0,
+        "facet_terms": None, "facet_prefixes": None, "tuple_specs": None,
+    }
+    spec.update(kw)
+    return spec
 
 
 def _task_dispatch(kernel, by: str | None):
@@ -461,8 +503,8 @@ def _hits_of(matches: np.ndarray, postings: dict, terms: list):
     concatenated searchsorted pass over every value's postings instead
     of a per-value Python loop (at hundreds of values the loop overhead
     dominates). Positions let callers reuse match-aligned arrays
-    (timestamps, buckets) with plain fancy indexing. Serves the agg
-    kernel and the serving node's facet ops alike."""
+    (timestamps, buckets) with plain fancy indexing. Serves every facet
+    reducer, on both routes."""
     arrs, vidx = [], []
     for i, t in enumerate(terms):
         c = postings.get(t)
@@ -539,312 +581,199 @@ def _interp_buckets(
     return [(int(b) * bucket_us, float(v)) for b, v in zip(full, iv)]
 
 
-def _make_kernel(
-    tree,
-    *,
-    k: int,
-    pid_counts: dict,
-    expansions: dict,
-    agg: str,
-    time_spec: tuple | None = None,
-    removed_map: dict | None = None,
-    bucket_us: int = 0,
-    bucket_origin_us: int = 0,
-    bucket_count: int = 0,
-    facet_terms: list | None = None,
-    facet_values: list | None = None,
-    facet_terms2: list | None = None,
-    facet_terms3: list | None = None,
-    tuple_specs: list | None = None,
-    facet_prefixes: list | None = None,
-):
-    """Build the per-pid match-set aggregation kernel (closure ships to
-    executors with the task -- all members are small). It never scores
-    and never ranks: every top-k search runs `_make_composite_kernel`.
+def _times_of(matches: np.ndarray, times: dict) -> np.ndarray:
+    """warc_us per sorted composite id, from per-pid docID -> warc_us
+    arrays: the one id -> time lookup of both routes. Pid runs are
+    contiguous, so one sliced fancy-index per pid, never a full-array
+    mask per pid (at 3k pids x millions of matches the mask loop is the
+    bottleneck, not the decode)."""
+    ts = np.empty(matches.size, dtype=np.int64)
+    if not matches.size:
+        return ts
+    pids = matches >> 32
+    docs = matches & 0xFFFFFFFF
+    change = (np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()
+    for s, e in zip([0, *change], [*change, matches.size]):
+        ts[s:e] = times[int(pids[s])][docs[s:e]]
+    return ts
 
-    `agg` picks the reduction over one pid's match set: "count" emits
-    one (pid, 0, match_count) row; "waveform" emits one (pid,
-    bucket_index, count) row per `bucket_us` bucket, timestamps resolved
-    from the pid's own 't' time-index rows inside the same task -- the
-    analytics-plugin waveform (Analytics.java:164-183 ANDs the
-    constrained filter with per-bucket time bitmaps; here matched docIDs
-    index the pid's time array and histogram); "distincts", "aggregate",
-    "waveforms", "metrics", "pairs" and "stumptown" are the facet and
-    stream-page reductions documented inline.
 
-    `facet_prefixes` switches the distincts/aggregate/waveforms/metrics
-    facet modes from a driver-enumerated `facet_terms` LIST to streamed
-    prefix enumeration: the kernel identifies a task's facet terms by
-    composed-term prefix among its own posting rows and emits them as a
-    `term` string column, so the full (uncapped) value space of a field
-    flows through the exchange without EVER materializing a value list
-    on the driver -- the Spark rendering of Distincts.gatherDirect
-    streaming the whole term range (Distincts.java:69-140). At 100 TB a
-    `user`/`guid` facet has millions of values; this path's driver
-    footprint stays O(result), not O(value space).
+def _value_hits(matches: np.ndarray, postings: dict, spec: dict):
+    """(facet terms, value_idx, position-into-matches) of every facet
+    posting inside the match set. The terms are the spec's list or, in
+    streamed facet mode (`facet_prefixes`), the prefix-matching terms
+    among the decoded postings themselves -- sorted, so value order
+    (composed-term order) is deterministic. Streamed mode lets a field's
+    whole (uncapped) value space flow through the exchange without ever
+    materializing a value list on the driver, the Spark rendering of
+    Distincts.gatherDirect streaming the whole term range
+    (Distincts.java:69-140): the driver stays O(result), not O(value
+    space)."""
+    terms = spec["facet_terms"]
+    if terms is None:
+        pfx = tuple(spec["facet_prefixes"] or ())
+        terms = sorted(t for t in postings if t.startswith(pfx))
+    return (terms, *_hits_of(matches, postings, terms))
 
-    `time_spec=(t0_us, t1_us, pid_lo, pid_hi)` makes the kernel resolve
-    a boundary pid's exact [lo, hi) docID interval from its 't'
-    time-index rows inside the same job (LabTimeIndex getClosestId,
-    LabTimeIndex.java:191-208). Postings decode through `_decode_rows`
-    and the match set comes from the shared `_evaluate`, both over the
-    pid's local docIDs as pid 0."""
-    import pandas as pd
 
-    has_all = "all" in _tree_tags(tree)
-    fpfx = tuple(facet_prefixes) if facet_prefixes else None
-    out_cols = _kernel_columns(agg, facet_prefixes)
+def _term_col(terms: list, idx: np.ndarray) -> np.ndarray:
+    return np.array([terms[i] for i in idx.tolist()], dtype=object)
 
-    def empty() -> "pd.DataFrame":
-        return pd.DataFrame(columns=out_cols)
 
-    def facet_keys(ids_out: dict) -> list:
-        """Streamed facet enumeration: THIS task's facet terms are the
-        prefix-matching terms among its own decoded posting rows --
-        sorted so value order (composed-term order) is deterministic."""
-        return sorted(t for t in ids_out if t.startswith(fpfx))
+# -- agg reducers ------------------------------------------------------------
+# One per agg mode, run by both routes: the composite kernel on a task's
+# match set and the serving node on the query's. Each takes the sorted
+# composite (pid << 32 | doc_id) match set, the decoded postings map
+# (term -> sorted composite ids), `times` (sorted composite ids ->
+# warc_us) and the op's spec, and returns {column: ndarray} with the
+# mode's `_AGG_COLUMNS`. Facet values leave as composed term strings.
 
-    def bucket_of(warc_vals: np.ndarray):
-        return _bucket_counts(
-            warc_vals, bucket_us, bucket_origin_us, bucket_count
-        )
 
-    def value_hits(ids: np.ndarray, ids_out: dict):
-        """(facet terms, value_idx, position-into-ids) of every facet
-        posting inside the match set, plus per-value hit counts."""
-        fts = facet_keys(ids_out) if fpfx is not None else (facet_terms or [])
-        vi, pi = _hits_of(ids, ids_out, fts)
-        return fts, vi, pi, np.bincount(vi, minlength=len(fts))
+def _reduce_count(matches, postings, times, spec) -> dict:
+    """The match count (retrieval without ranking)."""
+    return {"cnt": np.array([matches.size], dtype=np.int64)}
 
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pid = int(pdf["pid"].iloc[0])
-        rk = pdf["rk"].to_numpy()
-        trows = pdf[rk == "t"]
-        xrows = pdf[rk == "x"]  # unpinned tombstones ride along
-        rem = (
-            np.unique(xrows["first_doc"].to_numpy().astype(np.int64))
-            if len(xrows)
-            else removed_map.get(pid) if removed_map is not None
-            else None
-        )
-        rows = pdf[rk == "p"]  # 'z' marker rows carry no postings
-        if rows.empty and not has_all:
-            return empty()
-        # the pid's time array, decoded once: it serves both the
-        # boundary interval and every time-bucketing agg mode
-        warc = (
-            _decode_times(trows["first_doc"], trows["ids_bin"])
-            if len(trows) else None
-        )
-        bounds: dict = {}
-        if time_spec is not None and warc is not None:
-            t0_us, t1_us, pid_lo, pid_hi = time_spec
-            if not pid_lo < pid < pid_hi:  # interior pids are unbounded
-                bounds = {0: _doc_interval(warc, t0_us, t1_us)}
-        if bounds:
-            rows = _bounded_rows(rows, {pid: bounds[0]})
-        dec, term_pos = _decode_rows(rows.assign(pid=0))
-        ids_out = {t: v[0] for t, v in dec.items()}
-        universe = (
-            _universe([0], {0: pid_counts.get(pid, 0)}, bounds)
-            if has_all else np.empty(0, dtype=np.int64)
-        )
-        ids, _ = _evaluate(
-            tree, ids_out, ids_out, ids_out, expansions, universe,
-            term_pos, bounds, rem, [], {}, 1.0, False,
-        )
 
-        if agg == "aggregate":
-            # stream-page gather: per facet value, this pid's newest
-            # matching doc (max docID -- docIDs are time-ordered) and
-            # its match count (AggregateCounts.java distinct-latest
-            # + count); one row per present value leaves the task
-            fts, _vi, pi, cnt = value_hits(ids, ids_out)
-            present = np.flatnonzero(cnt)
-            # hits are grouped by value, positions ascending: a value's
-            # newest doc is its last hit
-            last = np.cumsum(cnt[present]) - 1
-            out = {
-                "pid": pid,
-                "doc_id": ids[pi[last]].astype(np.int64),
-                "score": present.astype(np.float64),
-                "cnt": cnt[present].astype(np.int64),
-            }
-            if fpfx is not None:
-                out["score"] = np.zeros(present.size, dtype=np.float64)
-                out["term"] = [fts[i] for i in present.tolist()]
-            return pd.DataFrame(out)
-        if agg == "pairs":
-            # feature-tuple doc-co-occurrence counts over the match
-            # set -- the counting core of gatherFeatures
-            # (MiruAggregateUtil.gatherFeatures:77-291: per answer
-            # activity, stream the feature fields' terms and count
-            # each observed combination). Only (packed tuple, count)
-            # rows leave the task; the cross product is per-DOC
-            # (multi-valued fields expand), never across docs.
-            # `tuple_specs` batches SEVERAL features into this one
-            # pass (strut's catwalk features): each spec owns a
-            # disjoint int64 key range via its offset, so every
-            # feature's counts ride the same exchange.
-            if tuple_specs is not None:
-                specs = tuple_specs
-            else:
-                groups = [facet_terms or [], facet_terms2 or []]
-                if facet_terms3:
-                    groups.append(facet_terms3)
-                specs = [(0, groups)]
-            all_k, all_c = [], []
-            for off, groups in specs:
-                keys, counts = _tuple_counts(ids, ids_out, groups)
-                if keys.size:
-                    all_k.append(keys + off)
-                    all_c.append(counts)
-            z = np.empty(0, dtype=np.int64)
-            return pd.DataFrame(
-                {
-                    "pid": pid,
-                    "doc_id": np.concatenate(all_k) if all_k else z,
-                    "score": (
-                        np.concatenate(all_c) if all_c else z
-                    ).astype(np.float64),
-                }
-            )
-        if agg == "waveforms":
-            # per-facet-value waveforms in ONE pass (trending's
-            # batched shape: TrendingInjectable computes an
-            # analytics waveform per distinct term) -- emits
-            # (pid, bucket, value_idx, count) rows
-            if warc is None or ids.size == 0:
-                return empty()
-            fts, _vi, pi, cnt = value_hits(ids, ids_out)
-            present = np.flatnonzero(cnt)
-            if not present.size:
-                return empty()
-            ends = np.cumsum(cnt[present]).tolist()
-            hit_ts = warc[ids[pi]]
-            o_b, o_c, o_v = [], [], []
-            o_t: list = []
-            for i, s, e in zip(present.tolist(), [0] + ends[:-1], ends):
-                ub, bc = bucket_of(hit_ts[s:e])
-                o_b.append(ub)
-                o_c.append(bc)
-                o_v.append(np.full(ub.size, i, dtype=np.int64))
-                o_t.extend([fts[i]] * ub.size)
-            out = {
-                "pid": pid,
-                "doc_id": np.concatenate(o_b),
-                "score": np.concatenate(o_v).astype(np.float64),
-                "cnt": np.concatenate(o_c).astype(np.int64),
-            }
-            if fpfx is not None:
-                out["score"] = np.zeros(len(o_t), dtype=np.float64)
-                out["term"] = o_t
-            return pd.DataFrame(out)
-        if agg == "metrics":
-            # per-bucket SUM of a numeric field over the match set
-            # (Metrics.metricingSum, Metrics.java:82-98: sum over
-            # bit-slice bitmaps of multiplier x boundedCardinality;
-            # here the decomposition is per value-term: sum over
-            # composed numeric terms of value x |match AND postings|)
-            if warc is None or ids.size == 0:
-                return empty()
-            acc: dict = {}
-            if fpfx is not None:
-                # streamed numeric facet: the value is decodable
-                # from the composed term itself (order-preserving
-                # encoding, fields.encode_num) -- no driver list
-                from ..fields import FIELD_SEP, decode_num
+def _reduce_waveform(matches, postings, times, spec) -> dict:
+    """Per-bucket match counts -- the analytics waveform
+    (Analytics.java:164-183 ANDs the constrained filter with per-bucket
+    time bitmaps; here matched ids index their pids' time arrays and
+    histogram)."""
+    b, ok = _bucket_index(times(matches), spec)
+    ub, cnt = np.unique(b if ok is None else b[ok], return_counts=True)
+    return {"bucket": ub, "cnt": cnt.astype(np.int64)}
 
-                fts = facet_keys(ids_out)
-                fvs = [
-                    float(decode_num(t.split(FIELD_SEP, 1)[1]))
-                    for t in fts
-                ]
-            else:
-                fts, fvs = facet_terms or [], facet_values or []
-            # per-term loop on purpose: the float sum order is part of
-            # route identity with the serving node's metrics
-            for t, v in zip(fts, fvs):
-                c = ids_out.get(t)
-                if c is None or not c.size:
-                    continue
-                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
-                inter = c[ids[pos] == c]
-                if not inter.size:
-                    continue
-                ub, cnt = bucket_of(warc[inter])
-                for b, n in zip(ub, cnt):
-                    acc[int(b)] = acc.get(int(b), 0.0) + v * int(n)
-            return pd.DataFrame(
-                {
-                    "pid": pid,
-                    "doc_id": np.array(sorted(acc), dtype=np.int64),
-                    "score": np.array(
-                        [acc[b] for b in sorted(acc)], dtype=np.float64
-                    ),
-                }
-            )
-        if agg == "distincts":
-            # |match AND facet-term postings| per facet value -- the
-            # distincts gatherer (DistinctsQuery filter +
-            # gatherDistinctsForField) as per-pid intersection counts;
-            # only (value_idx, count) rows leave the task
-            fts, _vi, _pi, cnt = value_hits(ids, ids_out)
-            present = np.flatnonzero(cnt)
-            out = {
-                "pid": pid,
-                "doc_id": present.astype(np.int64),
-                "score": cnt[present].astype(np.float64),
-            }
-            if fpfx is not None:
-                out["doc_id"] = np.zeros(present.size, dtype=np.int64)
-                out["term"] = [fts[i] for i in present.tolist()]
-            return pd.DataFrame(out)
-        if agg == "stumptown":
-            # ONE pass over this pid's match set yields BOTH outputs
-            # (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
-            # activities off the answer's descending iterator + the
-            # same answer's boundedCardinalities waveform): bucket
-            # rows tagged pid=-1, newest-k candidate rows with the
-            # real pid (score 0, TIME semantics -- docIDs are
-            # time-ordered within a pid)
-            if ids.size == 0:
-                return empty()
-            out_pid: list = []
-            out_doc: list = []
-            out_sc: list = []
-            if warc is not None:
-                b_idx, cnt = bucket_of(warc[ids])
-                out_pid.extend([-1] * b_idx.size)
-                out_doc.extend(b_idx.tolist())
-                out_sc.extend(cnt.astype(np.float64).tolist())
-            newest = ids[-k:] if k > 0 else ids[:0]
-            out_pid.extend([pid] * newest.size)
-            out_doc.extend(newest.tolist())
-            out_sc.extend([0.0] * newest.size)
-            return pd.DataFrame(
-                {
-                    "pid": np.array(out_pid, dtype=np.int64),
-                    "doc_id": np.array(out_doc, dtype=np.int64),
-                    "score": np.array(out_sc, dtype=np.float64),
-                }
-            )
-        if agg == "waveform":
-            if warc is None or ids.size == 0:
-                return empty()
-            b_idx, cnt = bucket_of(warc[ids])
-            return pd.DataFrame(
-                {
-                    "pid": pid,
-                    "doc_id": b_idx.astype(np.int64),
-                    "score": cnt.astype(np.float64),
-                }
-            )
-        return pd.DataFrame(
-            {"pid": [pid], "doc_id": [0], "score": [float(ids.size)]}
-        )
 
-    return kernel
+def _reduce_stumptown(matches, postings, times, spec) -> dict:
+    """The waveform AND the k newest matches from one pass over the
+    match set (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
+    activities off the answer's descending iterator + the same answer's
+    boundedCardinalities). Newest is the largest ids: pids are time
+    buckets and docIDs are minted time-ordered within a pid."""
+    wf = _reduce_waveform(matches, postings, times, spec)
+    k = spec["k"]
+    newest = matches[-k:] if k > 0 else matches[:0]
+    z = np.zeros(newest.size, dtype=np.int64)
+    return {
+        "bucket": np.concatenate((wf["bucket"], z)),
+        "cnt": np.concatenate((wf["cnt"], z)),
+        "newest": np.concatenate(
+            (np.full(wf["bucket"].size, -1, dtype=np.int64), newest)
+        ),
+    }
+
+
+def _reduce_distincts(matches, postings, times, spec) -> dict:
+    """|match AND postings(value)| per present facet value -- the
+    distincts gatherer (DistinctsQuery filter + gatherDistinctsForField)
+    as intersection counts."""
+    terms, vi, _pi = _value_hits(matches, postings, spec)
+    cnt = np.bincount(vi, minlength=len(terms))
+    present = np.flatnonzero(cnt)
+    return {
+        "term": _term_col(terms, present),
+        "cnt": cnt[present].astype(np.int64),
+    }
+
+
+def _reduce_aggregate(matches, postings, times, spec) -> dict:
+    """Per present facet value, its match count and its newest matching
+    id (AggregateCounts.java distinct-latest + count). Hits are grouped
+    by value with positions ascending, so a value's newest doc is its
+    last hit."""
+    terms, vi, pi = _value_hits(matches, postings, spec)
+    cnt = np.bincount(vi, minlength=len(terms))
+    present = np.flatnonzero(cnt)
+    last = np.cumsum(cnt[present]) - 1
+    return {
+        "term": _term_col(terms, present),
+        "cnt": cnt[present].astype(np.int64),
+        "latest": matches[pi[last]],
+    }
+
+
+def _reduce_waveforms(matches, postings, times, spec) -> dict:
+    """Per (facet value, bucket) match counts in one pass -- trending's
+    batched shape (TrendingInjectable computes an analytics waveform per
+    distinct term)."""
+    terms, vi, pi = _value_hits(matches, postings, spec)
+    if vi.size:
+        b, ok = _bucket_index(times(matches), spec)
+        if ok is not None:
+            keep = ok[pi]
+            vi, pi = vi[keep], pi[keep]
+        hb = b[pi]
+        order = np.lexsort((hb, vi))
+        vi, hb = vi[order], hb[order]
+        first = np.ones(vi.size, dtype=bool)
+        first[1:] = (vi[1:] != vi[:-1]) | (hb[1:] != hb[:-1])
+        s = np.flatnonzero(first)
+        vi, hb = vi[s], hb[s]
+        cnt = np.diff(np.append(s, first.size))
+    else:
+        hb = cnt = vi
+    return {"term": _term_col(terms, vi), "bucket": hb, "cnt": cnt}
+
+
+def _reduce_metrics(matches, postings, times, spec) -> dict:
+    """Per bucket with matches: the SUM of a numeric field over its facet
+    hits, the number of hits (a bucket reports iff one hit it -- a sum of
+    exactly 0 still reports) and its match count (the avg denominator,
+    metricingAvg's rawCardinality). Metrics.metricingSum
+    (Metrics.java:82-98) sums multiplier x boundedCardinality over bit
+    slices; here the value decodes from each composed term
+    (fields.encode_num is order-preserving) and the sum runs over value
+    terms of value x |match AND postings AND bucket|."""
+    from ..fields import FIELD_SEP, decode_num
+
+    b, ok = _bucket_index(times(matches), spec)
+    terms, vi, pi = _value_hits(matches, postings, spec)
+    if ok is not None:
+        keep = ok[pi]
+        vi, pi = vi[keep], pi[keep]
+        b_all = b[ok]
+    else:
+        b_all = b
+    ub, inv = np.unique(b_all, return_inverse=True)
+    hb = np.searchsorted(ub, b[pi])
+    vals = np.zeros(len(terms), dtype=np.float64)
+    for i in np.unique(vi).tolist():
+        vals[i] = decode_num(terms[i].split(FIELD_SEP, 1)[1])
+    return {
+        "bucket": ub,
+        "sum": np.bincount(hb, weights=vals[vi], minlength=ub.size),
+        "hits": np.bincount(hb, minlength=ub.size).astype(np.int64),
+        "cnt": np.bincount(inv, minlength=ub.size).astype(np.int64),
+    }
+
+
+def _reduce_pairs(matches, postings, times, spec) -> dict:
+    """Feature-tuple doc-co-occurrence counts over the match set -- the
+    counting core of gatherFeatures (MiruAggregateUtil.gatherFeatures
+    :77-291: per answer activity, count each observed combination of
+    the feature fields' terms). The cross product is per DOC
+    (multi-valued fields expand), never across docs. `tuple_specs`
+    batches several features into one pass (strut's catwalk features):
+    each (offset, groups) spec owns a disjoint packed-key range."""
+    keys = [np.empty(0, dtype=np.int64)]
+    cnts = [np.empty(0, dtype=np.int64)]
+    for off, groups in spec["tuple_specs"] or ():
+        k, c = _tuple_counts(matches, postings, groups)
+        keys.append(k + off)
+        cnts.append(c.astype(np.int64))
+    return {"key": np.concatenate(keys), "cnt": np.concatenate(cnts)}
+
+
+_REDUCERS = {
+    "count": _reduce_count,
+    "waveform": _reduce_waveform,
+    "stumptown": _reduce_stumptown,
+    "distincts": _reduce_distincts,
+    "aggregate": _reduce_aggregate,
+    "waveforms": _reduce_waveforms,
+    "metrics": _reduce_metrics,
+    "pairs": _reduce_pairs,
+}
 
 
 def _make_composite_kernel(
@@ -859,40 +788,62 @@ def _make_composite_kernel(
     idf_map: dict | None,
     pid_counts: dict,
     strategy: str = "tfidf",
+    agg: str | None = None,
+    spec: dict | None = None,
 ):
-    """The distributed top-k kernel, for every search shape: decode a
-    task's rows ONCE into composite (pid << 32 | doc_id) arrays and run
-    ONE `_evaluate` + ONE top-k over all of the task's pids -- the same
-    evaluator call the serving node makes (_search_local), so scores are
-    bit-identical to it (same per-doc contributions in the same
-    sorted-term order), and the task's k best rows by (score desc, pid,
-    doc_id) are exactly its contribution to the global TakeOrdered
-    merge. With strategy "time" nothing is scored and the task's k
-    largest ids (newest first, FullText.collectTime:222-251) go out with
-    score 0.
+    """The distributed kernel, for every search shape and every agg mode:
+    decode a task's rows ONCE into composite (pid << 32 | doc_id) arrays
+    and run ONE `_evaluate` over all of the task's pids -- the same
+    evaluator call the serving node makes (_search_local,
+    _local_match_ids).
+
+    Searches then take ONE top-k: scores are bit-identical to the
+    serving node's (same per-doc contributions in the same sorted-term
+    order), and the task's k best rows by (score desc, pid, doc_id) are
+    exactly its contribution to the global TakeOrdered merge. With
+    strategy "time" nothing is scored and the task's k largest ids
+    (newest first, FullText.collectTime:222-251) go out with score 0.
+    With `agg` nothing is scored either: the task's match set goes to
+    the mode's reducer (`_REDUCERS`, the one the serving node runs, with
+    the `spec` from `_agg_spec`) and its columns leave the task.
 
     Row kinds: 'p' posting blocks (phrase members carry pos_bin);
-    't' time-index rows of the boundary pids, which resolve each one's
-    exact [lo, hi) interval and drop blocks outside it before decode;
-    'z' match-all markers, one per relevant pid, which span the
-    `pid_counts` universe; 'x' unpinned tombstones (doc_id in
-    first_doc), which join the pinned sorted composite `removed_comp`."""
+    't' time-index rows -- a boundary pid's resolve its exact [lo, hi)
+    interval and drop its blocks outside it before decode, and in the
+    time-bucketing agg modes every relevant pid's ride along, decoded
+    only for pids with matches; 'z' match-all markers, one per relevant
+    pid, which span the `pid_counts` universe; 'x' unpinned tombstones
+    (doc_id in first_doc), which join the pinned sorted composite
+    `removed_comp`."""
     import pandas as pd
 
     has_all = "all" in _tree_tags(tree)
-    score = strategy != "time"
+    score = agg is None and strategy != "time"
+    reduce = _REDUCERS[agg] if agg is not None else None
+    out_cols = _kernel_columns(agg)
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         rk = pdf["rk"].to_numpy()
         pids = pdf["pid"].to_numpy().astype(np.int64)
+        trows = pdf[rk == "t"]
+        tgroups = (
+            {int(p): g for p, g in trows.groupby("pid", sort=False)}
+            if len(trows) else {}
+        )
+        warcs: dict = {}
+
+        def warc(p: int) -> np.ndarray:  # decoded on first use
+            if p not in warcs:
+                g = tgroups[p]
+                warcs[p] = _decode_times(g["first_doc"], g["ids_bin"])
+            return warcs[p]
+
         bounds: dict = {}
         if time_spec is not None:
-            t0_us, t1_us, _plo, _phi = time_spec
-            for p, tr in pdf[rk == "t"].groupby("pid", sort=True):
-                bounds[int(p)] = _doc_interval(
-                    _decode_times(tr["first_doc"], tr["ids_bin"]),
-                    t0_us, t1_us,
-                )
+            t0_us, t1_us, pid_lo, pid_hi = time_spec
+            for p in sorted(tgroups):
+                if not pid_lo < p < pid_hi:  # interior pids are unbounded
+                    bounds[p] = _doc_interval(warc(p), t0_us, t1_us)
         rem = removed_comp
         x = rk == "x"
         if x.any():
@@ -906,22 +857,30 @@ def _make_composite_kernel(
         )
         rows = _bounded_rows(pdf[rk == "p"], bounds)
         dec, term_pos = _decode_rows(rows)
-        if idf_map is not None:
-            idf = idf_map
-        else:
+        cmap = {t: v[0] for t, v in dec.items()}
+        idf = idf_map
+        if score and idf is None:
             idf = {
                 t: bm25_idf(n_docs, int(d))
                 for t, d in zip(rows["term"], rows["df"])
                 if not pd.isna(d)
             }
         matches, scores = _evaluate(
-            tree,
-            {t: v[0] for t, v in dec.items()},
+            tree, cmap,
             {t: v[1] for t, v in dec.items()},
             {t: v[2] for t, v in dec.items()},
             expansions, universe, term_pos, bounds, rem, scoring_terms,
-            idf, avgdl, score,
+            idf or {}, avgdl, score,
         )
+        if reduce is not None:
+            out = reduce(
+                matches, cmap,
+                lambda ids: _times_of(
+                    ids, {p: warc(p) for p in np.unique(ids >> 32).tolist()}
+                ),
+                spec,
+            )
+            return pd.DataFrame({c: out[c] for c in out_cols})
         order = (
             np.lexsort((matches, -scores)) if score
             else np.arange(matches.size)[::-1]
@@ -1568,26 +1527,26 @@ class SearchEngine(FeatureOpsMixin):
         bucket_origin_us: int = 0,
         bucket_count: int = 0,
         facet_terms: list | None = None,
-        facet_values: list | None = None,
-        facet_terms2: list | None = None,
-        facet_terms3: list | None = None,
         tuple_specs: list | None = None,
         facet_prefixes: list | None = None,
     ) -> DataFrame:
-        """Build the distributed frame for a query: one mapInPandas
-        kernel pass over the pruned posting blocks. Without `agg` it is
-        `_make_composite_kernel` for every search shape, yielding each
-        task's (pid, doc_id, score) top-k by score, or its newest k with
+        """Build the distributed frame for a query: one mapInPandas pass
+        of `_make_composite_kernel` over the pruned posting blocks, ONE
+        kernel call per task. Without `agg` each task yields its (pid,
+        doc_id, score) top-k by score, or its newest k with
         `strategy="time"`; `search` and `newest` collect the global
         top-k. Plan tests assert its physical shape.
 
-        `agg="count"|"waveform"|"distincts"|...` switches to the per-pid
-        match-set aggregation kernel (`_make_kernel`): no term scores,
-        so EVERY term sheds its tf/dl blobs before the exchange;
-        "waveform" ships every relevant pid's 't' rows so bucketing
-        happens in-task; "distincts" fetches `facet_terms` postings
-        alongside the query's and emits only (value_idx, count) rows per
-        task."""
+        `agg="count"|"waveform"|"distincts"|...` runs that mode's reducer
+        (`_REDUCERS`) over each task's match set instead -- the same
+        reducer the serving node runs -- with the agg keyword arguments
+        as its spec (`_agg_spec`); tasks emit the mode's
+        `_kernel_columns`, merged by `_merged`. No term scores, so EVERY
+        term sheds its tf/dl blobs before the exchange; the
+        time-bucketing modes ship every relevant pid's 't' rows so
+        bucketing happens in-task; facet modes fetch the `facet_terms`
+        list's or the `facet_prefixes` ranges' postings alongside the
+        query's and emit only per-value rows."""
         p = prep or self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
@@ -1595,16 +1554,13 @@ class SearchEngine(FeatureOpsMixin):
         expansions = p["expansions"]
         scoring_terms = [] if agg is not None else p["scoring_terms"]
         fetch_terms = p["fetch_terms"]
-        facet_groups: list[list] = []
-        if agg in ("distincts", "metrics", "aggregate", "waveforms",
-                   "pairs"):
-            for g in (facet_terms, facet_terms2, facet_terms3):
-                if g:
-                    facet_groups.append(sorted(set(g)))
-            for _off, groups in tuple_specs or []:
-                for g in groups:
-                    if g:
-                        facet_groups.append(sorted(set(g)))
+        facet_groups = [
+            sorted(set(g))
+            for g in [facet_terms, *(
+                g for _off, groups in tuple_specs or [] for g in groups
+            )]
+            if g
+        ]
         has_all_node = p["has_all_node"]
         relevant_pids = p["relevant_pids"]
         time_spec = p["time_spec"]
@@ -1705,10 +1661,11 @@ class SearchEngine(FeatureOpsMixin):
             blocks = blocks.join(F.broadcast(tstats), "term", "left")
 
         blocks = _pad_cols(blocks, kcols, "p")
-        if agg in ("waveform", "metrics", "waveforms", "stumptown"):
+        if agg in _TIME_AGGS:
             # every relevant pid's time rows ride to its kernel task so
             # matched docIDs bucket in-task (boundary pids reuse the same
-            # rows for their exact [lo, hi) interval)
+            # rows for their exact [lo, hi) interval); a pid without
+            # matches never decodes them
             ti = self.timeindex
             if p["pid_range"] is not None:
                 pid_lo, pid_hi = p["pid_range"]
@@ -1775,9 +1732,8 @@ class SearchEngine(FeatureOpsMixin):
         # repartition bounded by the pids touched
         plain = (
             not boundary_pids
-            # waveform/metrics/waveforms/stumptown union time-index rows
-            and agg not in ("waveform", "metrics", "waveforms",
-                            "stumptown")
+            # the time-bucketing agg modes union time-index rows
+            and agg not in _TIME_AGGS
             and not (has_all_node and relevant_pids)
             and not unpinned_removals
             # phrase queries read the uncached pos-bearing view, which
@@ -1796,35 +1752,19 @@ class SearchEngine(FeatureOpsMixin):
             )
             src = blocks.repartition(nparts, "pid")
         out_schema = ", ".join(
-            f"{c} {_OUT_TYPES[c]}"
-            for c in _kernel_columns(agg, facet_prefixes)
+            f"{c} {_OUT_TYPES[c]}" for c in _kernel_columns(agg)
         )
-        if agg is None:
-            kernel = _make_composite_kernel(
-                tree, scoring_terms, self.n_docs, self.avgdl, k,
-                expansions, time_spec, self._removed_comp, idf_map,
-                self.pid_counts, strategy,
-            )
-            return src.mapInPandas(_task_dispatch(kernel, None), out_schema)
-        kernel = _make_kernel(
-            tree,
-            k=k,
-            pid_counts=self.pid_counts,
-            expansions=expansions,
-            agg=agg,
-            time_spec=time_spec,
-            removed_map=self._removed_map,
-            bucket_us=bucket_us,
-            bucket_origin_us=bucket_origin_us,
-            bucket_count=bucket_count,
-            facet_terms=facet_terms,
-            facet_values=facet_values,
-            facet_terms2=facet_terms2,
-            facet_terms3=facet_terms3,
-            tuple_specs=tuple_specs,
-            facet_prefixes=facet_prefixes,
+        kernel = _make_composite_kernel(
+            tree, scoring_terms, self.n_docs, self.avgdl, k, expansions,
+            time_spec, self._removed_comp, idf_map, self.pid_counts,
+            strategy, agg=agg,
+            spec=_agg_spec(
+                k=k, bucket_us=bucket_us, bucket_origin_us=bucket_origin_us,
+                bucket_count=bucket_count, facet_terms=facet_terms,
+                tuple_specs=tuple_specs, facet_prefixes=facet_prefixes,
+            ),
         )
-        return src.mapInPandas(_task_dispatch(kernel, "pid"), out_schema)
+        return src.mapInPandas(_task_dispatch(kernel, None), out_schema)
 
     # -- serving-node local path -------------------------------------------
     def _segment_files(self) -> list[str]:
@@ -2037,23 +1977,20 @@ class SearchEngine(FeatureOpsMixin):
             )
         return est
 
-    def _route_facet_local(
-        self, prep: dict, facet_terms, local, pinned: bool
-    ) -> bool:
-        """Serving-node vs distributed route for one facet op, the
-        single copy of the budget rule every facet family member used
-        to repeat: facet postings ride the match pass, so they count
-        against the serving budget too; an unpinned dictionary always
-        distributes (the streamed facet kernel needs no value list)."""
-        eligible = pinned and self._local_eligible(prep)
+    def _route(self, prep: dict, local, facet_terms=None) -> bool:
+        """Serving node (True) or distributed kernel (False) for one op
+        -- the single copy of the routing rule. `local=None` auto-routes:
+        the serving node when the query is eligible (`_local_eligible`)
+        and its estimated postings plus those of `facet_terms` (facet
+        postings ride the match pass, so they count against the serving
+        budget too) fit `local_max_postings`. Forcing `local=True` on an
+        ineligible query (unpinned dictionary or tombstones, oversized
+        posting volume) fails loudly instead of answering wrong."""
+        eligible = self._local_eligible(prep)
         if local is None:
-            est_facets = sum(
-                (self._term_df or {}).get(t, 0)
-                for t in facet_terms or []
-            )
-            return (
-                eligible
-                and self._estimated_postings(prep) + est_facets
+            return eligible and (
+                self._estimated_postings(prep)
+                + sum(self._term_df.get(t, 0) for t in facet_terms or ())
                 <= self.local_max_postings
             )
         if local and not eligible:
@@ -2292,7 +2229,7 @@ class SearchEngine(FeatureOpsMixin):
     def _local_match_ids(self, prep: dict) -> np.ndarray:
         """Exact composite (pid << 32 | doc_id) match set of a query on
         the serving node -- `_search_local`'s evaluation without
-        scoring. Feeds `count`, `waveform` and the facet ops."""
+        scoring. Feeds every agg reducer the serving node runs (`_agg`)."""
         cmap, fmap, dmap, evaluate = self._local_eval(prep, score=False)
         return evaluate(cmap, fmap, dmap)[0]
 
@@ -2368,20 +2305,63 @@ class SearchEngine(FeatureOpsMixin):
             out[p] = ((docs[sel], urls, warcs[sel]), sel.size)
         return out
 
-    def _times_of(self, matches: np.ndarray, times: dict) -> np.ndarray:
-        """warc_us per matched composite id. Matches are sorted, so pid
-        runs are contiguous -- one sliced fancy-index per pid, never a
-        full-array mask per pid (at 3k pids x millions of matches the
-        mask loop is the bottleneck, not the decode)."""
-        pids = (matches >> 32).astype(np.int64)
-        docs = (matches & 0xFFFFFFFF).astype(np.int64)
-        ts = np.empty(matches.size, dtype=np.int64)
-        change = np.flatnonzero(np.diff(pids)) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [pids.size]))
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            ts[s:e] = times[int(pids[s])][docs[s:e]]
-        return ts
+    def _match_times(self, ids: np.ndarray) -> np.ndarray:
+        """warc_us per sorted composite id from the cached per-pid time
+        arrays -- the serving node's `times` lookup for the reducers."""
+        return _times_of(ids, self._pid_times(np.unique(ids >> 32)))
+
+    def _agg(self, prep: dict, agg: str, local: bool, shape=None, **spec):
+        """Run one agg mode's reducer (`_REDUCERS`) on the chosen route
+        and return its {column: ndarray}. Serving node: the query's
+        match set, the facet postings through the LRU and the cached time
+        arrays -- zero Spark jobs, no pandas. Distributed: ONE kernel
+        job; task outputs merge in Spark by the fixed column rules
+        (`_merged`), or through `shape` (frame -> frame) for an op that
+        cuts or collects differently. Either way the op's finishing step
+        reads the same columns. `spec` is `kernel_frame`'s agg keyword
+        arguments; given both a facet value list and prefixes, the
+        serving node probes the (pinned) list and the kernel streams the
+        field's values by prefix."""
+        spec = _agg_spec(**spec)
+        if spec["facet_prefixes"]:
+            spec["facet_prefixes" if local else "facet_terms"] = None
+        if local:
+            matches = self._local_match_ids(prep)
+            terms = set(spec["facet_terms"] or ())
+            for _off, groups in spec["tuple_specs"] or ():
+                terms.update(t for g in groups for t in g)
+            postings = (
+                self._postings_maps(sorted(terms), prep["pid_range"])[0]
+                if terms and matches.size else {}
+            )
+            return _REDUCERS[agg](matches, postings, self._match_times, spec)
+        frame = self.kernel_frame(None, prep=prep, agg=agg, **spec)
+        # a keyless merge over zero rows (count) yields one null row
+        rows = [
+            r for r in (shape or self._merged)(frame).collect()
+            if None not in tuple(r)
+        ]
+        return {
+            c: np.array(
+                [r[c] for r in rows], dtype=_NP_TYPES[_OUT_TYPES[c]]
+            )
+            for c in _kernel_columns(agg)
+        }
+
+    @staticmethod
+    def _merged(frame: DataFrame) -> DataFrame:
+        """Merge kernel task outputs by the fixed column rules: group by
+        the key columns, then sum or max each value column
+        (`_AGG_MERGE`) -- miru's answer mergers (analytics adds
+        waveforms, distincts adds counts)."""
+        return frame.groupBy(
+            *[c for c in frame.columns if c in _AGG_KEYS]
+        ).agg(
+            *[
+                getattr(F, _AGG_MERGE[c])(c).alias(c)
+                for c in frame.columns if c in _AGG_MERGE
+            ]
+        )
 
     def count(
         self,
@@ -2401,24 +2381,8 @@ class SearchEngine(FeatureOpsMixin):
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        if local is None:
-            local = self._local_eligible(prep)
-        elif local and not self._local_eligible(prep):
-            raise ValueError(
-                "local=True forced but this query is not eligible for "
-                "the serving-node path; use local=None for auto-routing"
-            )
-        if local:
-            return int(self._local_match_ids(prep).size)
-        row = (
-            self.kernel_frame(
-                query, k=0, locale=locale, time_range_us=time_range_us,
-                prep=prep, agg="count",
-            )
-            .agg(F.sum("score").alias("c"))
-            .collect()[0]
-        )
-        return int(row["c"] or 0)
+        cols = self._agg(prep, "count", self._route(prep, local))
+        return int(cols["cnt"].sum())
 
     def waveform(
         self,
@@ -2443,61 +2407,23 @@ class SearchEngine(FeatureOpsMixin):
         cut into N equal floor((t1-t0)/N) segments and the answer is
         DENSE (exactly N tuples, zero counts included, like the
         reference's long[N]; the remainder tail past origin + N*dur is
-        truncated exactly like its closestId edge array). Serving path:
-        zero Spark jobs (matched composite ids index the pinned-readable
-        time arrays). Distributed path: ONE job; each pid's kernel task
-        buckets its own matches against its own 't' rows, so only
-        (bucket, count) rows leave the task."""
+        truncated exactly like its closestId edge array). Both routes
+        run `_reduce_waveform`. Serving path: zero Spark jobs (matched
+        composite ids index the cached time arrays). Distributed path:
+        ONE job; each kernel task buckets its own matches against its
+        pids' 't' rows, so only (bucket, count) rows leave the task."""
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        if local is None:
-            local = self._local_eligible(prep)
-        elif local and not self._local_eligible(prep):
-            raise ValueError(
-                "local=True forced but this query is not eligible for "
-                "the serving-node path; use local=None for auto-routing"
-            )
-        if local:
-            return self._local_waveform(
-                self._local_match_ids(prep), bucket_us, origin, segments
-            )
-        rows = (
-            self.kernel_frame(
-                query, k=0, locale=locale, time_range_us=time_range_us,
-                prep=prep, agg="waveform", bucket_us=bucket_us,
-                bucket_origin_us=origin, bucket_count=segments or 0,
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("c"))
-            .orderBy("doc_id")
-            .collect()
+        cols = self._agg(
+            prep, "waveform", self._route(prep, local),
+            bucket_us=bucket_us, bucket_origin_us=origin,
+            bucket_count=segments or 0,
         )
-        return self._dense_wf(
-            {int(r["doc_id"]): int(r["c"]) for r in rows},
-            bucket_us, origin, segments,
-        )
-
-    def _local_waveform(
-        self, matches, bucket_us, origin, segments, times=None
-    ) -> list:
-        """Waveform of a serving-node composite match set: matched ids
-        index their pids' cached time arrays (`times`, when the caller
-        already holds them), then bucket and densify."""
-        if matches.size == 0:
-            return self._dense_wf({}, bucket_us, origin, segments)
-        if times is None:
-            times = self._pid_times(np.unique(matches >> 32))
-        b, c = _bucket_counts(
-            self._times_of(matches, times), bucket_us, origin,
-            segments or 0,
-        )
-        return self._dense_wf(
-            dict(zip(b.tolist(), c.tolist())), bucket_us, origin, segments
-        )
+        return self._dense_wf(cols, bucket_us, origin, segments)
 
     def _bucket_spec(
         self,
@@ -2524,16 +2450,23 @@ class SearchEngine(FeatureOpsMixin):
 
     @staticmethod
     def _dense_wf(
-        counts: dict, bucket_us: int, origin: int, segments: int | None
+        cols: dict, bucket_us: int, origin: int, segments: int | None
     ) -> list[tuple[int, int]]:
-        """Sparse epoch buckets pass through; segment mode densifies to
-        exactly N rows (the reference's long[N])."""
+        """[(bucket_start_us, count)] from a reducer's bucket/cnt
+        columns, repeated buckets summed (stumptown's unmerged task
+        rows): sparse epoch buckets pass through ascending; segment mode
+        densifies to exactly N rows (the reference's long[N])."""
+        live = cols["cnt"] > 0
+        b, inv = np.unique(cols["bucket"][live], return_inverse=True)
+        c = np.zeros(b.size, dtype=np.int64)
+        np.add.at(c, inv, cols["cnt"][live])
         if segments is None:
             return [
-                (b * bucket_us, c) for b, c in sorted(counts.items())
+                (x * bucket_us, n) for x, n in zip(b.tolist(), c.tolist())
             ]
+        have = dict(zip(b.tolist(), c.tolist()))
         return [
-            (origin + i * bucket_us, int(counts.get(i, 0)))
+            (origin + i * bucket_us, have.get(i, 0))
             for i in range(segments)
         ]
 
@@ -2559,60 +2492,33 @@ class SearchEngine(FeatureOpsMixin):
         ascending, "results": [(url, warc_ts_us, pid, doc_id)]
         newest-first}.
 
-        Serving path: zero Spark jobs -- one `_local_match_ids` pass
-        feeds both the time-bucket histogram and the top-k composite ids
-        (composite (pid << 32 | doc_id) descending IS global time order),
-        then a forward-index point gather resolves the k display rows.
-        Distributed path: ONE kernel job with `agg="stumptown"` -- each
-        pid's task emits its bucket rows (tagged pid=-1) and its own
-        newest-k candidates; only O(buckets + k) rows per task leave the
-        exchange, never the match set."""
+        Both routes run `_reduce_stumptown` (composite (pid << 32 |
+        doc_id) descending IS global time order), then a forward-index
+        point gather resolves the k display rows. Serving path: zero
+        Spark jobs. Distributed path: ONE kernel job; each task emits its
+        bucket rows and its own newest-k ids -- only O(buckets + k) rows
+        per task leave the exchange, never the match set."""
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        if local is None:
-            local = self._local_eligible(prep)
-        elif local and not self._local_eligible(prep):
-            raise ValueError(
-                "local=True forced but this query is not eligible for "
-                "the serving-node path; use local=None for auto-routing"
-            )
-        if local:
-            matches = self._local_match_ids(prep)
-            wf = self._local_waveform(matches, bucket_us, origin, segments)
-            newest = matches[::-1][: max(k, 0)]
-            rows = self._gather_rows(
-                newest >> 32,
-                newest & 0xFFFFFFFF,
-                np.zeros(newest.size, dtype=np.float64),
-            )
-        else:
-            krows = self.kernel_frame(
-                query, k=k, locale=locale, time_range_us=time_range_us,
-                prep=prep, agg="stumptown", bucket_us=bucket_us,
-                bucket_origin_us=origin, bucket_count=segments or 0,
-            ).collect()
-            buckets: dict[int, int] = {}
-            cands: list[tuple[int, int]] = []
-            for r in krows:
-                if int(r["pid"]) < 0:
-                    bkt = int(r["doc_id"])
-                    buckets[bkt] = buckets.get(bkt, 0) + int(r["score"])
-                else:
-                    cands.append((int(r["pid"]), int(r["doc_id"])))
-            wf = self._dense_wf(buckets, bucket_us, origin, segments)
-            cands.sort(reverse=True)
-            cands = cands[: max(k, 0)]
-            rows = self._gather_rows(
-                np.array([p for p, _ in cands], dtype=np.int64),
-                np.array([d for _, d in cands], dtype=np.int64),
-                np.zeros(len(cands), dtype=np.float64),
-            )
+        cols = self._agg(
+            prep, "stumptown", self._route(prep, local),
+            shape=lambda frame: frame,  # newest keeps the k largest ids
+            k=k, bucket_us=bucket_us, bucket_origin_us=origin,
+            bucket_count=segments or 0,
+        )
+        newest = np.sort(cols["newest"][cols["newest"] >= 0])[::-1]
+        newest = newest[: max(k, 0)]
+        rows = self._gather_rows(
+            newest >> 32,
+            newest & 0xFFFFFFFF,
+            np.zeros(newest.size, dtype=np.float64),
+        )
         return {
-            "waveform": wf,
+            "waveform": self._dense_wf(cols, bucket_us, origin, segments),
             "results": [
                 (u, int(w), int(p), int(d)) for u, w, p, d, _s in rows
             ],
@@ -2650,7 +2556,7 @@ class SearchEngine(FeatureOpsMixin):
             prep = self._prep_query(
                 q, locale, time_range_us, constraints, authz
             )
-            if self._local_eligible(prep):
+            if self._route(prep, None):
                 local_matches[key] = self._local_match_ids(prep)
             else:
                 out[key] = self.waveform(
@@ -2664,9 +2570,16 @@ class SearchEngine(FeatureOpsMixin):
             )
         )
         times = self._pid_times(need_pids) if need_pids.size else {}
+        spec = _agg_spec(
+            bucket_us=bucket_us, bucket_origin_us=origin,
+            bucket_count=segments or 0,
+        )
         for key, matches in local_matches.items():
-            out[key] = self._local_waveform(
-                matches, bucket_us, origin, segments, times
+            out[key] = self._dense_wf(
+                _reduce_waveform(
+                    matches, {}, lambda ids: _times_of(ids, times), spec
+                ),
+                bucket_us, origin, segments,
             )
         return out
 
@@ -2701,10 +2614,10 @@ class SearchEngine(FeatureOpsMixin):
         time-ordered, so "newest" is the max composite (pid, doc_id) --
         the same descending-id iteration the reference's gather uses.
 
-        Serving path: zero Spark jobs. Distributed: ONE job; each pid
-        task emits one (value, newest-doc, count) row per present value,
-        merged driver-side; the page's display fields are a point
-        gather."""
+        Both routes run `_reduce_aggregate`. Serving path: zero Spark
+        jobs. Distributed: ONE job; each kernel task emits one (value,
+        count, newest id) row per present value, merged and page-cut in
+        Spark; the page's display fields are a point gather."""
         from ..fields import FIELD_SEP, NUMERIC_FIELDS, decode_num
 
         # UNCAPPED value enumeration (field_terms; the serving path
@@ -2722,62 +2635,33 @@ class SearchEngine(FeatureOpsMixin):
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        local = self._route_facet_local(prep, facet_terms, local, pinned)
-        per_value: dict = {}  # value -> (latest_comp, count, composed)
-        if local:
-            matches = self._local_match_ids(prep)
-            if matches.size:
-                fmap, _tfs, _dls = self._postings_maps(
-                    facet_terms, prep["pid_range"]
-                )
-                vh, mp = _hits_of(matches, fmap, facet_terms)
-                nvals = len(facet_terms)
-                counts = np.bincount(vh, minlength=nvals)
-                latest = np.full(nvals, -1, dtype=np.int64)
-                np.maximum.at(latest, vh, matches[mp])
-                for i in np.flatnonzero(counts):
-                    per_value[_decode(facet_terms[i])] = (
-                        int(latest[i]), int(counts[i]), facet_terms[i]
-                    )
-        else:
-            # merge per-pid partials IN SPARK (values x pids rows never
-            # reach the driver): one tiny groupBy over (value term)
-            # rows, then only the page's values collect
-            rows = (
-                self.kernel_frame(
-                    query, k=0, locale=locale,
-                    time_range_us=time_range_us,
-                    prep=prep, agg="aggregate",
-                    facet_prefixes=[f"{field}{FIELD_SEP}"],
-                )
-                .groupBy("term")
-                .agg(
-                    F.max(
-                        (F.col("pid") * F.lit(1 << 32)) + F.col("doc_id")
-                    ).alias("latest"),
-                    F.sum("cnt").alias("n"),
-                )
-                # term asc == composed-term order == value order: same
-                # tie-break as the serving path when two values share
-                # their newest doc (possible for multi-valued fields)
-                .orderBy(F.desc("latest"), F.asc("term"))
-                .limit(int(start) + int(count))
-                .collect()
-            )
-            for r in rows:
-                per_value[_decode(r["term"])] = (
-                    int(r["latest"]), int(r["n"]), r["term"]
-                )
+        local = self._route(prep, local, facet_terms)
+        stop = int(start) + int(count)
+        cols = self._agg(
+            prep, "aggregate", local,
+            # merge per-task partials IN SPARK (values x pids rows never
+            # reach the driver), then only the page's values collect
+            shape=lambda frame: self._merged(frame)
+            .orderBy(F.desc("latest"), F.asc("term"))
+            .limit(stop),
+            facet_terms=facet_terms,
+            facet_prefixes=[f"{field}{FIELD_SEP}"],
+        )
         # newest-first page over the distinct values; ties break by
         # COMPOSED-term order -- the same key the distributed limit-cut
-        # used, so the page cannot differ by route (str() of a decoded
+        # used, so the page cannot differ by route (two values can share
+        # their newest doc in a multi-valued field; str() of a decoded
         # numeric would order '10' before '9')
         ordered = [
-            (v, (c, n))
-            for v, (c, n, ct) in sorted(
-                per_value.items(), key=lambda vc: (-vc[1][0], vc[1][2])
-            )
-        ][int(start): int(start) + int(count)]
+            (_decode(t), (c, n))
+            for c, n, t in sorted(
+                zip(
+                    cols["latest"].tolist(), cols["cnt"].tolist(),
+                    cols["term"].tolist(),
+                ),
+                key=lambda cnt: (-cnt[0], cnt[2]),
+            )[int(start): stop]
+        ]
         if not ordered:
             return []
         pids = np.array([c >> 32 for _v, (c, _n) in ordered], np.int64)
@@ -2796,7 +2680,7 @@ class SearchEngine(FeatureOpsMixin):
             # needs every value's last-activity ts but only the PAGE's
             # display rows)
             comps = np.sort((pids << 32) + docs)
-            ts = self._times_of(
+            ts = _times_of(
                 comps, self._pid_times(np.unique(pids).tolist())
             )
             by_comp = dict(zip(comps.tolist(), ts.tolist()))
@@ -2872,10 +2756,10 @@ class SearchEngine(FeatureOpsMixin):
         candidate restriction. Returns [(value, score)] sorted score
         desc then value asc, length <= top_n.
 
-        Every per-value waveform comes out of ONE pass over the match
-        set (serving: one concatenated facet-hit probe; distributed: ONE
-        kernel job emitting (value, bucket, count) rows) -- never a job
-        or scan per candidate value.
+        Every per-value waveform comes out of ONE `_reduce_waveforms`
+        pass over the match set (serving: one concatenated facet-hit
+        probe; distributed: ONE kernel job emitting (value term, bucket,
+        count) rows) -- never a job or scan per candidate value.
 
         `segments=N` (requires `time_range_us`) scores over the
         reference's exact divideTimeRangeIntoNSegments waveform shape
@@ -2910,71 +2794,42 @@ class SearchEngine(FeatureOpsMixin):
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        local = self._route_facet_local(prep, facet_terms, None, pinned)
-        # (composed value term, bucket) -> count, from one pass either way
-        cell_counts: dict = {}
-        if local:
-            matches = self._local_match_ids(prep)
-            if matches.size == 0:
-                return []
-            times = self._pid_times(np.unique(matches >> 32))
-            ts = self._times_of(matches, times)
-            if segments:
-                rel = ts - origin
-                valid = (rel >= 0) & (rel < segments * bucket_us)
-                m_bucket = np.where(valid, rel // bucket_us, -1)
-            else:
-                m_bucket = ts // bucket_us
-            fmap, _tfs, _dls = self._postings_maps(
-                facet_terms, prep["pid_range"]
-            )
-            vh, mp = _hits_of(matches, fmap, facet_terms)
-            if segments and vh.size:
-                keep = valid[mp]
-                vh, mp = vh[keep], mp[keep]
-            if not vh.size:
-                return []
-            keys = np.stack((vh, m_bucket[mp]))
-            uk, cnt = np.unique(keys, axis=1, return_counts=True)
-            for i, b, c in zip(
-                uk[0].tolist(), uk[1].tolist(), cnt.tolist()
-            ):
-                cell_counts[(facet_terms[i], b)] = c
-        else:
-            cells = (
-                self.kernel_frame(
-                    query, k=0, locale=locale,
-                    time_range_us=time_range_us,
-                    prep=prep, agg="waveforms", bucket_us=bucket_us,
-                    bucket_origin_us=origin,
-                    bucket_count=segments or 0,
-                    facet_prefixes=[f"{field}{FIELD_SEP}"],
-                )
-                .groupBy(
-                    "term",
-                    F.col("doc_id").alias("bucket"),
-                )
-                .agg(F.sum("cnt").alias("n"))
-            )
+        local = self._route(prep, None, facet_terms)
+
+        def leader_cut(frame: DataFrame) -> DataFrame:
             # leader cut IN SPARK: only the top-max_candidates values'
             # cells ever reach the driver (max_candidates x buckets
             # rows), not the full value x bucket matrix -- on a
             # million-value field the driver stays O(answer). Same
             # (leader desc, composed term asc) order as the in-memory
             # cut below, so routes can't diverge.
-            leaders_df = (
+            cells = self._merged(frame)
+            leaders = (
                 cells.groupBy("term")
-                .agg(F.sum("n").alias("leader"))
+                .agg(F.sum("cnt").alias("leader"))
                 .orderBy(F.desc("leader"), F.asc("term"))
                 .limit(int(max_candidates))
             )
-            rows = cells.join(
-                F.broadcast(leaders_df.select("term")), "term", "inner"
-            ).collect()
-            for r in rows:
-                cell_counts[(r["term"], int(r["bucket"]))] = int(
-                    r["n"]
-                )
+            return cells.join(
+                F.broadcast(leaders.select("term")), "term", "inner"
+            )
+
+        # (composed value term, bucket) -> count, from one
+        # `_reduce_waveforms` pass either way
+        cols = self._agg(
+            prep, "waveforms", local, shape=leader_cut,
+            bucket_us=bucket_us, bucket_origin_us=origin,
+            bucket_count=segments or 0,
+            facet_terms=facet_terms,
+            facet_prefixes=[f"{field}{FIELD_SEP}"],
+        )
+        cell_counts = {
+            (t, b): c
+            for t, b, c in zip(
+                cols["term"].tolist(), cols["bucket"].tolist(),
+                cols["cnt"].tolist(),
+            )
+        }
         if not cell_counts:
             return []
         # leader-bounded candidates (reference's top-N restriction);
@@ -3066,12 +2921,11 @@ class SearchEngine(FeatureOpsMixin):
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        if self._route_facet_local(prep, facet_terms, local, pinned):
-            return len(
-                self.distincts(
-                    field, query, locale, time_range_us, constraints,
-                    authz, True, prefix=prefix,
-                )
+        if self._route(prep, local, facet_terms):
+            return int(
+                self._agg(
+                    prep, "distincts", True, facet_terms=facet_terms
+                )["term"].size
             )
         from ..fields import FIELD_SEP
 
@@ -3125,10 +2979,11 @@ class SearchEngine(FeatureOpsMixin):
         metricingAvg shape (miru-anomaly-plugins/.../Anomaly.java:35-95:
         commons-math LinearInterpolator over the non-empty (x, y) points
         with flat edge padding; its long[] waveform quantizes the
-        interpolated values, this engine keeps them as floats). Serving
-        path zero jobs; distributed ONE job for sum (per-task (bucket,
-        partial-sum) rows only), plus the waveform job for avg's
-        denominator.
+        interpolated values, this engine keeps them as floats). Both
+        routes run `_reduce_metrics`, which emits each bucket's match
+        count beside its sum: serving path zero jobs; distributed ONE
+        job for sum and avg alike (per-task (bucket, sum, hits, count)
+        rows only).
 
         `segments=N` (requires `time_range_us`) switches to the
         reference's divideTimeRangeIntoNSegments bucketing
@@ -3139,7 +2994,7 @@ class SearchEngine(FeatureOpsMixin):
         unless interpolate=True, which then answers dense with flat
         edge extension exactly like Anomaly.metricingAvg's padded
         interpolation."""
-        from ..fields import FIELD_SEP, NUMERIC_FIELDS, decode_num
+        from ..fields import FIELD_SEP, NUMERIC_FIELDS
 
         if kind not in ("sum", "avg"):
             raise ValueError("kind must be 'sum' or 'avg'")
@@ -3161,102 +3016,28 @@ class SearchEngine(FeatureOpsMixin):
         # composed terms by prefix and decodes values in-task)
         pinned = self._terms_sorted is not None
         facet_terms = self.field_terms(field) if pinned else []
-        facet_values = [
-            float(decode_num(t.split(FIELD_SEP, 1)[1])) for t in facet_terms
-        ]
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        local = self._route_facet_local(prep, facet_terms, local, pinned)
-        if local:
-            matches = self._local_match_ids(prep)
-            if matches.size == 0:
-                return self._metrics_shape(
-                    [], bucket_us, origin, segments, kind, interpolate
-                )
-            times = self._pid_times(np.unique(matches >> 32))
-            # buckets aligned with matches, computed ONCE; facet hits
-            # reuse them by position (one searchsorted pass total)
-            ts = self._times_of(matches, times)
-            if segments:
-                rel = ts - origin
-                valid = (rel >= 0) & (rel < segments * bucket_us)
-                m_bucket = np.where(valid, rel // bucket_us, -1)
-                bmin, span = 0, segments
-            else:
-                m_bucket = ts // bucket_us
-                valid = np.ones(m_bucket.size, dtype=bool)
-                bmin = int(m_bucket.min())
-                span = int(m_bucket.max()) - bmin + 1
-            fmap, _tfs, _dls = self._postings_maps(
-                facet_terms, prep["pid_range"]
-            )
-            vh, mp = _hits_of(matches, fmap, facet_terms)
-            keep = valid[mp] if segments else slice(None)
-            vh, mp = vh[keep], mp[keep]
-            if not vh.size:
-                return self._metrics_shape(
-                    [], bucket_us, origin, segments, kind, interpolate
-                )
-            vals_arr = np.asarray(facet_values, dtype=np.float64)
-            rel_b = m_bucket[mp] - bmin
-            sums_b = np.bincount(
-                rel_b, weights=vals_arr[vh], minlength=span
-            )
-            # a bucket is present iff ANY facet posting hit it (a sum of
-            # exactly 0 -- e.g. value 0 -- still reports)
-            nz = np.flatnonzero(np.bincount(rel_b, minlength=span))
-            if kind == "sum":
-                out = [
-                    (origin + (bmin + int(b)) * bucket_us,
-                     int(round(sums_b[b])))
-                    for b in nz
-                ]
-            else:
-                denom = np.bincount(
-                    m_bucket[valid] - bmin, minlength=span
-                )
-                out = [
-                    (origin + (bmin + int(b)) * bucket_us,
-                     float(sums_b[b] / denom[b]))
-                    for b in nz
-                ]
-            return self._metrics_shape(
-                out, bucket_us, origin, segments, kind, interpolate
-            )
-        rows = (
-            self.kernel_frame(
-                query, k=0, locale=locale, time_range_us=time_range_us,
-                prep=prep, agg="metrics", bucket_us=bucket_us,
-                bucket_origin_us=origin, bucket_count=segments or 0,
-                facet_prefixes=[f"{field}{FIELD_SEP}"],
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("s"))
-            .orderBy("doc_id")
-            .collect()
+        local = self._route(prep, local, facet_terms)
+        cols = self._agg(
+            prep, "metrics", local,
+            bucket_us=bucket_us, bucket_origin_us=origin,
+            bucket_count=segments or 0,
+            facet_terms=facet_terms,
+            facet_prefixes=[f"{field}{FIELD_SEP}"],
         )
+        live = cols["hits"] > 0
+        order = np.argsort(cols["bucket"][live], kind="stable")
+        starts = (origin + cols["bucket"][live][order] * bucket_us).tolist()
+        sums = cols["sum"][live][order]
         if kind == "sum":
-            out = [
-                (origin + int(r["doc_id"]) * bucket_us,
-                 int(round(r["s"])))
-                for r in rows
-            ]
+            vals = [int(round(s)) for s in sums.tolist()]
         else:
-            denom = dict(
-                self.waveform(
-                    query, bucket_seconds, locale, time_range_us,
-                    constraints, authz, local=False, segments=segments,
-                )
-            )
-            out = [
-                (origin + int(r["doc_id"]) * bucket_us,
-                 float(r["s"])
-                 / denom[origin + int(r["doc_id"]) * bucket_us])
-                for r in rows
-            ]
+            vals = (sums / cols["cnt"][live][order]).tolist()
         return self._metrics_shape(
-            out, bucket_us, origin, segments, kind, interpolate
+            list(zip(starts, vals)), bucket_us, origin, segments, kind,
+            interpolate,
         )
 
     @staticmethod
@@ -3332,10 +3113,11 @@ class SearchEngine(FeatureOpsMixin):
         the answer-layer paging the reference applies over its
         streamed gather.
 
-        Serving path: zero Spark jobs -- one match pass, then one sorted
-        intersection per value. Distributed path: ONE job; facet-term
-        postings ride the same kernel exchange as the query's (all tf/dl
-        blobs shed) and each pid task emits only (value term, count)."""
+        Both routes run `_reduce_distincts`. Serving path: zero Spark
+        jobs -- one match pass, then one concatenated facet-hit probe.
+        Distributed path: ONE job; facet-term postings ride the same
+        kernel exchange as the query's (all tf/dl blobs shed) and each
+        task emits only (value term, count) rows."""
         from ..fields import FIELD_SEP, NUMERIC_FIELDS, decode_num
 
         if prefix is None or isinstance(prefix, str):
@@ -3359,48 +3141,28 @@ class SearchEngine(FeatureOpsMixin):
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        local = self._route_facet_local(prep, facet_terms, local, pinned)
-        if local:
-            matches = self._local_match_ids(prep)
-            out = []
-            if matches.size:
-                fmap, _tfs, _dls = self._postings_maps(
-                    facet_terms, prep["pid_range"]
-                )
-                vh, _mp = _hits_of(matches, fmap, facet_terms)
-                counts = np.bincount(vh, minlength=len(facet_terms))
-                trip = [
-                    (t, _decode(t), int(n))
-                    for t, n in zip(facet_terms, counts)
-                    if n
-                ]
-                if top_n is not None:
-                    # same (count desc, composed-term asc) cut the
-                    # distributed route's Spark-side limit makes
-                    trip.sort(key=lambda x: (-x[2], x[0]))
-                    trip = trip[: int(top_n)]
-                out = [(v, n) for _t, v, n in trip]
-            return sorted(out, key=lambda vc: (-vc[1], str(vc[0])))
-        merged = (
-            self.kernel_frame(
-                query, k=0, locale=locale, time_range_us=time_range_us,
-                prep=prep, agg="distincts",
-                facet_prefixes=[f"{field}{FIELD_SEP}{p}" for p in pfx],
-            )
-            .groupBy("term")
-            .agg(F.sum("score").alias("c"))
+        local = self._route(prep, local, facet_terms)
+        cols = self._agg(
+            prep, "distincts", local,
+            # top_n bounds IN SPARK: composed-term asc == value order, so
+            # this is the same (count desc, value asc) cut made below --
+            # but only top_n rows ever collect
+            shape=None if top_n is None else (
+                lambda frame: self._merged(frame)
+                .orderBy(F.desc("cnt"), F.asc("term"))
+                .limit(int(top_n))
+            ),
+            facet_terms=facet_terms,
+            facet_prefixes=[f"{field}{FIELD_SEP}{p}" for p in pfx],
+        )
+        trip = sorted(
+            zip(cols["term"].tolist(), cols["cnt"].tolist()),
+            key=lambda tc: (-tc[1], tc[0]),
         )
         if top_n is not None:
-            # bound IN SPARK: composed-term asc == value order, so this
-            # is the same (count desc, value asc) cut the driver-side
-            # sort would make -- but only top_n rows ever collect
-            merged = merged.orderBy(
-                F.desc("c"), F.asc("term")
-            ).limit(int(top_n))
-        rows = merged.collect()
-        out = [(_decode(r["term"]), int(r["c"])) for r in rows]
-        out.sort(key=lambda vc: (-vc[1], str(vc[0])))
-        return out[:top_n] if top_n is not None else out
+            trip = trip[: int(top_n)]
+        out = [(_decode(t), n) for t, n in trip]
+        return sorted(out, key=lambda vc: (-vc[1], str(vc[0])))
 
     def _local_bounds(self, prep: dict) -> dict:
         """Exact per-boundary-pid [lo, hi) docID interval from the
@@ -3859,18 +3621,7 @@ class SearchEngine(FeatureOpsMixin):
                 query, locale, time_range_us, constraints, authz,
                 use_stopwords, max_expand=max_expand,
             )
-        if local is None:
-            local = self._local_eligible(prep)
-        elif local and not self._local_eligible(prep):
-            # forcing the serving-node path when it can't answer this
-            # query correctly (unpinned dictionary/tombstones, oversized
-            # posting volume) must fail loudly, not return
-            # silently-wrong results
-            raise ValueError(
-                "local=True forced but this query is not eligible for "
-                "the serving-node path; use local=None for auto-routing"
-            )
-        if local:
+        if self._route(prep, local):
             rows = self._search_local(prep, k, use_blockmax)
             wdf = self._local_relation(rows)
             return self._with_summaries(
@@ -4027,14 +3778,7 @@ class SearchEngine(FeatureOpsMixin):
             kw.get("use_stopwords", True),
             max_expand=kw.pop("max_expand", None),
         )
-        if local is None:
-            local = self._local_eligible(prep)
-        elif local and not self._local_eligible(prep):
-            raise ValueError(
-                "local=True forced but this query is not eligible for "
-                "the serving-node path; use local=None for auto-routing"
-            )
-        if local:
+        if self._route(prep, local):
             rows = self._search_local(
                 prep, k, kw.get("use_blockmax", True)
             )

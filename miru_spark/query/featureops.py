@@ -27,16 +27,21 @@ Re-expresses, over the blocked-postings index (not the event table):
   MiruJustInTimeBackfillerizer.java; op types
   MiruPartitionedActivity.java:17-19).
 
-Spark-first shape: every hop is either the serving-node NumPy path
-(zero Spark jobs -- match evaluation + one concatenated searchsorted
-pass per field group) or ONE kernel job (agg="distincts"/"pairs") whose
-tasks emit only (packed value, count) rows -- postings blobs never
-cross an exchange, candidate x value cross products happen per-DOC
-inside a task, and the global merge is a groupBy over at most
-|observed tuples| rows. No all-pairs joins at any scale.
+Spark-first shape: every hop is one engine reducer
+(`_reduce_distincts` for value presence, `_reduce_pairs` for tuple
+counts) run through `SearchEngine._agg` on the route `_route` picks --
+the serving node (zero Spark jobs: match evaluation + one concatenated
+searchsorted pass per field group) or ONE composite-kernel job whose
+tasks run the same reducer and emit only (value term, count) or
+(packed tuple, count) rows. Postings blobs never cross an exchange,
+candidate x value cross products happen per-DOC inside a task, and the
+global merge is a groupBy over at most |observed tuples| rows. No
+all-pairs joins at any scale.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -174,6 +179,19 @@ def _finalize(scores: np.ndarray, strategy: str) -> np.ndarray:
     raise ValueError(f"strategy must be one of {_STRATEGIES}")
 
 
+def _tuple_specs(group_sets: list) -> tuple[list, list]:
+    """Batch several features' field groups into one pairs pass:
+    ([(offset, groups)], [span]) -- each feature's packed tuple keys own
+    [offset, offset + span), span = the product of its group sizes."""
+    specs, spans, off = [], [], 0
+    for groups in group_sets:
+        span = math.prod(max(len(g), 1) for g in groups)
+        specs.append((off, groups))
+        spans.append(span)
+        off += span
+    return specs, spans
+
+
 class FeatureOpsMixin:
     """SearchEngine methods for the reco plugin family. Mixed into
     SearchEngine (engine.py); every `self._*` helper lives there."""
@@ -208,171 +226,41 @@ class FeatureOpsMixin:
         )
         return sorted(r["term"] for r in rows)
 
-    def _route_facets(self, prep: dict, groups: list, local) -> bool:
-        """Serving-node vs distributed decision, same budget discipline
-        as `distincts` -- delegates to the engine's single copy of the
-        rule (`_route_facet_local`): the facet groups' postings ride
-        the match pass, so they count against the local postings budget
-        too; unpinned dictionaries always distribute."""
-        return self._route_facet_local(
-            prep,
-            [t for g in groups for t in g or []],
-            local,
-            self._terms_sorted is not None,
-        )
-
-    def _tuple_counts_local(
-        self, prep: dict, groups: list
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Serving path: one match evaluation + chained per-doc cross
-        products (engine._tuple_counts) -- zero Spark jobs."""
-        from .engine import _tuple_counts
-
-        matches = self._local_match_ids(prep)
-        if not matches.size:
-            z = np.empty(0, dtype=np.int64)
-            return z, z
-        fmap, _tfs, _dls = self._postings_maps(
-            sorted({t for g in groups for t in g}), prep["pid_range"]
-        )
-        return _tuple_counts(matches, fmap, groups)
-
-    def _tuple_counts_dist(
-        self, prep: dict, groups: list
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Distributed path: ONE kernel job; tasks emit only (packed
-        tuple, count) rows, globally merged by a sum groupBy."""
-        rows = (
-            self.kernel_frame(
-                None,
-                k=0,
-                prep=prep,
-                agg="pairs",
-                facet_terms=groups[0],
-                facet_terms2=groups[1],
-                facet_terms3=groups[2] if len(groups) > 2 else None,
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("c"))
-            .collect()
-        )
-        if not rows:
-            z = np.empty(0, dtype=np.int64)
-            return z, z
-        keys = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-        counts = np.array([int(r["c"]) for r in rows], dtype=np.int64)
-        o = np.argsort(keys)
-        return keys[o], counts[o]
-
     def _batched_tuple_counts(
-        self, prep: dict, specs: list, spans: list, run_local: bool
+        self, prep: dict, specs: list, spans: list, local: bool
     ) -> list:
-        """Per-spec (keys, counts) for several tuple specs out of ONE
-        gather: the serving path shares one match evaluation + postings
-        fetch; the distributed path batches every spec into ONE kernel
-        job via per-spec int64 key offsets."""
+        """Per-spec (keys, counts) for several tuple specs (`_tuple_specs`)
+        out of ONE `_reduce_pairs` gather: the serving path shares one
+        match evaluation + postings fetch; the distributed path batches
+        every spec into ONE kernel job via per-spec int64 key offsets,
+        globally merged by a sum groupBy."""
+        cols = self._agg(prep, "pairs", local, tuple_specs=specs)
+        o = np.argsort(cols["key"], kind="stable")
+        allk, allc = cols["key"][o], cols["cnt"][o]
         out = []
-        if run_local:
-            from .engine import _tuple_counts
-
-            matches = self._local_match_ids(prep)
-            all_terms = sorted(
-                {t for _o, groups in specs for g in groups for t in g}
-            )
-            fmap = {}
-            if matches.size and all_terms:
-                fmap, _tfs, _dls = self._postings_maps(
-                    all_terms, prep["pid_range"]
-                )
-            z = np.empty(0, dtype=np.int64)
-            for _o, groups in specs:
-                if matches.size and all(groups):
-                    out.append(_tuple_counts(matches, fmap, groups))
-                else:
-                    out.append((z, z))
-            return out
-        rows = (
-            self.kernel_frame(
-                None, k=0, prep=prep, agg="pairs", tuple_specs=specs
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("c"))
-            .collect()
-        )
-        allk = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-        allc = np.array([int(r["c"]) for r in rows], dtype=np.int64)
-        o = np.argsort(allk)
-        allk, allc = allk[o], allc[o]
         for (off, _groups), span in zip(specs, spans):
-            lo = np.searchsorted(allk, off)
-            hi = np.searchsorted(allk, off + span)
+            lo, hi = np.searchsorted(allk, [off, off + span])
             out.append((allk[lo:hi] - off, allc[lo:hi]))
         return out
-
-    def _facet_presence(
-        self, prep: dict, terms: list, local: bool
-    ) -> np.ndarray:
-        """Per-term match counts (0 = absent) -- the gather/stream hop
-        of the 3-hop walk. Serving: zero jobs; distributed: one
-        agg="distincts" kernel job."""
-        counts = np.zeros(len(terms), dtype=np.int64)
-        if local:
-            matches = self._local_match_ids(prep)
-            if matches.size:
-                fmap, _t, _d = self._postings_maps(
-                    terms, prep["pid_range"]
-                )
-                from .engine import _hits_of
-
-                vh, _mp = _hits_of(matches, fmap, terms)
-                counts = np.bincount(vh, minlength=len(terms))
-        else:
-            rows = (
-                self.kernel_frame(
-                    None, k=0, prep=prep, agg="distincts",
-                    facet_terms=terms,
-                )
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("c"))
-                .collect()
-            )
-            for r in rows:
-                counts[int(r["doc_id"])] = int(r["c"])
-        return counts
 
     def _present_field_terms(
         self, prep: dict, field: str, local: bool, min_df: int = 0
     ) -> list[tuple[str, int]]:
         """(composed term, match count) for every value of `field`
-        PRESENT in the match set -- the streamed form of
-        `_facet_presence` for whole-field gathers: the distributed
-        route ships no value list at all (facet_prefixes kernel mode;
-        the exchange and the collect are bounded by present values,
-        never by the field's value space). Sorted by composed term.
-        `min_df` floors against the pinned dictionary; on an unpinned
-        dictionary the floor falls back to the list path's semantics
-        via the enumerated terms."""
+        PRESENT in the match set -- the gather/stream hop of the 3-hop
+        walk, one `_reduce_distincts` pass. The distributed route ships
+        no value list at all (streamed facet_prefixes mode; the exchange
+        and the collect are bounded by present values, never by the
+        field's value space). Sorted by composed term. A non-zero
+        `min_df` ships the FLOORED enumeration (isin / dense-range
+        selection), so sub-floor values' postings are never fetched --
+        the documented point of the knob."""
         if local or min_df > 0:
-            # a non-zero floor ships the FLOORED enumeration (isin /
-            # dense-range selection), so sub-floor values' postings are
-            # never fetched -- the documented point of the knob
-            terms = self._field_terms(field, min_df=min_df)
-            counts = self._facet_presence(prep, terms, local)
-            return [
-                (t, int(c))
-                for t, c in zip(terms, counts.tolist())
-                if c
-            ]
-        rows = (
-            self.kernel_frame(
-                None, k=0, prep=prep, agg="distincts",
-                facet_prefixes=[f"{field}{FIELD_SEP}"],
-            )
-            .groupBy("term")
-            .agg(F.sum("score").alias("c"))
-            .collect()
-        )
-        return sorted((r["term"], int(r["c"])) for r in rows)
+            spec = {"facet_terms": self._field_terms(field, min_df=min_df)}
+        else:
+            spec = {"facet_prefixes": [f"{field}{FIELD_SEP}"]}
+        cols = self._agg(prep, "distincts", local, **spec)
+        return sorted(zip(cols["term"].tolist(), cols["cnt"].tolist()))
 
     def _narrow_wide_groups(
         self, prep: dict, fields: list, groups: list
@@ -396,9 +284,9 @@ class FeatureOpsMixin:
                 facet_prefixes=prefixes,
             )
             .select("term")
-            .distinct()  # per-pid rows dedupe IN SPARK: the driver
+            .distinct()  # per-task rows dedupe IN SPARK: the driver
             .collect()   # receives one row per present value, never
-        )                # values x pids
+        )                # values x tasks
         present = {r["term"] for r in rows}
         out = list(groups)
         for i in wide:
@@ -438,7 +326,7 @@ class FeatureOpsMixin:
         prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        run_local = self._route_facets(prep, groups, local)
+        run_local = self._route(prep, local, [t for g in groups for t in g])
         if not run_local:
             # wide value spaces: one shared presence pre-pass narrows
             # each oversized group to present values (exact -- a tuple
@@ -446,10 +334,8 @@ class FeatureOpsMixin:
             groups = self._narrow_wide_groups(prep, list(fields), groups)
             if not all(groups):
                 return []
-        keys, counts = (
-            self._tuple_counts_local(prep, groups)
-            if run_local
-            else self._tuple_counts_dist(prep, groups)
+        [(keys, counts)] = self._batched_tuple_counts(
+            prep, *_tuple_specs([groups]), run_local
         )
         out = []
         sizes = [len(g) for g in groups]
@@ -528,10 +414,10 @@ class FeatureOpsMixin:
         f1_terms = self._field_terms(field1, min_df=min_value_df)
         if not f1_terms:
             return []
-        run_local = self._route_facets(
+        run_local = self._route(
             prep_my,
-            [f1_terms, self._field_terms(field2, min_df=min_value_df)],
             local,
+            f1_terms + self._field_terms(field2, min_df=min_value_df),
         )
         # hop 1+2: distinct field1 parents of my ok activity -- the
         # streamed gather: distributed route ships no parent value
@@ -590,10 +476,8 @@ class FeatureOpsMixin:
             if not f3_terms:
                 return []
         groups = [contrib_terms, f3_terms]
-        keys, _counts = (
-            self._tuple_counts_local(prep_c, groups)
-            if run_local
-            else self._tuple_counts_dist(prep_c, groups)
+        [(keys, _counts)] = self._batched_tuple_counts(
+            prep_c, *_tuple_specs([groups]), run_local
         )
         excluded = {t.split(FIELD_SEP, 1)[1] for t in parents}
         if remove_distincts:
@@ -688,8 +572,10 @@ class FeatureOpsMixin:
             for _s, ff in feats
             for f in ff
         }
-        run_local = self._route_facets(
-            prep, [cand_terms, *field_groups.values()], local
+        run_local = self._route(
+            prep,
+            local,
+            [t for g in [cand_terms, *field_groups.values()] for t in g],
         )
         if not run_local:
             # wide candidate/feature spaces: ONE shared streamed
@@ -715,16 +601,9 @@ class FeatureOpsMixin:
         # across features; the distributed path batches all features
         # into ONE kernel job via per-feature key offsets (tuple_specs)
         # -- F catwalk features never cost F jobs.
-        specs, spans = [], []
-        off = 0
-        for _scalar, ff in feats:
-            groups = [cand_terms] + [field_groups[f] for f in ff]
-            span = 1
-            for g in groups:
-                span *= max(len(g), 1)
-            specs.append((off, groups))
-            spans.append(span)
-            off += span
+        specs, spans = _tuple_specs(
+            [[cand_terms] + [field_groups[f] for f in ff] for _s, ff in feats]
+        )
         per_feature = [
             keys
             for keys, _counts in self._batched_tuple_counts(
@@ -829,16 +708,9 @@ class FeatureOpsMixin:
         field_groups = {
             f: self._field_terms(f) for _s, ff in feats for f in ff
         }
-        specs, spans = [], []
-        off = 0
-        for _scalar, ff in feats:
-            groups = [field_groups[f] for f in ff]
-            span = 1
-            for g in groups:
-                span *= max(len(g), 1)
-            specs.append((off, groups))
-            spans.append(span)
-            off += span
+        specs, spans = _tuple_specs(
+            [[field_groups[f] for f in ff] for _s, ff in feats]
+        )
 
         def _decode(fi: int, key: int) -> tuple:
             _o, groups = specs[fi]
@@ -858,8 +730,8 @@ class FeatureOpsMixin:
         base_prep = self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
-        run_local = self._route_facets(
-            base_prep, list(field_groups.values()), local
+        run_local = self._route(
+            base_prep, local, [t for g in field_groups.values() for t in g]
         )
         den = self._batched_tuple_counts(
             base_prep, specs, spans, run_local

@@ -8,6 +8,7 @@ where the driver process was launched from.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,21 +19,44 @@ from pyspark.sql import SparkSession
 def package_zip() -> str:
     """Zip the miru_spark package for --py-files / addPyFile shipping.
 
-    Written to a process-unique temp file and atomically renamed into
-    place: concurrent driver processes (reader-replica stress, parallel
-    jobs on one box) must never observe a half-written zip."""
+    The file is named by a digest of the packaged sources (sha256 over
+    each module's path and bytes, in path order), so identical sources
+    share one path and different checkouts on one box never overwrite
+    each other's zip mid-session. Written to a process-unique temp file
+    and atomically renamed into place: concurrent driver processes
+    (reader-replica stress, parallel jobs on one box) must never observe
+    a half-written zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "miru_spark_pyfiles.zip")
+    sources = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                sources.append(
+                    (os.path.relpath(full, os.path.dirname(pkg_dir)), full)
+                )
+    sources.sort()
+    digest = hashlib.sha256()
+    blobs = []
+    for rel, full in sources:
+        with open(full, "rb") as f:
+            data = f.read()
+        blobs.append((rel, data))
+        digest.update(rel.encode() + b"\0" + data + b"\0")
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"miru_spark_pyfiles_{digest.hexdigest()[:16]}.zip",
+    )
     tmp = f"{out}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
+        for rel, data in blobs:
+            # a fixed timestamp keeps the bytes a function of the sources
+            info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.external_attr = 0o644 << 16
+            zf.writestr(info, data)
     os.replace(tmp, out)
     return out
 

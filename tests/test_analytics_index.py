@@ -585,6 +585,27 @@ def test_serving_analytics_run_zero_spark_jobs(eng, spark):
     assert after == before
 
 
+def test_distributed_metrics_avg_runs_one_job_like_sum(eng, spark):
+    """The distributed metrics reducer emits each bucket's match count
+    beside its sum, so kind="avg" launches exactly the jobs kind="sum"
+    does (no second waveform job for the denominator), and both answers
+    equal the serving node's."""
+    args = ("site", "w000001 OR w000009", 3600)
+    eng.metrics(*args, "sum", local=False)  # warm outside the window
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(kind):
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        got = eng.metrics(*args, kind, local=False)
+        return got, len(tracker.getJobIdsForGroup(None) or []) - before
+
+    got_sum, sum_jobs = jobs("sum")
+    got_avg, avg_jobs = jobs("avg")
+    assert avg_jobs == sum_jobs >= 1
+    assert got_sum == eng.metrics(*args, "sum", local=True)
+    assert got_avg == eng.metrics(*args, "avg", local=True)
+
+
 def test_aggregate_counts_stream_page(eng):
     import re
 

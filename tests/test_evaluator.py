@@ -1,7 +1,7 @@
 """The shared match/mask/score evaluator (`_evaluate`), the composite
-top-k kernel over encoded posting rows, and the per-pid agg kernel's
-output schema, checked in pure NumPy/pandas -- no Spark, no index
-build. Also the engine's open-time index-format check."""
+kernel over encoded posting rows (top-k and agg modes) and the agg
+reducers' merge rules, checked in pure NumPy/pandas -- no Spark, no
+index build. Also the engine's open-time index-format check."""
 
 import json
 import os
@@ -22,7 +22,6 @@ from miru_spark.query.engine import (
     _evaluate,
     _kernel_columns,
     _make_composite_kernel,
-    _make_kernel,
 )
 
 TERMS = ["a", "b", "c", "d"]
@@ -396,23 +395,25 @@ def test_composite_kernel_equals_reference(sc):
 
 
 def _waveforms_kernel(prefix):
-    return _make_kernel(
-        ("term", "w1"), k=0, pid_counts={7: 6}, expansions={},
-        agg="waveforms", bucket_us=1000, facet_prefixes=[prefix],
+    return _make_composite_kernel(
+        ("term", "w1"), [], 6, 1.0, 0, {}, None, None, {}, {7: 6},
+        agg="waveforms",
+        spec=E._agg_spec(bucket_us=1000, facet_prefixes=[prefix]),
     )
 
 
 def test_streamed_waveforms_empty_frames_keep_term_column():
     """Streamed-facet waveforms declare a `term` column; both of the
-    kernel's empty answers (no 't' rows; no facet value in the match
-    set) must carry the same columns the mapInPandas schema names."""
+    composite kernel's empty answers (no 't' rows; no facet value in the
+    match set) must carry the same columns the mapInPandas schema
+    names."""
     import pandas as pd
 
     from miru_spark.fields import FIELD_SEP
 
     prefix = f"site{FIELD_SEP}"
-    cols = _kernel_columns("waveforms", [prefix])
-    assert cols == ["pid", "doc_id", "score", "cnt", "term"]
+    cols = _kernel_columns("waveforms")
+    assert cols == ["term", "bucket", "cnt"]
 
     def prow(term, ids):
         return {
@@ -438,6 +439,285 @@ def test_streamed_waveforms_empty_frames_keep_term_column():
     # a facet value inside the match set answers with the same columns
     hit = kern(pd.DataFrame([query, prow(prefix + "b.example", [3]), trow]))
     assert list(hit.columns) == cols
-    assert hit[["doc_id", "cnt", "term"]].values.tolist() == [
+    assert hit[["bucket", "cnt", "term"]].values.tolist() == [
         [0, 1, prefix + "b.example"]
     ]
+
+
+AGGS = tuple(E._AGG_COLUMNS)
+
+
+def _fterms(field, values):
+    from miru_spark.fields import compose, encode_num
+
+    if field == "site":
+        return [compose("site", encode_num(v)) for v in values]
+    return [compose(field, v) for v in values]
+
+
+@st.composite
+def _agg_scenarios(draw):
+    """2-4 pids, each with docs' warc_us, a query term `q` and
+    multi-valued facet postings (a doc may carry several values of a
+    field, or none), a sorted composite match set, a random split of
+    the pids into two tasks and one spec per agg mode, epoch or
+    `segments` bucketing, facet list or prefix mode."""
+    pids = sorted(draw(st.sets(st.integers(1, 6), min_size=2, max_size=4)))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    fields = {
+        "g": _fterms("g", ["a", "b", "c"]),
+        "site": _fterms("site", [0, 3, 17]),
+    }
+    docs = {}
+    for p in pids:
+        n = draw(st.integers(1, 30))
+        warc = p * 10_000 + np.cumsum(rng.integers(1, 40, size=n))
+        post = {
+            t: np.flatnonzero(rng.random(n) < draw(st.sampled_from(
+                [0.0, 0.3, 0.7]
+            ))).astype(np.int64)
+            for t in ["q", *fields["g"], *fields["site"]]
+        }
+        docs[p] = (n, warc, post)
+    lo = min(int(w[0]) for _n, w, _p in docs.values())
+    hi = max(int(w[-1]) for _n, w, _p in docs.values())
+    segments = draw(st.sampled_from([0, 0, 3, 7]))
+    if segments:
+        origin = draw(st.integers(lo - 500, hi))
+        bucket = dict(
+            bucket_us=draw(st.integers(20, 4000)),
+            bucket_origin_us=origin, bucket_count=segments,
+        )
+    else:
+        bucket = dict(bucket_us=draw(st.sampled_from([50, 300, 5000])))
+    specs = {}
+    for agg in AGGS:
+        field = "site" if agg == "metrics" else draw(
+            st.sampled_from(["g", "site"])
+        )
+        facet = (
+            {"facet_terms": sorted(draw(
+                st.sets(st.sampled_from(fields[field]))
+            ))}
+            if draw(st.booleans())
+            else {"facet_prefixes": [field + "\x1f"]}
+        )
+        specs[agg] = E._agg_spec(
+            k=draw(st.integers(0, 5)),
+            tuple_specs=[(0, [fields["g"], fields["site"]]),
+                         (9, [fields["site"], fields["g"], fields["g"]])],
+            **bucket, **facet,
+        )
+    return {
+        "docs": docs,
+        "keep": draw(st.sampled_from([0.3, 0.7, 1.0])),
+        "seed": draw(st.integers(0, 2**32 - 1)),
+        "specs": specs,
+    }
+
+
+def _canon(cols: dict, agg: str, k: int):
+    """Merge reducer rows by the engine's fixed column rules (group by
+    the key columns, sum/max the values; stumptown's newest keeps the k
+    largest ids) into a comparable form."""
+    names = E._kernel_columns(agg)
+    keys = [c for c in names if c in E._AGG_KEYS]
+    vals = [c for c in names if c in E._AGG_MERGE]
+    acc: dict = {}
+    newest = []
+    for row in zip(*(np.asarray(cols[c]).tolist() for c in names)):
+        rec = dict(zip(names, row))
+        if agg == "stumptown":
+            if rec["newest"] >= 0:
+                newest.append(rec["newest"])
+            if not rec["cnt"]:
+                continue
+        key = tuple(rec[c] for c in keys)
+        new = [rec[c] for c in vals]
+        old = acc.setdefault(key, new)
+        if old is not new:
+            acc[key] = [
+                max(o, n) if E._AGG_MERGE[c] == "max" else o + n
+                for c, o, n in zip(vals, old, new)
+            ]
+    rows = sorted((*key, *v) for key, v in acc.items())
+    if agg != "stumptown":
+        return rows, None
+    return rows, sorted(newest)[-k:] if k > 0 else []
+
+
+def _ref_agg(matches, post, warcs, agg, spec):
+    """Per-doc Python reference of one agg mode, in `_canon` form."""
+    import collections
+    import itertools
+
+    from miru_spark.fields import decode_num
+
+    terms = spec["facet_terms"]
+    if terms is None:
+        terms = sorted(
+            t for t in post if t.startswith(tuple(spec["facet_prefixes"]))
+        )
+    members = {t: set(ids.tolist()) for t, ids in post.items()}
+    bucket_us, n_seg = spec["bucket_us"], spec["bucket_count"]
+    acc = collections.defaultdict(lambda: [0, 0, 0, -1])
+    for cid in matches.tolist():
+        ts = int(warcs[cid >> 32][cid & 0xFFFFFFFF])
+        b = ts // bucket_us
+        if n_seg:
+            rel = ts - spec["bucket_origin_us"]
+            b = rel // bucket_us if 0 <= rel < n_seg * bucket_us else None
+        vals = [t for t in terms if cid in members[t]]
+        if agg == "count":
+            acc[()][0] += 1
+        if agg in ("waveform", "stumptown") and b is not None:
+            acc[(b,)][0] += 1
+        for t in vals:
+            if agg in ("distincts", "aggregate"):
+                acc[(t,)][0] += 1
+                acc[(t,)][3] = max(acc[(t,)][3], cid)
+            if agg == "waveforms" and b is not None:
+                acc[(t, b)][0] += 1
+        if agg == "metrics" and b is not None:
+            a = acc[(b,)]
+            a[0] += 1
+            a[1] += sum(decode_num(t.split("\x1f", 1)[1]) for t in vals)
+            a[2] += len(vals)
+        if agg == "pairs":
+            for off, groups in spec["tuple_specs"]:
+                idx = [
+                    [i for i, t in enumerate(g) if cid in members[t]]
+                    for g in groups
+                ]
+                for combo in itertools.product(*idx):
+                    key = 0
+                    for g, i in zip(groups, combo):
+                        key = key * len(g) + i
+                    acc[(key + off,)][0] += 1
+    if agg == "count":
+        return [(len(matches),)], None
+    if agg == "metrics":
+        rows = [(*k, a[1], a[2], a[0]) for k, a in acc.items()]
+    elif agg == "aggregate":
+        rows = [(*k, a[0], a[3]) for k, a in acc.items()]
+    else:
+        rows = [(*k, a[0]) for k, a in acc.items()]
+    newest = None
+    if agg == "stumptown":
+        k = spec["k"]
+        newest = sorted(matches.tolist())[-k:] if k > 0 else []
+    return sorted(rows), newest
+
+
+def _agg_rows(docs):
+    """Codec-encoded kernel rows: every term's 'p' blocks (tf/dl blobs
+    shed, as agg modes ship them) and every pid's 't' rows."""
+    import pandas as pd
+
+    rows = []
+    for p, (n, warc, post) in docs.items():
+        for t, ids in post.items():
+            blk = ids // SPAN
+            for b in np.unique(blk).tolist():
+                sel = ids[blk == b]
+                rows.append({
+                    "pid": p, "term": t, "blk": b, "n": sel.size,
+                    "first_doc": int(sel[0]), "last_doc": int(sel[-1]),
+                    "ids_bin": encode_postings(sel), "rk": "p",
+                })
+        for s in range(0, n, SPAN):
+            rows.append({
+                "pid": p, "first_doc": s, "rk": "t",
+                "ids_bin": encode_varint(np.diff(warc[s:s + SPAN], prepend=0)),
+            })
+    return pd.DataFrame([{**BLANK, **r} for r in rows], columns=list(BLANK))
+
+
+@settings(max_examples=40, deadline=None)
+@given(_agg_scenarios())
+def test_agg_reducers_merge_over_pid_splits_and_match_kernel(sc):
+    """For every agg mode: the reducer over the union of the pids'
+    matches equals a per-doc Python reference and the merge of its
+    outputs over a random split of the pids into tasks (the fixed
+    column rules); and the composite kernel
+    in agg mode, over codec-encoded rows, equals the reducer on the
+    same decoded inputs, decoding only matched pids' time rows."""
+    docs = sc["docs"]
+    rng = np.random.default_rng(sc["seed"])
+    warcs = {p: w for p, (_n, w, _post) in docs.items()}
+
+    def times(ids):
+        return E._times_of(ids, warcs)
+
+    def composite(pids, pick):
+        terms = docs[pids[0]][2] if pids else {}
+        return {
+            t: np.concatenate(
+                [(p << 32) + pick(p, docs[p][2][t]) for p in pids]
+            )
+            for t in terms
+        }
+
+    pids = sorted(docs)
+    sub = {
+        p: np.flatnonzero(rng.random(docs[p][0]) < sc["keep"])
+        for p in pids
+    }
+    side = rng.integers(0, 2, size=len(pids))
+    parts = [[p for p, s in zip(pids, side) if s == i] for i in (0, 1)]
+    m_all = np.concatenate([(p << 32) + sub[p] for p in pids])
+    post_all = composite(pids, lambda _p, ids: ids)
+
+    frame = _agg_rows(docs)
+    q_matches = post_all["q"]
+    calls = {"n": 0}
+    real = E._decode_times
+
+    def counting(*a):
+        calls["n"] += 1
+        return real(*a)
+
+    for agg in AGGS:
+        spec = sc["specs"][agg]
+        reduce = E._REDUCERS[agg]
+        union = reduce(m_all, post_all, times, spec)
+        assert _canon(union, agg, spec["k"]) == _ref_agg(
+            m_all, post_all, warcs, agg, spec
+        ), agg
+        split = [
+            reduce(
+                np.concatenate(
+                    [(p << 32) + sub[p] for p in part]
+                    or [np.empty(0, dtype=np.int64)]
+                ),
+                composite(part, lambda _p, ids: ids),
+                times, spec,
+            )
+            for part in parts
+        ]
+        merged = {
+            c: np.concatenate([o[c] for o in split])
+            for c in E._kernel_columns(agg)
+        }
+        assert _canon(union, agg, spec["k"]) == _canon(
+            merged, agg, spec["k"]
+        ), agg
+
+        kern = _make_composite_kernel(
+            ("term", "q"), [], 100, 1.0, 0, {}, None, None, {},
+            {p: docs[p][0] for p in pids}, agg=agg, spec=spec,
+        )
+        calls["n"] = 0
+        E._decode_times = counting
+        try:
+            out = kern(frame.copy())
+        finally:
+            E._decode_times = real
+        assert list(out.columns) == E._kernel_columns(agg)
+        got = {c: out[c].to_numpy() for c in out.columns}
+        want = reduce(q_matches, post_all, times, spec)
+        assert _canon(got, agg, spec["k"]) == _canon(
+            want, agg, spec["k"]
+        ), agg
+        matched = {int(p) for p in np.unique(q_matches >> 32).tolist()}
+        assert calls["n"] <= (len(matched) if agg in E._TIME_AGGS else 0)

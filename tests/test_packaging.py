@@ -2,6 +2,7 @@
 be importable on its own (what each executor's Python worker does when the
 job ships via `spark-submit --py-files`; see jobs/*.py)."""
 
+import hashlib
 import os
 import subprocess
 import sys
@@ -32,7 +33,15 @@ def test_zip_contains_every_module():
     zpath = package_zip()
     with zipfile.ZipFile(zpath) as zf:
         names = sorted(zf.namelist())
+        digest = hashlib.sha256()
+        for n in names:
+            digest.update(n.encode() + b"\0" + zf.read(n) + b"\0")
     assert names == _pkg_modules()
+    # named by the sources' digest: two checkouts on one box never
+    # share (and overwrite) one executor package
+    assert os.path.basename(zpath) == (
+        f"miru_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
+    )
 
 
 def test_zip_imports_standalone():
