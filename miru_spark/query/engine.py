@@ -30,14 +30,16 @@ FullText.java:54-97):
 **Analytics: one reducer per agg mode, run by both routes.** count,
 waveform, stumptown, distincts, aggregate, waveforms, metrics and pairs
 each have ONE module-level reducer (`_REDUCERS`) over a sorted composite
-match set, its decoded postings map and a composite id -> warc_us lookup
+match set, a facet hit lookup and a composite id -> warc_us lookup
 (`_times_of`), returning {column: ndarray}. The serving node runs it on
-the query's match set (`SearchEngine._agg`, zero Spark jobs); the same
-kernel as every search runs it once per task, and the task outputs merge
-in Spark by one fixed rule per column (`_AGG_MERGE`: counts and sums
-add, `latest` takes the max; stumptown's `newest` keeps the k largest
-ids) -- miru's one Question.askLocal per partition plus one
-MiruAnswerMerger. One routing rule (`SearchEngine._route`) picks the
+the query's match set (`SearchEngine._agg`, zero Spark jobs), reading
+facet values from per-pid forward value columns (`_forward_hits`); the
+same kernel as every search runs it once per task over the facet
+postings that crossed the exchange (`_posting_hits`), and the task
+outputs merge in Spark by one fixed rule per column (`_AGG_MERGE`:
+counts and sums add, `latest` takes the max; stumptown's `newest` keeps
+the k largest ids) -- miru's one Question.askLocal per partition plus
+one MiruAnswerMerger. One routing rule (`SearchEngine._route`) picks the
 route for every op.
 
 **Block-max pruning (exact, serving node only, off by default).** Posting
@@ -503,8 +505,10 @@ def _hits_of(matches: np.ndarray, postings: dict, terms: list):
     concatenated searchsorted pass over every value's postings instead
     of a per-value Python loop (at hundreds of values the loop overhead
     dominates). Positions let callers reuse match-aligned arrays
-    (timestamps, buckets) with plain fancy indexing. Serves every facet
-    reducer, on both routes."""
+    (timestamps, buckets) with plain fancy indexing. The distributed
+    kernel's hit lookup (`_posting_hits`), over the postings that
+    crossed the exchange; the serving node answers the same question
+    from forward value columns (`_forward_hits`)."""
     arrs, vidx = [], []
     for i, t in enumerate(terms):
         c = postings.get(t)
@@ -518,6 +522,139 @@ def _hits_of(matches: np.ndarray, postings: dict, terms: list):
     pos = np.minimum(np.searchsorted(matches, cat), matches.size - 1)
     hit = matches[pos] == cat
     return np.concatenate(vidx)[hit], pos[hit]
+
+
+def _posting_hits(postings: dict, spec: dict):
+    """The distributed kernel's hit lookup and reducer spec: `_hits_of`
+    over the task's decoded postings (term -> sorted composite ids). In
+    streamed facet mode (`facet_prefixes`, no value list) the value
+    list becomes the prefix-matching terms among those postings --
+    sorted, so value order (composed-term order) is deterministic.
+    Streamed mode lets a field's whole (uncapped) value space flow
+    through the exchange without ever materializing a value list on the
+    driver, the Spark rendering of Distincts.gatherDirect streaming the
+    whole term range (Distincts.java:69-140): the driver stays
+    O(result), not O(value space)."""
+    if spec["facet_terms"] is None and spec["facet_prefixes"]:
+        pfx = tuple(spec["facet_prefixes"])
+        spec = {
+            **spec,
+            "facet_terms": sorted(t for t in postings if t.startswith(pfx)),
+        }
+    return (lambda matches, terms: _hits_of(matches, postings, terms)), spec
+
+
+def _invert_postings(
+    postings: dict, ids: dict, pids, pid_counts: dict
+) -> dict:
+    """Per-pid forward value columns of one field, by inverting its
+    decoded postings (composed term -> sorted composite ids) into
+    doc_id -> value id, where `ids` maps each of the field's composed
+    terms to its index in the field's sorted dictionary slice. Returns
+    {pid: ((offs, vals), entries)} for every pid in `pids`: a field with
+    at most one value per doc of the pid gets `offs` None and `vals`
+    one int32 value id per doc (-1: no value); otherwise CSR, the doc's
+    value ids (ascending) at vals[offs[d]:offs[d + 1]]. `entries` is
+    the forward-cache budget charge (one per doc, one more per CSR
+    value). A pid spans at least its `pid_counts` docs, so every doc
+    of its match set has a slot."""
+    terms = [t for t in postings if t in ids]
+    cids = np.concatenate(
+        [postings[t] for t in terms] or [np.empty(0, dtype=np.int64)]
+    )
+    vids = np.concatenate(
+        [np.full(postings[t].size, ids[t], dtype=np.int32) for t in terms]
+        or [np.empty(0, dtype=np.int32)]
+    )
+    order = np.lexsort((vids, cids))
+    cids, vids = cids[order], vids[order]
+    cpids = cids >> 32
+    out = {}
+    for p in pids:
+        s, e = np.searchsorted(cpids, [p, p + 1]).tolist()
+        docs, vals = cids[s:e] & 0xFFFFFFFF, vids[s:e]
+        n = max(int(pid_counts.get(p, 0)), int(docs[-1]) + 1 if e > s else 0)
+        per = np.bincount(docs, minlength=n)
+        if e == s or per.max() <= 1:
+            col = np.full(n, -1, dtype=np.int32)
+            col[docs] = vals
+            out[p] = ((None, col), n)
+        else:
+            offs = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(per, out=offs[1:])
+            out[p] = ((offs, vals), offs.size + vals.size)
+    return out
+
+
+def _forward_hits(matches: np.ndarray, terms: list, field_ids, field_cols):
+    """`_hits_of`'s answer -- the same (value_idx, position) arrays in
+    the same order -- read from forward value columns instead of
+    searchsorting every value's postings into the match set: miru's
+    gather batches the answer's docIDs into a forward-index getAll
+    (MiruAggregateUtil.gatherActivityLookup). `field_ids(field)` maps
+    the field's composed terms to value ids and `field_cols(field,
+    pids)` returns that field's per-pid `_invert_postings` columns. Per
+    field and pid run of the sorted match set, ONE take of the value ids
+    at the matched docs (CSR fields expand per doc), mapped to `terms`
+    indexes; terms absent from the dictionary hit nothing. A stable
+    sort by value index then groups hits by value in `terms` order,
+    positions ascending within a value, as `_reduce_aggregate`'s "last
+    hit is newest" needs. `terms` are distinct, as every caller's list
+    is (a dictionary slice or a set of present values)."""
+    from ..fields import FIELD_SEP
+
+    z = np.empty(0, dtype=np.int64)
+    if not matches.size or not terms:
+        return z, z
+    by_field: dict = {}
+    pre = None
+    for i, t in enumerate(terms):  # lists run field by field
+        if pre is None or not t.startswith(pre):
+            field = t.split(FIELD_SEP, 1)[0]
+            pre = field + FIELD_SEP
+            idxs = by_field.setdefault(field, [])
+        idxs.append(i)
+    mpids = matches >> 32
+    docs = matches & 0xFFFFFFFF
+    cuts = [0, *(np.flatnonzero(mpids[1:] != mpids[:-1]) + 1).tolist(),
+            matches.size]
+    runs = [(s, e, int(mpids[s])) for s, e in zip(cuts[:-1], cuts[1:])]
+    allpos = np.arange(matches.size, dtype=np.int64)
+    vis, poss = [], []
+    for field, idxs in by_field.items():
+        ids = field_ids(field)
+        v = np.array([ids.get(terms[i], -1) for i in idxs], dtype=np.int64)
+        known = v >= 0
+        if not known.any():
+            continue
+        # value id -> index into `terms`; the extra last slot maps the
+        # no-value id -1 to "no hit"
+        remap = np.full(len(ids) + 1, -1, dtype=np.int64)
+        remap[v[known]] = np.array(idxs, dtype=np.int64)[known]
+        cols = field_cols(field, [p for _s, _e, p in runs])
+        vals, pos = [], []
+        for s, e, p in runs:
+            offs, col = cols[p]
+            if offs is None:
+                vals.append(col[docs[s:e]])
+                pos.append(allpos[s:e])
+            else:
+                lo = offs[docs[s:e]]
+                cnt = offs[docs[s:e] + 1] - lo
+                vals.append(col[
+                    np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+                    + np.arange(cnt.sum())
+                ])
+                pos.append(np.repeat(allpos[s:e], cnt))
+        vi = remap[np.concatenate(vals)]
+        keep = vi >= 0
+        vis.append(vi[keep])
+        poss.append(np.concatenate(pos)[keep])
+    if not vis:
+        return z, z
+    vi = np.concatenate(vis)
+    order = np.argsort(vi, kind="stable")
+    return vi[order], np.concatenate(poss)[order]
 
 
 def _pair_expand(ai, ap, bi, bp, nb: int):
@@ -549,15 +686,16 @@ def _pair_expand(ai, ap, bi, bp, nb: int):
     return a_rep * nb + b_rep, np.repeat(ap, cnt)
 
 
-def _tuple_counts(matches, postings, groups: list):
+def _tuple_counts(matches, hits, groups: list):
     """Distinct feature tuples + doc counts over the match set: one hit
-    pass per term group (field), then chained per-doc cross products.
+    lookup (`hits(matches, terms)`, `_hits_of`'s contract) per term
+    group (field), then chained per-doc cross products.
     `groups` is a list of facet-term lists (2 or 3 fields); the packed
     key of tuple (a, b[, c]) is ((a * nB + b) [* nC + c]) -- multiplier
     packing so callers can decode with plain divmod over group sizes."""
-    keys, pos = _hits_of(matches, postings, groups[0])
+    keys, pos = hits(matches, groups[0])
     for g in groups[1:]:
-        gi, gp = _hits_of(matches, postings, g)
+        gi, gp = hits(matches, g)
         keys, pos = _pair_expand(keys, pos, gi, gp, len(g))
     if not keys.size:
         z = np.empty(0, dtype=np.int64)
@@ -598,22 +736,12 @@ def _times_of(matches: np.ndarray, times: dict) -> np.ndarray:
     return ts
 
 
-def _value_hits(matches: np.ndarray, postings: dict, spec: dict):
-    """(facet terms, value_idx, position-into-matches) of every facet
-    posting inside the match set. The terms are the spec's list or, in
-    streamed facet mode (`facet_prefixes`), the prefix-matching terms
-    among the decoded postings themselves -- sorted, so value order
-    (composed-term order) is deterministic. Streamed mode lets a field's
-    whole (uncapped) value space flow through the exchange without ever
-    materializing a value list on the driver, the Spark rendering of
-    Distincts.gatherDirect streaming the whole term range
-    (Distincts.java:69-140): the driver stays O(result), not O(value
-    space)."""
-    terms = spec["facet_terms"]
-    if terms is None:
-        pfx = tuple(spec["facet_prefixes"] or ())
-        terms = sorted(t for t in postings if t.startswith(pfx))
-    return (terms, *_hits_of(matches, postings, terms))
+def _value_hits(matches: np.ndarray, hits, spec: dict):
+    """(facet terms, value_idx, position-into-matches) of every hit of
+    the spec's facet value list inside the match set, through the
+    route's hit lookup."""
+    terms = spec["facet_terms"] or []
+    return (terms, *hits(matches, terms))
 
 
 def _term_col(terms: list, idx: np.ndarray) -> np.ndarray:
@@ -623,18 +751,20 @@ def _term_col(terms: list, idx: np.ndarray) -> np.ndarray:
 # -- agg reducers ------------------------------------------------------------
 # One per agg mode, run by both routes: the composite kernel on a task's
 # match set and the serving node on the query's. Each takes the sorted
-# composite (pid << 32 | doc_id) match set, the decoded postings map
-# (term -> sorted composite ids), `times` (sorted composite ids ->
-# warc_us) and the op's spec, and returns {column: ndarray} with the
-# mode's `_AGG_COLUMNS`. Facet values leave as composed term strings.
+# composite (pid << 32 | doc_id) match set, `hits` (match set, composed
+# terms -> `_hits_of`'s (value_idx, position) arrays: `_posting_hits`
+# over the task's postings in the kernel, `_forward_hits` over the
+# forward value columns on the serving node), `times` (sorted composite
+# ids -> warc_us) and the op's spec, and returns {column: ndarray} with
+# the mode's `_AGG_COLUMNS`. Facet values leave as composed term strings.
 
 
-def _reduce_count(matches, postings, times, spec) -> dict:
+def _reduce_count(matches, hits, times, spec) -> dict:
     """The match count (retrieval without ranking)."""
     return {"cnt": np.array([matches.size], dtype=np.int64)}
 
 
-def _reduce_waveform(matches, postings, times, spec) -> dict:
+def _reduce_waveform(matches, hits, times, spec) -> dict:
     """Per-bucket match counts -- the analytics waveform
     (Analytics.java:164-183 ANDs the constrained filter with per-bucket
     time bitmaps; here matched ids index their pids' time arrays and
@@ -644,13 +774,13 @@ def _reduce_waveform(matches, postings, times, spec) -> dict:
     return {"bucket": ub, "cnt": cnt.astype(np.int64)}
 
 
-def _reduce_stumptown(matches, postings, times, spec) -> dict:
+def _reduce_stumptown(matches, hits, times, spec) -> dict:
     """The waveform AND the k newest matches from one pass over the
     match set (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
     activities off the answer's descending iterator + the same answer's
     boundedCardinalities). Newest is the largest ids: pids are time
     buckets and docIDs are minted time-ordered within a pid."""
-    wf = _reduce_waveform(matches, postings, times, spec)
+    wf = _reduce_waveform(matches, hits, times, spec)
     k = spec["k"]
     newest = matches[-k:] if k > 0 else matches[:0]
     z = np.zeros(newest.size, dtype=np.int64)
@@ -663,11 +793,11 @@ def _reduce_stumptown(matches, postings, times, spec) -> dict:
     }
 
 
-def _reduce_distincts(matches, postings, times, spec) -> dict:
+def _reduce_distincts(matches, hits, times, spec) -> dict:
     """|match AND postings(value)| per present facet value -- the
     distincts gatherer (DistinctsQuery filter + gatherDistinctsForField)
     as intersection counts."""
-    terms, vi, _pi = _value_hits(matches, postings, spec)
+    terms, vi, _pi = _value_hits(matches, hits, spec)
     cnt = np.bincount(vi, minlength=len(terms))
     present = np.flatnonzero(cnt)
     return {
@@ -676,12 +806,12 @@ def _reduce_distincts(matches, postings, times, spec) -> dict:
     }
 
 
-def _reduce_aggregate(matches, postings, times, spec) -> dict:
+def _reduce_aggregate(matches, hits, times, spec) -> dict:
     """Per present facet value, its match count and its newest matching
     id (AggregateCounts.java distinct-latest + count). Hits are grouped
     by value with positions ascending, so a value's newest doc is its
     last hit."""
-    terms, vi, pi = _value_hits(matches, postings, spec)
+    terms, vi, pi = _value_hits(matches, hits, spec)
     cnt = np.bincount(vi, minlength=len(terms))
     present = np.flatnonzero(cnt)
     last = np.cumsum(cnt[present]) - 1
@@ -692,11 +822,11 @@ def _reduce_aggregate(matches, postings, times, spec) -> dict:
     }
 
 
-def _reduce_waveforms(matches, postings, times, spec) -> dict:
+def _reduce_waveforms(matches, hits, times, spec) -> dict:
     """Per (facet value, bucket) match counts in one pass -- trending's
     batched shape (TrendingInjectable computes an analytics waveform per
     distinct term)."""
-    terms, vi, pi = _value_hits(matches, postings, spec)
+    terms, vi, pi = _value_hits(matches, hits, spec)
     if vi.size:
         b, ok = _bucket_index(times(matches), spec)
         if ok is not None:
@@ -715,7 +845,7 @@ def _reduce_waveforms(matches, postings, times, spec) -> dict:
     return {"term": _term_col(terms, vi), "bucket": hb, "cnt": cnt}
 
 
-def _reduce_metrics(matches, postings, times, spec) -> dict:
+def _reduce_metrics(matches, hits, times, spec) -> dict:
     """Per bucket with matches: the SUM of a numeric field over its facet
     hits, the number of hits (a bucket reports iff one hit it -- a sum of
     exactly 0 still reports) and its match count (the avg denominator,
@@ -727,7 +857,7 @@ def _reduce_metrics(matches, postings, times, spec) -> dict:
     from ..fields import FIELD_SEP, decode_num
 
     b, ok = _bucket_index(times(matches), spec)
-    terms, vi, pi = _value_hits(matches, postings, spec)
+    terms, vi, pi = _value_hits(matches, hits, spec)
     if ok is not None:
         keep = ok[pi]
         vi, pi = vi[keep], pi[keep]
@@ -747,7 +877,7 @@ def _reduce_metrics(matches, postings, times, spec) -> dict:
     }
 
 
-def _reduce_pairs(matches, postings, times, spec) -> dict:
+def _reduce_pairs(matches, hits, times, spec) -> dict:
     """Feature-tuple doc-co-occurrence counts over the match set -- the
     counting core of gatherFeatures (MiruAggregateUtil.gatherFeatures
     :77-291: per answer activity, count each observed combination of
@@ -758,7 +888,7 @@ def _reduce_pairs(matches, postings, times, spec) -> dict:
     keys = [np.empty(0, dtype=np.int64)]
     cnts = [np.empty(0, dtype=np.int64)]
     for off, groups in spec["tuple_specs"] or ():
-        k, c = _tuple_counts(matches, postings, groups)
+        k, c = _tuple_counts(matches, hits, groups)
         keys.append(k + off)
         cnts.append(c.astype(np.int64))
     return {"key": np.concatenate(keys), "cnt": np.concatenate(cnts)}
@@ -805,7 +935,8 @@ def _make_composite_kernel(
     (newest first, FullText.collectTime:222-251) go out with score 0.
     With `agg` nothing is scored either: the task's match set goes to
     the mode's reducer (`_REDUCERS`, the one the serving node runs, with
-    the `spec` from `_agg_spec`) and its columns leave the task.
+    the `spec` from `_agg_spec` and `_posting_hits` over the task's
+    postings as its hit lookup) and its columns leave the task.
 
     Row kinds: 'p' posting blocks (phrase members carry pos_bin);
     't' time-index rows -- a boundary pid's resolve its exact [lo, hi)
@@ -873,12 +1004,13 @@ def _make_composite_kernel(
             idf or {}, avgdl, score,
         )
         if reduce is not None:
+            hits, rspec = _posting_hits(cmap, spec)
             out = reduce(
-                matches, cmap,
+                matches, hits,
                 lambda ids: _times_of(
                     ids, {p: warc(p) for p in np.unique(ids >> 32).tolist()}
                 ),
-                spec,
+                rspec,
             )
             return pd.DataFrame({c: out[c] for c in out_cols})
         order = (
@@ -1061,11 +1193,18 @@ class SearchEngine(FeatureOpsMixin):
         self._post_cache_lock = Lock()  # concurrent serving threads
         # per-pid forward-index caches, filled on first touch of a pid
         # (see _fwd_cached): decoded time arrays (waveform/analytics,
-        # time bounds) and docmap arrays (display gathers). One entry
-        # per doc, one shared cap of 2 x local_max_postings entries
+        # time bounds), docmap arrays (display gathers) and, per facet
+        # field, value columns (serving-node facet hits, _forward_hits).
+        # One entry per doc (plus one per multi-valued CSR value), one
+        # shared cap of 2 x local_max_postings entries
         self._times_cache: dict = {}
         self._docmap_cache: dict = {}
+        self._value_cache: dict = {}  # field -> {pid: (offs, vals)}
         self._fwd_cache_entries = 0
+        # pinned-dictionary memos: field_terms slices, and per field the
+        # composed term -> value id map its forward columns index by
+        self._field_terms_memo: dict = {}
+        self._value_ids: dict = {}
         # strut score cache (StrutModelScorer.java analog): repeated
         # model-scored strut questions skip the feature gather entirely;
         # keyed by model + request + index version (featureops.strut)
@@ -1147,6 +1286,7 @@ class SearchEngine(FeatureOpsMixin):
             self._post_cache_entries = 0
             self._times_cache.clear()
             self._docmap_cache.clear()
+            self._value_cache.clear()
             self._fwd_cache_entries = 0
 
     def _postings_with_pos(self) -> DataFrame:
@@ -1217,6 +1357,10 @@ class SearchEngine(FeatureOpsMixin):
         )
         return [r["term"] for r in rows]
 
+    # memoized field_terms slices kept at most (typeahead prefixes
+    # would otherwise grow the memo without bound)
+    FIELD_TERMS_MEMO_MAX = 1024
+
     def field_terms(
         self, field: str, prefixes=None, min_df: int = 0
     ) -> list[str]:
@@ -1232,7 +1376,11 @@ class SearchEngine(FeatureOpsMixin):
         matching ANY prefix.
 
         Pinned-dictionary path: a bisect slice of the driver-resident
-        sorted term list -- free and exact. Unpinned path: ONE Spark
+        sorted term list, exact and memoized per (field, prefixes,
+        min_df) -- the dictionary is immutable per engine -- returned as
+        a fresh list so no caller can mutate the memo; the whole-field
+        slice is the value-id dictionary the serving node's forward
+        value columns index (`_field_ids`). Unpinned path: ONE Spark
         collect of the field's composed terms, output-sized (callers
         that return the full value set are O(values) anyway; the
         distributed facet kernels stream values through the exchange via
@@ -1253,12 +1401,19 @@ class SearchEngine(FeatureOpsMixin):
             pfx = list(prefixes) or [""]
         keys = sorted({f"{field}{FIELD_SEP}{p}" for p in pfx})
         if self._terms_sorted is not None:
-            if len(keys) == 1:
-                return self._prefix_scan(keys[0], None, min_df)
-            out_set: set[str] = set()
-            for kp in keys:
-                out_set.update(self._prefix_scan(kp, None, min_df))
-            return sorted(out_set)
+            memo = self._field_terms_memo
+            key = (tuple(keys), int(min_df))
+            got = memo.get(key)
+            if got is None:
+                out_set: set[str] = set()
+                for kp in keys:
+                    out_set.update(self._prefix_scan(kp, None, min_df))
+                got = tuple(sorted(out_set))
+                with self._post_cache_lock:
+                    if len(memo) >= self.FIELD_TERMS_MEMO_MAX:
+                        memo.pop(next(iter(memo)))  # oldest first
+                    memo[key] = got
+            return list(got)
         cond = None
         for kp in keys:
             c = F.col("term").startswith(kp)
@@ -2053,7 +2208,7 @@ class SearchEngine(FeatureOpsMixin):
                 f"estimated postings {est:,} exceed the serving budget "
                 f"local_max_postings={self.local_max_postings:,}"
             )
-        local = not reasons
+        local = self._route(prep, None)
 
         term_df = self._term_df or {}
         per_term = {
@@ -2171,18 +2326,17 @@ class SearchEngine(FeatureOpsMixin):
                 "cap": None,
                 "facet_postings": fest,
                 "route": (
-                    "serving-node"
-                    if local
-                    and fest is not None
-                    and est + fest <= self.local_max_postings
+                    "serving-node" if self._route(prep, None, fterms)
                     else "distributed-kernel (streamed facet values)"
                 ),
                 "note": (
-                    "distincts/metrics/trending/aggregate_counts probe "
-                    "these values' postings against the match set; the "
-                    "serving budget adds facet_postings to "
-                    "estimated_postings; the distributed kernel streams "
-                    "the field's whole composed-term range by prefix"
+                    "distincts/metrics/trending/aggregate_counts on the "
+                    "serving node read the matched docs' values from "
+                    "per-pid forward value columns (built once per pid "
+                    "from these values' postings); the serving budget "
+                    "adds facet_postings to estimated_postings; the "
+                    "distributed kernel streams the field's whole "
+                    "composed-term range by prefix"
                 ),
             }
         return rep
@@ -2310,31 +2464,62 @@ class SearchEngine(FeatureOpsMixin):
         arrays -- the serving node's `times` lookup for the reducers."""
         return _times_of(ids, self._pid_times(np.unique(ids >> 32)))
 
+    def _field_ids(self, field: str) -> dict:
+        """Composed term -> value id (its index in the pinned
+        `field_terms(field)` slice) for one field, memoized: the value
+        ids the field's forward value columns hold."""
+        ids = self._value_ids.get(field)
+        if ids is None:
+            ids = {t: i for i, t in enumerate(self.field_terms(field))}
+            self._value_ids[field] = ids
+        return ids
+
+    def _value_columns(self, field: str, pids) -> dict:
+        """Per-pid forward value columns of one field (`_invert_postings`
+        shape), through the shared forward-index cache budget."""
+        return self._fwd_cached(
+            self._value_cache.setdefault(field, {}), pids,
+            lambda missing: self._load_values(field, missing),
+        )
+
+    def _load_values(self, field: str, pids: list) -> dict:
+        """Build the value columns of `pids` by inverting the field's
+        postings over those pids, read through the same row-group
+        fetch and decoder as every posting (so `as_of` and lineage
+        views hold; no extra index data)."""
+        ids = self._field_ids(field)
+        tbl = self._fetch_posting_rows(
+            list(ids), (min(pids), max(pids)), self._POSTING_COLS[:5]
+        )
+        dec = self._decode_posting_table(tbl)[0]
+        return _invert_postings(
+            {t: v[0] for t, v in dec.items()}, ids, pids, self.pid_counts
+        )
+
     def _agg(self, prep: dict, agg: str, local: bool, shape=None, **spec):
         """Run one agg mode's reducer (`_REDUCERS`) on the chosen route
         and return its {column: ndarray}. Serving node: the query's
-        match set, the facet postings through the LRU and the cached time
-        arrays -- zero Spark jobs, no pandas. Distributed: ONE kernel
-        job; task outputs merge in Spark by the fixed column rules
-        (`_merged`), or through `shape` (frame -> frame) for an op that
-        cuts or collects differently. Either way the op's finishing step
-        reads the same columns. `spec` is `kernel_frame`'s agg keyword
-        arguments; given both a facet value list and prefixes, the
-        serving node probes the (pinned) list and the kernel streams the
-        field's values by prefix."""
+        match set, facet hits read from the per-pid forward value
+        columns (`_forward_hits`; no facet-term postings are fetched)
+        and the cached time arrays -- zero Spark jobs, no pandas.
+        Distributed: ONE kernel job; task outputs merge in Spark by the
+        fixed column rules (`_merged`), or through `shape` (frame ->
+        frame) for an op that cuts or collects differently. Either way
+        the op's finishing step reads the same columns. `spec` is
+        `kernel_frame`'s agg keyword arguments; given both a facet value
+        list and prefixes, the serving node looks up the (pinned) list
+        and the kernel streams the field's values by prefix."""
         spec = _agg_spec(**spec)
         if spec["facet_prefixes"]:
             spec["facet_prefixes" if local else "facet_terms"] = None
         if local:
-            matches = self._local_match_ids(prep)
-            terms = set(spec["facet_terms"] or ())
-            for _off, groups in spec["tuple_specs"] or ():
-                terms.update(t for g in groups for t in g)
-            postings = (
-                self._postings_maps(sorted(terms), prep["pid_range"])[0]
-                if terms and matches.size else {}
+            return _REDUCERS[agg](
+                self._local_match_ids(prep),
+                lambda m, terms: _forward_hits(
+                    m, terms, self._field_ids, self._value_columns
+                ),
+                self._match_times, spec,
             )
-            return _REDUCERS[agg](matches, postings, self._match_times, spec)
         frame = self.kernel_frame(None, prep=prep, agg=agg, **spec)
         # a keyless merge over zero rows (count) yields one null row
         rows = [
@@ -2621,8 +2806,9 @@ class SearchEngine(FeatureOpsMixin):
         from ..fields import FIELD_SEP, NUMERIC_FIELDS, decode_num
 
         # UNCAPPED value enumeration (field_terms; the serving path
-        # probes the pinned list, the distributed kernel streams values
-        # by prefix -- no cap on either route)
+        # looks the pinned list up in the forward value columns, the
+        # distributed kernel streams values by prefix -- no cap on
+        # either route)
         pinned = self._terms_sorted is not None
         facet_terms = self.field_terms(field) if pinned else None
         if pinned and not facet_terms:
@@ -2757,9 +2943,10 @@ class SearchEngine(FeatureOpsMixin):
         desc then value asc, length <= top_n.
 
         Every per-value waveform comes out of ONE `_reduce_waveforms`
-        pass over the match set (serving: one concatenated facet-hit
-        probe; distributed: ONE kernel job emitting (value term, bucket,
-        count) rows) -- never a job or scan per candidate value.
+        pass over the match set (serving: one take of the forward value
+        columns; distributed: ONE kernel job emitting (value term,
+        bucket, count) rows) -- never a job or scan per candidate
+        value.
 
         `segments=N` (requires `time_range_us`) scores over the
         reference's exact divideTimeRangeIntoNSegments waveform shape
@@ -3114,7 +3301,8 @@ class SearchEngine(FeatureOpsMixin):
         streamed gather.
 
         Both routes run `_reduce_distincts`. Serving path: zero Spark
-        jobs -- one match pass, then one concatenated facet-hit probe.
+        jobs -- one match pass, then one take of the field's forward
+        value columns at the matched docs.
         Distributed path: ONE job; facet-term postings ride the same
         kernel exchange as the query's (all tf/dl blobs shed) and each
         task emits only (value term, count) rows."""

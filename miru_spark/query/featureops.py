@@ -30,10 +30,10 @@ Re-expresses, over the blocked-postings index (not the event table):
 Spark-first shape: every hop is one engine reducer
 (`_reduce_distincts` for value presence, `_reduce_pairs` for tuple
 counts) run through `SearchEngine._agg` on the route `_route` picks --
-the serving node (zero Spark jobs: match evaluation + one concatenated
-searchsorted pass per field group) or ONE composite-kernel job whose
-tasks run the same reducer and emit only (value term, count) or
-(packed tuple, count) rows. Postings blobs never cross an exchange,
+the serving node (zero Spark jobs: match evaluation + one take of the
+per-pid forward value columns per field group) or ONE composite-kernel
+job whose tasks run the same reducer and emit only (value term, count)
+or (packed tuple, count) rows. Postings blobs never cross an exchange,
 candidate x value cross products happen per-DOC inside a task, and the
 global merge is a groupBy over at most |observed tuples| rows. No
 all-pairs joins at any scale.
@@ -231,9 +231,9 @@ class FeatureOpsMixin:
     ) -> list:
         """Per-spec (keys, counts) for several tuple specs (`_tuple_specs`)
         out of ONE `_reduce_pairs` gather: the serving path shares one
-        match evaluation + postings fetch; the distributed path batches
-        every spec into ONE kernel job via per-spec int64 key offsets,
-        globally merged by a sum groupBy."""
+        match evaluation + forward-column lookup; the distributed path
+        batches every spec into ONE kernel job via per-spec int64 key
+        offsets, globally merged by a sum groupBy."""
         cols = self._agg(prep, "pairs", local, tuple_specs=specs)
         o = np.argsort(cols["key"], kind="stable")
         allk, allc = cols["key"][o], cols["cnt"][o]
@@ -597,7 +597,7 @@ class FeatureOpsMixin:
                 return []
             field_groups = dict(zip(fnames, narrowed[1:]))
         # every feature's tuple counts come out of ONE gather: the
-        # serving path shares one match evaluation + postings fetch
+        # serving path shares one match evaluation + value-column take
         # across features; the distributed path batches all features
         # into ONE kernel job via per-feature key offsets (tuple_specs)
         # -- F catwalk features never cost F jobs.

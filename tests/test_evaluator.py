@@ -649,6 +649,12 @@ def test_agg_reducers_merge_over_pid_splits_and_match_kernel(sc):
     def times(ids):
         return E._times_of(ids, warcs)
 
+    def reduce_on(reduce, matches, post, spec):
+        # the kernel's hit lookup over `post` (streamed prefix mode
+        # resolves to the prefix-matching terms among them)
+        hits, spec = E._posting_hits(post, spec)
+        return reduce(matches, hits, times, spec)
+
     def composite(pids, pick):
         terms = docs[pids[0]][2] if pids else {}
         return {
@@ -680,18 +686,19 @@ def test_agg_reducers_merge_over_pid_splits_and_match_kernel(sc):
     for agg in AGGS:
         spec = sc["specs"][agg]
         reduce = E._REDUCERS[agg]
-        union = reduce(m_all, post_all, times, spec)
+        union = reduce_on(reduce, m_all, post_all, spec)
         assert _canon(union, agg, spec["k"]) == _ref_agg(
             m_all, post_all, warcs, agg, spec
         ), agg
         split = [
-            reduce(
+            reduce_on(
+                reduce,
                 np.concatenate(
                     [(p << 32) + sub[p] for p in part]
                     or [np.empty(0, dtype=np.int64)]
                 ),
                 composite(part, lambda _p, ids: ids),
-                times, spec,
+                spec,
             )
             for part in parts
         ]
@@ -715,9 +722,29 @@ def test_agg_reducers_merge_over_pid_splits_and_match_kernel(sc):
             E._decode_times = real
         assert list(out.columns) == E._kernel_columns(agg)
         got = {c: out[c].to_numpy() for c in out.columns}
-        want = reduce(q_matches, post_all, times, spec)
+        want = reduce_on(reduce, q_matches, post_all, spec)
         assert _canon(got, agg, spec["k"]) == _canon(
             want, agg, spec["k"]
         ), agg
         matched = {int(p) for p in np.unique(q_matches >> 32).tolist()}
         assert calls["n"] <= (len(matched) if agg in E._TIME_AGGS else 0)
+
+
+def test_bucket_index_segment_edges():
+    """Segment mode keeps exactly [origin, origin + count * dur): the
+    last kept microsecond lands in bucket count - 1, while origin - 1
+    and origin + count * dur are dropped -- by `_bucket_index` and so
+    by the waveform reducer."""
+    origin, dur, count = 1_000_000, 250, 4
+    end = origin + count * dur
+    spec = E._agg_spec(
+        bucket_us=dur, bucket_origin_us=origin, bucket_count=count
+    )
+    ts = np.array([origin - 1, origin, end - 1, end], dtype=np.int64)
+    b, ok = E._bucket_index(ts, spec)
+    assert ok.tolist() == [False, True, True, False]
+    assert b[ok].tolist() == [0, count - 1]
+    ids = np.arange(ts.size, dtype=np.int64)
+    wf = E._reduce_waveform(ids, None, lambda m: ts[m], spec)
+    assert wf["bucket"].tolist() == [0, count - 1]
+    assert wf["cnt"].tolist() == [1, 1]

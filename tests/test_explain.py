@@ -123,6 +123,34 @@ def test_explain_facet_view(eng):
     json.dumps(rep)
 
 
+@pytest.mark.parametrize("over", [False, True])
+def test_explain_facet_route_is_the_route_distincts_takes(eng, spark, over):
+    """`explain(q, field=f)["facet"]["route"]` comes from the one routing
+    rule, so it names the route `distincts(f, q)` then takes -- seen as
+    Spark jobs launched or not -- on both sides of the serving budget
+    (`over`: the query alone fits, its facet postings push it over)."""
+    q, field = "w000001", "lang"
+    want = eng.distincts(field, q)
+    tracker = spark.sparkContext.statusTracker()
+    old = eng.local_max_postings
+    try:
+        if over:
+            eng.local_max_postings = eng.explain(q)["estimated_postings"]
+        rep = eng.explain(q, field=field)
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        got = eng.distincts(field, q)
+        jobs = len(tracker.getJobIdsForGroup(None) or []) - before
+    finally:
+        eng.local_max_postings = old
+    assert rep["route"] == "serving-node"
+    assert rep["facet"]["route"] == (
+        "distributed-kernel (streamed facet values)" if over
+        else "serving-node"
+    )
+    assert (jobs > 0) == over
+    assert got == want
+
+
 def test_explain_prefix_expansion_counts(eng):
     rep = eng.explain("w00004*", k=10)
     n = rep["prefix_expansions"]["w00004"]

@@ -332,7 +332,7 @@ def test_tuple_counts_matches_bruteforce_property():
     import numpy as np
     from hypothesis import given, settings, strategies as st
 
-    from miru_spark.query.engine import _tuple_counts
+    from miru_spark.query.engine import _hits_of, _tuple_counts
 
     @settings(max_examples=60, deadline=None)
     @given(st.data())
@@ -366,7 +366,9 @@ def test_tuple_counts_matches_bruteforce_property():
                     [d for d in range(n_docs) if v in assign[g][d]],
                     dtype=np.int64,
                 )
-        keys, counts = _tuple_counts(matches, postings, groups)
+        keys, counts = _tuple_counts(
+            matches, lambda m, ts: _hits_of(m, postings, ts), groups
+        )
         got = dict(zip(keys.tolist(), counts.tolist()))
         want: dict = {}
         for d in range(n_docs):

@@ -1,8 +1,9 @@
 """Round-5 review fixes (ADVICE.md r4): dual-role prefix expansion,
 newest() fallback ordering, per-run streaming batch counts. Also the
 serving node's per-pid forward-index cache: warm searches scan no
-parquet, the cache keeps its budget, and search_many's two url
-resolutions drop the same docmap-less winners."""
+parquet, warm facet panels fetch no facet postings, the cache keeps its
+budget, and search_many's two url resolutions drop the same
+docmap-less winners."""
 
 import os
 import sys
@@ -280,24 +281,101 @@ def test_warm_serving_search_scans_no_dataset(spark, eng, monkeypatch):
     assert all(cold.values())
 
 
+def _panels(e, term: str, local=None) -> dict:
+    """A dashboard page's panel set, `count` ... `reco`, on one term.
+    `local=True` forces the serving node where an op takes it."""
+    loc = {} if local is None else {"local": local}
+    return {
+        "count": e.count(term, **loc),
+        "waveform": e.waveform(term, bucket_seconds=86400, **loc),
+        "distincts": e.distincts("lang", term, **loc),
+        "metrics": e.metrics("site", term, 86400, "avg", **loc),
+        "trending": e.trending("lang", term, bucket_seconds=86400),
+        "gather_features": e.gather_features(
+            ("lang", "site"), query=term, **loc
+        ),
+        "strut": e.strut("lang", [(1.0, "site")], query=term, k=10, **loc),
+        "reco": e.reco(
+            ("lang", "de"), "site", "lang", "doclen", k=10,
+            constraints=term, **loc,
+        ),
+        "aggregate": e.aggregate_counts("lang", term, **loc),
+    }
+
+
+def test_warm_facet_panels_fetch_no_facet_postings(spark, eng, monkeypatch):
+    """A warm serving engine answers the facet panels from its forward
+    value columns: with the postings LRU emptied, the only posting rows
+    it fetches are the terms of the panels' own match trees (reco's
+    hops query by lang and site terms) -- never a facet field's value
+    enumeration, such as reco's `doclen` field3. The answers equal a
+    cold engine's and a distributed (`local_max_postings=0`) engine's."""
+    from miru_spark.fields import FIELD_SEP
+
+    term = "w000002"
+    e = SearchEngine(spark, eng.paths.root)
+    try:
+        cold = _panels(e, term)
+        assert set(e._value_cache) == {"lang", "site", "doclen"}
+        fetched, queried = set(), set()
+        real_fetch, real_prep = e._fetch_posting_rows, e._prep_tree
+
+        def fetch(terms, *a, **kw):
+            fetched.update(terms)
+            return real_fetch(terms, *a, **kw)
+
+        def prep(*a, **kw):
+            p = real_prep(*a, **kw)
+            queried.update(p["fetch_terms"])
+            return p
+
+        monkeypatch.setattr(e, "_fetch_posting_rows", fetch)
+        monkeypatch.setattr(e, "_prep_tree", prep)
+        with e._post_cache_lock:
+            e._post_cache.clear()
+            e._post_cache_entries = 0
+        warm = _panels(e, term)
+    finally:
+        e.close()
+    facet = {t for t in fetched if FIELD_SEP in t}
+    assert fetched and facet <= queried, sorted(facet - queried)[:5]
+    assert not any(t.startswith("doclen" + FIELD_SEP) for t in fetched)
+    dist = SearchEngine(spark, eng.paths.root, local_max_postings=0)
+    try:
+        distributed = _panels(dist, term)
+    finally:
+        dist.close()
+    assert warm == cold == distributed
+    assert all(v for k, v in cold.items() if k != "count")
+
+
 def test_fwd_cache_stays_in_budget(spark, eng):
-    """A tiny local_max_postings caps the time-index and docmap caches
-    together at 2 x local_max_postings docs (here below the index's 800
-    docs, so some pid is refused) and the answers do not change. At 390
-    the one-term queries still take the serving route."""
+    """A tiny local_max_postings caps the time-index, docmap and facet
+    value-column caches together at 2 x local_max_postings entries (here
+    below the index's 800 docs, so some pid is refused) and the answers
+    -- searches and the facet panels -- do not change. At 390 the
+    one-term queries still take the serving route; the facet panels are
+    forced onto it (trending, which takes no `local`, routes itself)."""
     rows = generate_rows(range(N))
-    want = _serving_answers(eng, rows)
+    want = _serving_answers(eng, rows), _panels(eng, "w000002")
     tiny = SearchEngine(spark, eng.paths.root, local_max_postings=390)
     try:
-        got = _serving_answers(tiny, rows)
-        kept = sum(a.size for a in tiny._times_cache.values()) + sum(
-            docs.size for docs, _u, _w in tiny._docmap_cache.values()
+        got = _serving_answers(tiny, rows), _panels(tiny, "w000002", True)
+        kept = (
+            sum(a.size for a in tiny._times_cache.values())
+            + sum(docs.size for docs, _u, _w in tiny._docmap_cache.values())
+            + sum(
+                vals.size + (0 if offs is None else offs.size)
+                for cols in tiny._value_cache.values()
+                for offs, vals in cols.values()
+            )
         )
         assert 0 < tiny._fwd_cache_entries == kept <= 2 * 390
     finally:
         tiny.close()
     assert tiny._fwd_cache_entries == 0
     assert not tiny._times_cache and not tiny._docmap_cache
+    assert not tiny._value_cache
     assert got == want
 
 
