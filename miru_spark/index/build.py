@@ -15,12 +15,15 @@ MiruIndexPrimaryFields.compose, MiruIndexPrimaryFields.java:37-96 -- per
    WikiMiruIndexService.java:401-425); inverts each doc-range block
    (`blk = doc_id // block_span`) with Arrow sort + NumPy reduceat; and
    emits BOTH forward-index doc rows AND encoded posting-block rows
-   (delta-gap varint docIDs + varint tfs + varint doc lengths, with
-   per-block first/last doc, max_tf, min_dl for block-max pruning) into
-   one union output -- the analog of miru's "atomized" Roaring containers
-   keyed by 64K container (LabInvertedIndex.java:268-292,
-   LabFieldIndex.java:163-171). Tokenized text exists only inside the
-   Python worker for the lifetime of one block.
+   (delta-gap varint docIDs + varint tfs + varint doc lengths) into
+   one union output -- the analog of miru's "atomized" Roaring
+   containers keyed by 64K container (LabInvertedIndex.java:268-292,
+   LabFieldIndex.java:163-171). A block row stores no per-block bounds
+   (first_doc/last_doc/max_tf/min_dl are null on 'p' rows): its doc
+   range is [blk * block_span, (blk + 1) * block_span), which readers
+   prune by, and block-max takes its bounds from the decoded arrays.
+   Tokenized text exists only inside the Python worker for the lifetime
+   of one block.
 2. **lineage / resume** -- per-pid lineage rows (doc_count, postings_bytes,
    wall_time_ms, status) let a restarted build skip completed partitions,
    mirroring the reference's sip-cursor checkpoint pattern
@@ -53,7 +56,9 @@ Scale notes (100 TB / 1000 executors):
   query term touches ~1 row group per file and Parquet min/max stats on
   `term` prune sharply. (pid-major sorting made every row group span the
   whole vocabulary: a 2-term query read 3,263 of 4,058 row groups / 1.2 GB
-  at 6M docs; term-major reads ~2% of that.)
+  at 6M docs; term-major reads ~2% of that.) Row groups hold at most
+  1,024 rows, so a rare term's point read decodes about a thousand rows,
+  not the ~10k a 1 MiB group holds.
 - No global sort, no global sequence, no driver-side loop over data.
 """
 
@@ -126,9 +131,10 @@ _SEGMENT_SCHEMA = (
 )
 
 _DOC_COLS = ["pid", "doc_id", "url", "warc_us", "doc_len"]
+# the posting-blocks view: what readers of 'p' rows use (ctf feeds
+# termstats); first_doc/last_doc/max_tf/min_dl are null on 'p' rows
 _POSTING_COLS = [
-    "pid", "term", "blk", "n", "first_doc", "last_doc",
-    "max_tf", "min_dl", "ctf", "ids_bin", "tfs_bin", "dls_bin",
+    "pid", "term", "blk", "n", "ctf", "ids_bin", "tfs_bin", "dls_bin",
 ]
 # time-index rows ('t'): per (pid, blk) varint blob of sorted warc_us
 # (first value absolute, then non-negative deltas) -- the LabTimeIndex
@@ -387,10 +393,13 @@ def _block_rows_from_flat(
             pc.take(term, pa.array(starts)),
             pa.array(np.full(k, blk, dtype=np.int64)),
             pa.array((ends - starts).astype(np.int32)),
-            pa.array(ids64[starts]),
-            pa.array(ids64[ends - 1]),
-            pa.array(np.maximum.reduceat(tfs64, starts).astype(np.int32)),
-            pa.array(np.minimum.reduceat(dls64, starts).astype(np.int32)),
+            # first_doc, last_doc, max_tf, min_dl: null on 'p' rows --
+            # readers bound a block by blk * block_span and block-max
+            # derives its bounds from the decoded arrays
+            _nulls(k, pa.int64()),
+            _nulls(k, pa.int64()),
+            _nulls(k, pa.int32()),
+            _nulls(k, pa.int32()),
             pa.array(np.add.reduceat(tfs64, starts)),
             pa.array(
                 encode_postings_grouped(ids64, starts, ends), type=pa.binary()
@@ -1074,16 +1083,18 @@ def _commit_write(df: DataFrame, base: str, tag: str, sort_cols: list[str]) -> N
         shutil.rmtree(final)
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    # small row groups (1 MiB vs the 128 MiB default): rows are sorted by
-    # (row_type, pid, term), so narrow row groups give the min/max stats
-    # real selectivity -- a 2-term query prunes to the few groups holding
-    # those terms instead of decompressing whole files. This is what makes
-    # point reads (serving-node query path, winner gather) proportional to
-    # the query's postings, not to segment size, and it holds at 100 TB
-    # because pruning is per row group, independent of file count.
+    # small row groups (at most 1 MiB and 1,024 rows, vs the 128 MiB
+    # default): rows are sorted term-major, so narrow row groups give the
+    # min/max stats real selectivity -- a 2-term query prunes to the few
+    # groups holding those terms instead of decompressing whole files.
+    # This is what makes point reads (serving-node query path, winner
+    # gather) proportional to the query's postings, not to segment size,
+    # and it holds at 100 TB because pruning is per row group, independent
+    # of file count. The row cap is what bounds a rare term's read: the
+    # byte cap alone lets a group of small posting rows reach ~10k rows.
     df.write.mode("overwrite").option(
         "parquet.block.size", str(1 << 20)
-    ).parquet(tmp)
+    ).option("parquet.block.row.count.limit", "1024").parquet(tmp)
     os.rename(tmp, final)
 
 

@@ -44,9 +44,11 @@ route for every op.
 
 **Block-max pruning (exact, serving node only, off by default).** Posting
 blocks are doc-range aligned across terms (blk = doc_id // block_span with
-one span for the whole index), so for a (pid, blk) cell the metadata-only
-bound  sum over scoring terms t of idf_t * BM25_tf(max_tf_t, min_dl_t)
-dominates every doc's score in it, and scoring a cell subset is exact for
+one span for the whole index), so for a (pid, blk) cell the bound
+sum over scoring terms t of idf_t * BM25_tf(max_tf_t, min_dl_t), with
+each term's max tf and min doc length taken from its decoded postings in
+the cell (the index stores no per-block bounds), dominates every doc's
+score in it, and scoring a cell subset is exact for
 the docs it contains. `SearchEngine._blockmax_local` runs the two phases
 (score the highest-bound cells until k docs -> theta; score every cell
 whose bound reaches theta) once LOCAL_BLOCKMAX_MIN_POSTINGS is lowered --
@@ -69,7 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..codec import decode_grouped_deltas, decode_varint
-from ..index.build import _POSTING_COLS, IndexPaths
+from ..index.build import _SEGMENT_PA_SCHEMA, IndexPaths
 from .featureops import FeatureOpsMixin
 from ..oracle import B, K1, MAX_WILDCARD_EXPANSION, bm25_idf
 from ..queryparse import (
@@ -80,13 +82,19 @@ from ..queryparse import (
     with_access,
 )
 
+_I64 = np.iinfo(np.int64)
 _AUX_TYPES = {
     "pid": "long", "term": "string", "blk": "long", "n": "int",
-    "first_doc": "long", "last_doc": "long", "max_tf": "int",
-    "min_dl": "int", "ctf": "long", "ids_bin": "binary",
-    "tfs_bin": "binary", "dls_bin": "binary", "pos_bin": "binary",
-    "df": "long",
+    "first_doc": "long", "ids_bin": "binary", "tfs_bin": "binary",
+    "dls_bin": "binary", "pos_bin": "binary", "df": "long",
 }
+# the 'p' posting-row columns the decoder reads (`_decode_rows`; phrase
+# reads add pos_bin), and the kernel exchange's columns: those plus
+# first_doc, which only 't' rows (block start) and 'x' rows (removed
+# doc_id) carry
+_POSTING_COLS = ["pid", "term", "blk", "n", "ids_bin", "tfs_bin", "dls_bin"]
+_KERNEL_COLS = _POSTING_COLS[:4] + ["first_doc"] + _POSTING_COLS[4:]
+_PHRASE_COLS = _POSTING_COLS[:6] + ["pos_bin"]
 
 
 def _pad_cols(df: DataFrame, cols: list[str], rk: str) -> DataFrame:
@@ -108,6 +116,14 @@ def _pad_cols(df: DataFrame, cols: list[str], rk: str) -> DataFrame:
 
 def _bm25_tf_part(tf, dl, avgdl: float):
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def _narrowed(a: np.ndarray) -> np.ndarray:
+    """A non-negative int array in the smallest unsigned dtype that
+    holds its max (values unchanged)."""
+    if not a.size:
+        return a
+    return a.astype(np.min_scalar_type(int(a.max())), copy=False)
 
 
 def _accumulate_term(scores, matches, ids, tfs, dls, idf_t, avgdl):
@@ -391,23 +407,25 @@ def _universe(pids, pid_counts: dict, bounds: dict) -> np.ndarray:
     return np.concatenate(spans) if spans else np.empty(0, dtype=np.int64)
 
 
-def _bounded_rows(rows, bounds: dict):
+def _bounded_rows(rows, bounds: dict, span: int | None):
     """considerIfLastIdGreaterThanN, block-granular: drop the posting rows
-    of a bounded pid whose [first_doc, last_doc] span misses its [lo, hi)
-    BEFORE the varint decode (the reference skips whole terms whose
-    lastId <= N during multi-term walks, LabFieldIndex.multiTxIndex
-    :339-419; blocks are delta-encoded per block, so dropping one is
-    decode-safe). Admissible for every node kind: matches are
+    of a bounded pid whose doc range [blk * span, (blk + 1) * span)
+    misses its [lo, hi) BEFORE the varint decode (the reference skips
+    whole terms whose lastId <= N during multi-term walks,
+    LabFieldIndex.multiTxIndex:339-419; blocks are delta-encoded per
+    block, so dropping one is decode-safe). The range covers every doc a
+    block can hold, so this keeps every block a [first_doc, last_doc]
+    test keeps. Admissible for every node kind: matches are
     bound-filtered before scoring, and a dropped negation block could
-    only remove docs the bound drops anyway."""
-    if not bounds or not len(rows):
+    only remove docs the bound drops anyway. `span` None keeps every
+    block."""
+    if not bounds or span is None or not len(rows):
         return rows
     pids = rows["pid"].to_numpy()
-    first = rows["first_doc"].to_numpy()
-    last = rows["last_doc"].to_numpy()
+    start = rows["blk"].to_numpy().astype(np.int64) * span
     keep = np.ones(len(rows), dtype=bool)
     for p, (lo, hi) in bounds.items():
-        keep &= (pids != p) | ((last >= lo) & (first < hi))
+        keep &= (pids != p) | ((start + span > lo) & (start < hi))
     return rows if keep.all() else rows[keep]
 
 
@@ -920,6 +938,7 @@ def _make_composite_kernel(
     strategy: str = "tfidf",
     agg: str | None = None,
     spec: dict | None = None,
+    block_span: int | None = None,
 ):
     """The distributed kernel, for every search shape and every agg mode:
     decode a task's rows ONCE into composite (pid << 32 | doc_id) arrays
@@ -940,7 +959,8 @@ def _make_composite_kernel(
 
     Row kinds: 'p' posting blocks (phrase members carry pos_bin);
     't' time-index rows -- a boundary pid's resolve its exact [lo, hi)
-    interval and drop its blocks outside it before decode, and in the
+    interval and drop its blocks whose `block_span` doc range misses it
+    before decode (None: keep every block), and in the
     time-bucketing agg modes every relevant pid's ride along, decoded
     only for pids with matches; 'z' match-all markers, one per relevant
     pid, which span the `pid_counts` universe; 'x' unpinned tombstones
@@ -986,7 +1006,7 @@ def _make_composite_kernel(
             _universe(np.unique(pids[rk == "z"]), pid_counts, bounds)
             if has_all else np.empty(0, dtype=np.int64)
         )
-        rows = _bounded_rows(pdf[rk == "p"], bounds)
+        rows = _bounded_rows(pdf[rk == "p"], bounds, block_span)
         dec, term_pos = _decode_rows(rows)
         cmap = {t: v[0] for t, v in dec.items()}
         idf = idf_map
@@ -1097,6 +1117,10 @@ class SearchEngine(FeatureOpsMixin):
             self.spark = spark
         spark = self.spark
         self.paths = IndexPaths(index_dir)
+        # a posting block holds docs [blk * span, (blk + 1) * span): the
+        # range every block-pruning reader bounds a block by
+        span = self.meta.get("block_span")
+        self._block_span = int(span) if span is not None else None
         from ..index.build import (
             _tags_as_of,
             read_docmap,
@@ -1201,9 +1225,11 @@ class SearchEngine(FeatureOpsMixin):
         self._docmap_cache: dict = {}
         self._value_cache: dict = {}  # field -> {pid: (offs, vals)}
         self._fwd_cache_entries = 0
-        # pinned-dictionary memos: field_terms slices, and per field the
-        # composed term -> value id map its forward columns index by
+        # pinned-dictionary memos: field_terms slices, facet value lists'
+        # df sums (`_facet_df`), and per field the composed term -> value
+        # id map its forward columns index by
         self._field_terms_memo: dict = {}
+        self._facet_df_memo: dict = {}
         self._value_ids: dict = {}
         # strut score cache (StrutModelScorer.java analog): repeated
         # model-scored strut questions skip the feature gather entirely;
@@ -1792,7 +1818,7 @@ class SearchEngine(FeatureOpsMixin):
                 "tfs_bin", F.lit(None).cast("binary")
             ).withColumn("dls_bin", F.lit(None).cast("binary"))
 
-        kcols = list(_POSTING_COLS)
+        kcols = list(_KERNEL_COLS)
         if phrase_terms:
             # position blobs ride the exchange ONLY for phrase member
             # terms; every other fetched term's pos_bin is nulled here,
@@ -1912,7 +1938,7 @@ class SearchEngine(FeatureOpsMixin):
         kernel = _make_composite_kernel(
             tree, scoring_terms, self.n_docs, self.avgdl, k, expansions,
             time_spec, self._removed_comp, idf_map, self.pid_counts,
-            strategy, agg=agg,
+            strategy, agg=agg, block_span=self._block_span,
             spec=_agg_spec(
                 k=k, bucket_us=bucket_us, bucket_origin_us=bucket_origin_us,
                 bucket_count=bucket_count, facet_terms=facet_terms,
@@ -1949,9 +1975,10 @@ class SearchEngine(FeatureOpsMixin):
         return files
 
     def _dataset(self):
-        """Lazy pyarrow dataset over the committed segment batch dirs.
-        Row-group min/max stats on (row_type, pid, term) give the same
-        pruning the Spark scan gets from PushedFilters."""
+        """Lazy pyarrow dataset over the committed segment batch dirs:
+        `_read_rows`' path when the row-group catalog is too large to
+        pin. Row-group min/max stats on (row_type, pid, term) give the
+        same pruning the Spark scan gets from PushedFilters."""
         if self._pads is None:
             import pyarrow.dataset as pads
 
@@ -1991,19 +2018,29 @@ class SearchEngine(FeatureOpsMixin):
         return self._pool
 
     def _rg_catalog(self):
-        """Driver-pinned row-group catalog: per posting-bearing row group,
-        (file_idx, rg_idx, term_min, term_max, pid_min, pid_max) read ONCE
-        from the parquet footers. A query then maps its fetch terms to the
-        exact row groups via bisect and reads them directly -- the
-        serving-node analog of the reference's memory-mapped index
-        metadata (LabInvertedIndex keys stay hot in page cache), replacing
-        a per-query dataset-filter evaluation over every footer."""
+        """Driver-pinned row-group catalog, read ONCE from the parquet
+        footers: per row group its file and group index, row count, and
+        row_type, term and pid min/max, one NumPy array per field. Every
+        serving-node storage read -- postings, time rows, docmap rows --
+        maps its predicate to the exact row groups with vectorized
+        compares and one searchsorted (`_plan_reads`) and reads them
+        directly: the serving-node analog of the reference's
+        memory-mapped index metadata (LabInvertedIndex keys stay hot in
+        page cache), with one copy of the footers per engine. Returns
+        (readers, catalog), or ([], None) above MAX_CATALOG_ROW_GROUPS."""
         if self._rgcat is not None:
             return self._rgcat
         with self._init_lock:
             if self._rgcat is not None:
                 return self._rgcat
             import pyarrow.parquet as pq
+
+            def minmax(st, absent):
+                # a group without stats is read for every predicate
+                return (
+                    (st.min, st.max)
+                    if st is not None and st.has_min_max else absent
+                )
 
             files = self._segment_files()
             readers, rows = [], []
@@ -2018,22 +2055,15 @@ class SearchEngine(FeatureOpsMixin):
                 ct, cp, cr = cols["term"], cols["pid"], cols["row_type"]
                 for i in range(md.num_row_groups):
                     rg = md.row_group(i)
-                    st_r = rg.column(cr).statistics
-                    if (
-                        st_r is not None
-                        and st_r.has_min_max
-                        and (st_r.max < "p" or st_r.min > "p")
-                    ):
-                        continue  # no posting rows in this group
                     st_t = rg.column(ct).statistics
-                    st_p = rg.column(cp).statistics
-                    tmin = tmax = None
-                    if st_t is not None and st_t.has_min_max:
-                        tmin, tmax = st_t.min, st_t.max
-                    pmin = pmax = None
-                    if st_p is not None and st_p.has_min_max:
-                        pmin, pmax = int(st_p.min), int(st_p.max)
-                    rows.append((fi, i, tmin, tmax, pmin, pmax))
+                    rows.append((
+                        fi, i, rg.num_rows,
+                        *minmax(rg.column(cr).statistics, ("", "\x7f")),
+                        st_t is not None and st_t.has_min_max,
+                        *minmax(st_t, ("", "")),
+                        *minmax(rg.column(cp).statistics,
+                                (_I64.min, _I64.max)),
+                    ))
                 if len(rows) > self.MAX_CATALOG_ROW_GROUPS:
                     # catalog too large to pin: the fallback path reads
                     # through _dataset(), so keeping the partially-opened
@@ -2042,82 +2072,147 @@ class SearchEngine(FeatureOpsMixin):
                         r.close()
                     self._rgcat = ([], None)
                     return self._rgcat
-            self._rgcat = (readers, rows)
+            names = ("fi", "rg", "rows", "rtmin", "rtmax", "tstat", "tmin",
+                     "tmax", "pmin", "pmax")
+            types = (np.int64, np.int64, np.int64, object, object, bool,
+                     object, object, np.int64, np.int64)
+            cat = {
+                n: np.array([r[j] for r in rows], dtype=t)
+                for j, (n, t) in enumerate(zip(names, types))
+            }
+            self._rgcat = (readers, cat)
         return self._rgcat
 
-    def _fetch_posting_rows(self, fetch_terms, pid_range, columns):
-        """Read exactly the row groups whose (term, pid) stat ranges can
-        contain the query's postings, via direct read_row_groups on the
-        pinned footer catalog; exact-filter the surviving rows. Falls
-        back to the pyarrow-dataset filter path when the catalog is
-        too large to pin."""
+    def _plan_reads(self, row_type, pid_range, terms=None, term_range=None):
+        """Catalog indices (ascending, so grouped by file) of the row
+        groups a read of `row_type` rows over `pid_range` ([lo, hi], None
+        for every pid) with a term in `terms` or in `term_range` ([lo,
+        hi)) touches: every group whose stats can hold such a row --
+        `terms` by one searchsorted of each group's term_min into the
+        sorted terms. `_read_rows` reads exactly these and `explain()`
+        reports them. None when the catalog is not pinned."""
+        cat = self._rg_catalog()[1]
+        if cat is None:
+            return None
+        hit = (cat["rtmin"] <= row_type) & (cat["rtmax"] >= row_type)
+        if terms is not None:
+            t = np.array(sorted(set(terms)), dtype=object)
+            j = np.searchsorted(t, cat["tmin"])
+            th = j < t.size
+            th[th] = t[j[th]] <= cat["tmax"][th]
+            hit &= th | ~cat["tstat"]
+        if term_range is not None:
+            hit &= ~cat["tstat"] | (
+                (cat["tmax"] >= term_range[0]) & (cat["tmin"] < term_range[1])
+            )
+        if pid_range is not None:
+            hit &= (cat["pmax"] >= pid_range[0]) & (
+                cat["pmin"] <= pid_range[1]
+            )
+        return np.flatnonzero(hit)
+
+    def _read_rows(
+        self, row_type, columns, pids=None, pid_range=None, terms=None,
+        term_range=None,
+    ):
+        """The `row_type` rows whose pid is in `pids` (or `pid_range`,
+        [lo, hi]) and whose term is in `terms` (or `term_range`, [lo,
+        hi)), `columns` only, in segment file order. Reads exactly the
+        row groups `_plan_reads` names with direct read_row_groups on the
+        pinned footer catalog; a group whose stats say it holds only
+        `row_type` rows is read without its row_type column. Falls back
+        to the pyarrow-dataset filter path when the catalog is too large
+        to pin."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
+        if pids is not None:
+            pids = sorted(set(int(p) for p in pids))
+            pid_range = (pids[0], pids[-1]) if pids else (0, -1)
         readers, cat = self._rg_catalog()
         if cat is None:
-            filt = pads.field("row_type") == "p"
-            if pid_range is not None:
-                plo, phi = pid_range
-                filt = (
-                    filt
-                    & (pads.field("pid") >= plo)
-                    & (pads.field("pid") <= phi)
-                )
-            return self._dataset().to_table(
-                filter=filt & pads.field("term").isin(fetch_terms),
-                columns=columns,
-            )
-        terms = sorted(fetch_terms)
-        want: dict[int, list[int]] = {}
-        for fi, i, tmin, tmax, pmin, pmax in cat:
-            if pid_range is not None and pmin is not None:
-                if pmax < pid_range[0] or pmin > pid_range[1]:
-                    continue
-            if tmin is not None:
-                import bisect
+            import pyarrow.dataset as pads
 
-                j = bisect.bisect_left(terms, tmin)
-                if j >= len(terms) or terms[j] > tmax:
-                    continue
-            want.setdefault(fi, []).append(i)
-        cols = list(columns) + ["row_type"]
-        # per-file reads release the GIL in Arrow; a term's postings are
-        # spread over many task files (one file per build task, a term in
-        # many pids), so parallelizing across files is the win here
-        items = list(want.items())
-        if len(items) > 1:
-            parts = list(
-                self._io_pool().map(
-                    lambda it: readers[it[0]].read_row_groups(
-                        it[1], columns=cols, use_threads=False
-                    ),
-                    items,
+            f = pads.field
+            filt = f("row_type") == row_type
+            if pids is not None:
+                filt &= f("pid").isin(pids)
+            elif pid_range is not None:
+                filt &= (f("pid") >= pid_range[0]) & (
+                    f("pid") <= pid_range[1]
                 )
-            )
-        else:
-            parts = [
-                readers[fi].read_row_groups(rgs, columns=cols)
-                for fi, rgs in items
-            ]
-        if not parts:
-            empty = self._dataset().schema.empty_table()
-            return empty.select(columns)
-        tbl = pa.concat_tables(parts)
-        mask = pc.and_(
-            pc.equal(tbl["row_type"], "p"),
-            pc.is_in(tbl["term"], value_set=pa.array(terms)),
+            if terms is not None:
+                filt &= f("term").isin(list(terms))
+            if term_range is not None:
+                filt &= (f("term") >= term_range[0]) & (
+                    f("term") < term_range[1]
+                )
+            return self._dataset().to_table(filter=filt, columns=columns)
+        idx = self._plan_reads(row_type, pid_range, terms, term_range)
+        if not idx.size:
+            return _SEGMENT_PA_SCHEMA.empty_table().select(columns)
+        fis = cat["fi"][idx]
+        mixed = (cat["rtmin"][idx] != row_type) | (
+            cat["rtmax"][idx] != row_type
         )
-        if pid_range is not None:
-            mask = pc.and_(
-                mask,
-                pc.and_(
-                    pc.greater_equal(tbl["pid"], pid_range[0]),
-                    pc.less_equal(tbl["pid"], pid_range[1]),
-                ),
+        cuts = np.flatnonzero(fis[1:] != fis[:-1]) + 1
+        reads = [  # (file, its row groups, any of them mixed)
+            (readers[int(f[0])], g.tolist(), bool(m.any()))
+            for f, g, m in zip(
+                np.split(fis, cuts), np.split(cat["rg"][idx], cuts),
+                np.split(mixed, cuts),
             )
-        return tbl.filter(mask).select(columns)
+        ]
+        cols = list(columns)
+
+        def read(r, threads=False):
+            pf, rgs, mixed = r
+            tbl = pf.read_row_groups(
+                rgs, columns=cols + ["row_type"] if mixed else cols,
+                use_threads=threads,
+            )
+            if mixed:
+                tbl = tbl.filter(
+                    pc.equal(tbl["row_type"], row_type)
+                ).select(cols)
+            return tbl
+
+        # per-file reads release the GIL in Arrow, and a term's postings
+        # are spread over many task files (one file per build task, a
+        # term in many pids), so a multi-file read spreads its files over
+        # the reader pool -- measured faster than reading them on the
+        # calling thread even at one or two 1,024-row groups a file
+        if len(reads) > 1:
+            tbl = pa.concat_tables(self._io_pool().map(read, reads))
+        else:
+            tbl = read(reads[0], threads=True)
+        masks = []
+        if pids is not None:
+            masks.append(pc.is_in(
+                tbl["pid"], value_set=pa.array(pids, pa.int64())
+            ))
+        elif pid_range is not None:
+            masks += [pc.greater_equal(tbl["pid"], pid_range[0]),
+                      pc.less_equal(tbl["pid"], pid_range[1])]
+        if terms is not None:
+            masks.append(pc.is_in(
+                tbl["term"], value_set=pa.array(sorted(set(terms)),
+                                                pa.string())
+            ))
+        if term_range is not None:
+            masks += [pc.greater_equal(tbl["term"], term_range[0]),
+                      pc.less(tbl["term"], term_range[1])]
+        mask = None
+        for m in masks:
+            mask = m if mask is None else pc.and_(mask, m)
+        return tbl if mask is None else tbl.filter(mask)
+
+    def _fetch_posting_rows(self, fetch_terms, pid_range, columns):
+        """The posting rows of `fetch_terms` over `pid_range` ([lo, hi],
+        None for every pid), `columns` only."""
+        return self._read_rows(
+            "p", columns, pid_range=pid_range, terms=fetch_terms
+        )
 
     def _estimated_postings(self, prep: dict) -> int:
         """Upper bound on rows the query must touch, from the pinned
@@ -2145,7 +2240,7 @@ class SearchEngine(FeatureOpsMixin):
         if local is None:
             return eligible and (
                 self._estimated_postings(prep)
-                + sum(self._term_df.get(t, 0) for t in facet_terms or ())
+                + self._facet_df(facet_terms)
                 <= self.local_max_postings
             )
         if local and not eligible:
@@ -2154,6 +2249,24 @@ class SearchEngine(FeatureOpsMixin):
                 "the serving-node path; use local=None for auto-routing"
             )
         return bool(local)
+
+    def _facet_df(self, facet_terms) -> int:
+        """Summed df of a facet value list on the pinned dictionary,
+        memoized per list (FIFO, FIELD_TERMS_MEMO_MAX lists, beside the
+        `field_terms` memo): a page routes the same value lists on every
+        call."""
+        if not facet_terms:
+            return 0
+        key = tuple(facet_terms)
+        memo = self._facet_df_memo
+        got = memo.get(key)
+        if got is None:
+            got = sum(self._term_df.get(t, 0) for t in key)
+            with self._post_cache_lock:
+                if len(memo) >= self.FIELD_TERMS_MEMO_MAX:
+                    memo.pop(next(iter(memo)))  # oldest first
+                memo[key] = got
+        return got
 
     def _local_eligible(self, prep: dict) -> bool:
         return (
@@ -2209,6 +2322,7 @@ class SearchEngine(FeatureOpsMixin):
                 f"local_max_postings={self.local_max_postings:,}"
             )
         local = self._route(prep, None)
+        reads = self._read_plan(prep) if local else None
 
         term_df = self._term_df or {}
         per_term = {
@@ -2247,6 +2361,10 @@ class SearchEngine(FeatureOpsMixin):
             "term_df_top": top_terms,
             "estimated_postings": int(est),
             "local_max_postings": int(self.local_max_postings),
+            # serving-node storage reads for the terms the postings LRU
+            # lacks (None on the kernel route or an unpinned catalog)
+            "row_groups": None if reads is None else reads[0],
+            "rows_read": None if reads is None else reads[1],
             "match_all": bool(prep["has_all_node"]),
             "phrase_terms": sorted(phrase_members),
             "shed_blob_terms": len(shed),
@@ -2341,6 +2459,29 @@ class SearchEngine(FeatureOpsMixin):
             }
         return rep
 
+    def _read_plan(self, prep: dict) -> tuple[int, int] | None:
+        """(row groups, rows) the serving node's search of `prep` reads
+        from storage now: its LRU-miss posting reads (`_miss_reads`)
+        plus the phrase members' position read, each through
+        `_plan_reads` -- the lookup `_fetch_posting_rows` reads by.
+        None when the catalog is not pinned."""
+        cat = self._rg_catalog()[1]
+        if cat is None:
+            return None
+        fetch, rng = prep["fetch_terms"], prep["pid_range"]
+        with self._post_cache_lock:
+            missing = [t for t in fetch if t not in self._post_cache]
+        reads = [
+            (r, t) for t, r, _c in self._miss_reads(fetch, missing, rng)
+        ]
+        if prep.get("phrase_terms"):
+            reads.append((rng, prep["phrase_terms"]))
+        idx = [self._plan_reads("p", r, t) for r, t in reads]
+        return (
+            sum(i.size for i in idx),
+            sum(int(cat["rows"][i].sum()) for i in idx),
+        )
+
     def _local_eval(self, prep: dict, score: bool):
         """Serving-node prelude shared by `_local_match_ids` and
         `_search_local`: the query's decoded postings (through the LRU),
@@ -2359,10 +2500,7 @@ class SearchEngine(FeatureOpsMixin):
             # them out of the cache keeps its budget meaningful)
             term_pos = self._decode_posting_table(
                 self._fetch_posting_rows(
-                    prep["phrase_terms"],
-                    prep["pid_range"],
-                    ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
-                     "pos_bin"],
+                    prep["phrase_terms"], prep["pid_range"], _PHRASE_COLS
                 )
             )[1]
         bounds = self._local_bounds(prep)
@@ -2416,13 +2554,7 @@ class SearchEngine(FeatureOpsMixin):
         return self._fwd_cached(self._times_cache, pids, self._load_times)
 
     def _load_times(self, pids: list) -> dict:
-        import pyarrow.dataset as pads
-
-        trows = self._dataset().to_table(
-            filter=(pads.field("row_type") == "t")
-            & pads.field("pid").isin(pids),
-            columns=["pid", "first_doc", "ids_bin"],
-        )
+        trows = self._read_rows("t", ["pid", "first_doc", "ids_bin"], pids)
         arr_pids = trows["pid"].to_numpy()
         firsts = trows["first_doc"].to_numpy()
         bins = trows["ids_bin"].to_pylist()
@@ -2439,13 +2571,8 @@ class SearchEngine(FeatureOpsMixin):
         `_gather_rows` looks winners up in. A doc_id with several rows
         keeps its last in dataset order."""
         import pyarrow as pa
-        import pyarrow.dataset as pads
 
-        dm = self._dataset().to_table(
-            filter=(pads.field("row_type") == "d")
-            & pads.field("pid").isin(pids),
-            columns=["pid", "doc_id", "url", "warc_us"],
-        )
+        dm = self._read_rows("d", ["pid", "doc_id", "url", "warc_us"], pids)
         arr_pids = dm["pid"].to_numpy()
         docs = dm["doc_id"].to_numpy()
         warcs = dm["warc_us"].to_numpy()
@@ -2489,7 +2616,7 @@ class SearchEngine(FeatureOpsMixin):
         views hold; no extra index data)."""
         ids = self._field_ids(field)
         tbl = self._fetch_posting_rows(
-            list(ids), (min(pids), max(pids)), self._POSTING_COLS[:5]
+            list(ids), (min(pids), max(pids)), _POSTING_COLS[:5]
         )
         dec = self._decode_posting_table(tbl)[0]
         return _invert_postings(
@@ -3387,9 +3514,6 @@ class SearchEngine(FeatureOpsMixin):
                    "score double",
         )
 
-    _POSTING_COLS = ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
-                     "dls_bin"]
-
     @staticmethod
     def _decode_posting_table(tbl) -> tuple[dict, dict]:
         """`_decode_rows` over a fetched pyarrow posting-rows table."""
@@ -3407,13 +3531,14 @@ class SearchEngine(FeatureOpsMixin):
         self, field: str, page: np.ndarray
     ) -> dict[int, list[str]]:
         """Composed-term values of `field` carried by the page's docs,
-        via a block-span-bounded posting read: only rows whose
-        (pid, [first_doc, last_doc]) span can contain a page composite
-        are fetched -- a point op bounded by the PAGE size, independent
-        of the field's value count (the gatherTermsForFields analog of
-        the reference's per-activity term gather). Returns
+        via a block-span-bounded posting read: only rows whose (pid,
+        blk) doc range [blk * block_span, (blk + 1) * block_span) can
+        contain a page composite are fetched -- a point op bounded by
+        the PAGE size, independent of the field's value count (the
+        gatherTermsForFields analog of the reference's per-activity term
+        gather). Returns
         {composite_id: [composed terms, value order]}."""
-        import pyarrow.dataset as pads
+        import pyarrow as pa
 
         from ..fields import FIELD_SEP
 
@@ -3423,30 +3548,22 @@ class SearchEngine(FeatureOpsMixin):
         # two facet values can share their newest doc (multi-valued
         # fields) -- dedupe so a term is appended once per DOC
         page = np.unique(page)
-        lo_t = f"{field}{FIELD_SEP}"
-        hi_t = field + chr(ord(FIELD_SEP) + 1)
-        per_pid: dict[int, tuple[int, int]] = {}
-        for c in page.tolist():
-            p, d = c >> 32, c & 0xFFFFFFFF
-            lo, hi = per_pid.get(p, (d, d))
-            per_pid[p] = (min(lo, d), max(hi, d))
-        span = None
-        for p, (lo, hi) in per_pid.items():
-            cond = (
-                (pads.field("pid") == p)
-                & (pads.field("first_doc") <= hi)
-                & (pads.field("last_doc") >= lo)
-            )
-            span = cond if span is None else (span | cond)
-        tbl = self._dataset().to_table(
-            filter=(
-                (pads.field("row_type") == "p")
-                & (pads.field("term") >= lo_t)
-                & (pads.field("term") < hi_t)
-                & span
-            ),
-            columns=["pid", "term", "blk", "n", "ids_bin"],
+        docs = page & 0xFFFFFFFF
+        # the page is sorted, so each pid's docs are one run
+        pids, first = np.unique(page >> 32, return_index=True)
+        last = np.append(first[1:], page.size) - 1
+        tbl = self._read_rows(
+            "p", ["pid", "term", "blk", "n", "ids_bin"], pids.tolist(),
+            term_range=(f"{field}{FIELD_SEP}",
+                        field + chr(ord(FIELD_SEP) + 1)),
         )
+        bs = self._block_span
+        if bs is not None and tbl.num_rows:
+            k = np.searchsorted(pids, tbl["pid"].to_numpy())
+            blk = tbl["blk"].to_numpy()
+            tbl = tbl.filter(pa.array(
+                (blk >= docs[first][k] // bs) & (blk <= docs[last][k] // bs)
+            ))
         dec = self._decode_posting_table(tbl)[0]
         for t in sorted(dec):  # composed-term order == value order
             cids = dec[t][0]
@@ -3458,6 +3575,31 @@ class SearchEngine(FeatureOpsMixin):
             for comp in page[cids[idx] == page].tolist():
                 out.setdefault(int(comp), []).append(t)
         return out
+
+    @staticmethod
+    def _miss_reads(fetch_terms, missing, pid_range) -> list:
+        """The posting reads `_postings_maps` makes when the LRU lacks
+        `missing`, as (terms, pid_range, columns): none on a full hit;
+        for a pid-bounded query every fetch term over the range (a ranged
+        miss bypasses the cache); else the missing terms over every pid,
+        composed field terms (FIELD_SEP) without their tf/dl blobs --
+        they are filter-only by construction, and the blobs are ~2/3 of
+        a head field term's bytes."""
+        if not missing:
+            return []
+        if pid_range is not None:
+            return [(list(fetch_terms), pid_range, _POSTING_COLS)]
+        from ..fields import FIELD_SEP
+
+        text = [t for t in missing if FIELD_SEP not in t]
+        composed = [t for t in missing if FIELD_SEP in t]
+        return [
+            (ts, None, cols)
+            for ts, cols in (
+                (text, _POSTING_COLS), (composed, _POSTING_COLS[:5])
+            )
+            if ts
+        ]
 
     def _postings_maps(
         self, fetch_terms, pid_range
@@ -3479,25 +3621,23 @@ class SearchEngine(FeatureOpsMixin):
             missing = [t for t in fetch_terms if t not in self._post_cache]
         if missing and pid_range is None:
             # fetch + decode OUTSIDE the lock (slow IO); racing threads
-            # may decode the same term, last insert wins harmlessly.
-            # Composed field terms (FIELD_SEP) are filter-only by
-            # construction -- skip reading their tf/dl blobs (~2/3 of a
-            # head field term's bytes)
-            from ..fields import FIELD_SEP
-
-            composed = [t for t in missing if FIELD_SEP in t]
-            text = [t for t in missing if FIELD_SEP not in t]
+            # may decode the same term, last insert wins harmlessly
             dec = {}
-            if text:
+            for terms, _rng, cols in self._miss_reads(
+                fetch_terms, missing, None
+            ):
                 dec.update(self._decode_posting_table(
-                    self._fetch_posting_rows(text, None, self._POSTING_COLS)
+                    self._fetch_posting_rows(terms, None, cols)
                 )[0])
-            if composed:
-                dec.update(self._decode_posting_table(
-                    self._fetch_posting_rows(
-                        composed, None, self._POSTING_COLS[:5]
-                    )
-                )[0])
+            # cached tfs/dls are only ever cast to float64 for scoring, so
+            # each is kept in the narrowest unsigned type that holds it
+            # (exact; about 11 B a posting instead of 24). Filter-only
+            # terms alias both to the ids array and stay aliased.
+            for t, (c, f, d) in dec.items():
+                dec[t] = (
+                    c, f if f is c else _narrowed(f),
+                    d if d is c else _narrowed(d),
+                )
             with self._post_cache_lock:
                 for t in missing:
                     if t in self._post_cache:
@@ -3544,7 +3684,7 @@ class SearchEngine(FeatureOpsMixin):
         # ranged miss (time-ranged queries) or eviction race: read
         # exactly what the query needs, bypassing the cache
         dec = self._decode_posting_table(
-            self._fetch_posting_rows(fetch_terms, pid_range, self._POSTING_COLS)
+            self._fetch_posting_rows(fetch_terms, pid_range, _POSTING_COLS)
         )[0]
         for t, (c, f, d) in dec.items():
             term_cids[t], term_tfs[t], term_dls[t] = c, f, d
@@ -3644,7 +3784,7 @@ class SearchEngine(FeatureOpsMixin):
         along with bound 0 so zero-score matches stay reachable. Records
         pruning stats on
         self._local_blockmax_stats for tests/telemetry."""
-        span = int(self.meta.get("block_span", 1 << 30))
+        span = self._block_span or (1 << 30)
         term_cells: dict = {}
         key_parts: list = []
         ub_parts: list = []
@@ -4080,7 +4220,7 @@ class SearchEngine(FeatureOpsMixin):
                 "tfs_bin", F.when(keep, F.col("tfs_bin"))
             ).withColumn("dls_bin", F.when(keep, F.col("dls_bin")))
         pinned = self._term_df is not None
-        kcols = list(_POSTING_COLS)
+        kcols = list(_KERNEL_COLS)
         if not pinned:
             blocks = blocks.join(
                 F.broadcast(
@@ -4132,6 +4272,7 @@ class SearchEngine(FeatureOpsMixin):
             qid: _make_composite_kernel(
                 spec[0], spec[1], n_docs, avgdl, k, spec[2], shared_spec,
                 self._removed_comp, idf_map, pid_counts,
+                block_span=self._block_span,
             )
             for qid, spec in enumerate(specs)
             if spec is not None

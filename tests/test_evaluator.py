@@ -187,10 +187,11 @@ def test_evaluate_composite_equals_per_pid_and_reference(sc):
 
 
 SPAN = 8  # docIDs per posting block
-# kernel input columns; a row kind's unused columns are null
+# kernel input columns; a row kind's unused columns are null ('p' rows
+# carry no first_doc: a block's doc range is [blk * SPAN, (blk + 1) * SPAN))
 BLANK = dict.fromkeys([
-    "pid", "term", "blk", "n", "first_doc", "last_doc", "ids_bin",
-    "tfs_bin", "dls_bin", "pos_bin", "rk",
+    "pid", "term", "blk", "n", "first_doc", "ids_bin", "tfs_bin",
+    "dls_bin", "pos_bin", "rk",
 ])
 PHRASE = ("phrase", (("a", 0), ("b", 1)))
 
@@ -260,8 +261,6 @@ def _kernel_frame(sc):
                 gaps = [np.diff(pos[i], prepend=0) for i in sel.tolist()]
                 rows.append({
                     "pid": p, "term": t, "blk": b, "n": sel.size,
-                    "first_doc": int(ids[sel[0]]),
-                    "last_doc": int(ids[sel[-1]]),
                     "ids_bin": encode_postings(ids[sel]),
                     "tfs_bin": encode_varint(tfs[sel]) if t in keep else None,
                     "dls_bin": encode_varint(dls[sel]) if t in keep else None,
@@ -332,7 +331,8 @@ def test_composite_kernel_equals_reference(sc):
     markers, pinned or 'x'-row tombstones, phrase positions and a
     boundary-pid time range -- equals the Python reference under both
     strategies, scores bit-identical. Posting blocks of a boundary pid
-    outside its [lo, hi) never reach the shared decoder."""
+    whose doc range [blk * SPAN, (blk + 1) * SPAN) misses its [lo, hi)
+    never reach the shared decoder."""
     pdf = _kernel_frame(sc)
     docs = sc["docs"]
     pids = sorted(docs)
@@ -354,9 +354,7 @@ def test_composite_kernel_equals_reference(sc):
     real = E._decode_rows
 
     def counting(cols):
-        decoded.extend(
-            zip(cols["pid"], cols["first_doc"], cols["last_doc"])
-        )
+        decoded.extend(zip(cols["pid"], cols["blk"]))
         return real(cols)
 
     E._decode_rows = counting
@@ -366,7 +364,7 @@ def test_composite_kernel_equals_reference(sc):
             kern = _make_composite_kernel(
                 sc["tree"], sc["scoring"], 100, AVGDL, sc["k"], {},
                 time_spec, removed_comp, sc["idf"],
-                {p: docs[p][0] for p in pids}, strategy,
+                {p: docs[p][0] for p in pids}, strategy, block_span=SPAN,
             )
             out = kern(pdf.copy())
             got = list(zip(
@@ -381,17 +379,108 @@ def test_composite_kernel_equals_reference(sc):
             )
             p_rows = pdf[pdf["rk"] == "p"]
             expect = 0
-            for p, f, l in zip(
-                p_rows["pid"], p_rows["first_doc"], p_rows["last_doc"]
-            ):
+            for p, b in zip(p_rows["pid"], p_rows["blk"]):
                 lo, hi = keep_lo.get(p, (0, 1 << 40))
-                expect += int(l >= lo and f < hi)
-            for p, f, l in decoded:
+                expect += int((b + 1) * SPAN > lo and b * SPAN < hi)
+            for p, b in decoded:
                 lo, hi = keep_lo.get(p, (0, 1 << 40))
-                assert l >= lo and f < hi, (p, f, l, lo, hi)
+                assert (b + 1) * SPAN > lo and b * SPAN < hi, (p, b, lo, hi)
             assert len(decoded) == expect
     finally:
         E._decode_rows = real
+
+
+def _first_last_rows(rows, bounds: dict):
+    """The earlier pruning rule, kept here as the reference: a bounded
+    pid's block survives when its [first_doc, last_doc] span meets
+    [lo, hi)."""
+    pids = rows["pid"].to_numpy()
+    first = rows["first_doc"].to_numpy()
+    last = rows["last_doc"].to_numpy()
+    keep = np.ones(len(rows), dtype=bool)
+    for p, (lo, hi) in bounds.items():
+        keep &= (pids != p) | ((last >= lo) & (first < hi))
+    return rows[keep]
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.data())
+def test_blk_span_pruning_keeps_every_first_last_block(data):
+    """`_bounded_rows` bounds a block by its doc range [blk * span,
+    (blk + 1) * span): it keeps every block the [first_doc, last_doc]
+    rule keeps, and drops only blocks with no doc inside the bound."""
+    import pandas as pd
+
+    span = data.draw(st.integers(1, 16))
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    rows, docs, bounds = [], {}, {}
+    for p in range(data.draw(st.integers(1, 4))):
+        n = data.draw(st.integers(1, 80))
+        for t in TERMS:
+            ids = np.flatnonzero(rng.random(n) < 0.4)
+            for b in np.unique(ids // span).tolist():
+                sel = ids[ids // span == b]
+                rows.append({"pid": p, "blk": b, "first_doc": int(sel[0]),
+                             "last_doc": int(sel[-1])})
+                docs[len(rows) - 1] = sel
+        if data.draw(st.booleans()):
+            lo = data.draw(st.integers(0, n))
+            bounds[p] = (lo, data.draw(st.integers(lo, n + span)))
+    frame = pd.DataFrame(
+        rows, columns=["pid", "blk", "first_doc", "last_doc"]
+    )
+    kept = set(E._bounded_rows(frame, bounds, span).index)
+    assert set(_first_last_rows(frame, bounds).index) <= kept
+    for i, r in frame.iterrows():
+        if i not in kept:
+            lo, hi = bounds[r["pid"]]
+            assert not ((docs[i] >= lo) & (docs[i] < hi)).any()
+    assert len(E._bounded_rows(frame, bounds, None)) == len(frame)
+
+
+@settings(max_examples=40, deadline=None)
+@given(_kernel_scenarios())
+def test_kernel_answers_same_under_both_pruning_rules(sc):
+    """The composite kernel answers bit-identically whether boundary-pid
+    blocks are pruned by their blk doc range or by the earlier
+    [first_doc, last_doc] rule (over rows that carry both)."""
+    from miru_spark.codec import decode_postings
+
+    pdf = _kernel_frame(sc)
+    p = (pdf["rk"] == "p").to_numpy()
+    ids = [decode_postings(b) if k else None
+           for b, k in zip(pdf["ids_bin"], p)]
+    pdf["first_doc"] = [
+        int(i[0]) if k else f for i, k, f in zip(ids, p, pdf["first_doc"])
+    ]
+    pdf["last_doc"] = [int(i[-1]) if k else None for i, k in zip(ids, p)]
+    docs = sc["docs"]
+    pids = sorted(docs)
+    time_spec = None
+    if sc["time_range"] is not None:
+        time_spec = (*sc["time_range"], pids[0], pids[-1])
+
+    def first_last(rows, bounds, _span):
+        return _first_last_rows(rows, bounds) if bounds else rows
+
+    real = E._bounded_rows
+    outs = []
+    for rule in (real, first_last):
+        E._bounded_rows = rule
+        try:
+            outs.append(_make_composite_kernel(
+                sc["tree"], sc["scoring"], 100, AVGDL, sc["k"], {},
+                time_spec, None, sc["idf"],
+                {p_: docs[p_][0] for p_ in pids}, block_span=SPAN,
+            )(pdf.copy()))
+        finally:
+            E._bounded_rows = real
+    assert outs[0]["pid"].tolist() == outs[1]["pid"].tolist()
+    assert outs[0]["doc_id"].tolist() == outs[1]["doc_id"].tolist()
+    assert (
+        outs[0]["score"].to_numpy().tobytes()
+        == outs[1]["score"].to_numpy().tobytes()
+    )
 
 
 def _waveforms_kernel(prefix):
@@ -418,8 +507,8 @@ def test_streamed_waveforms_empty_frames_keep_term_column():
     def prow(term, ids):
         return {
             "pid": 7, "term": term, "blk": 0, "n": len(ids),
-            "first_doc": ids[0], "last_doc": ids[-1], "max_tf": 1,
-            "min_dl": 1, "ids_bin": encode_postings(np.array(ids)),
+            "first_doc": None,
+            "ids_bin": encode_postings(np.array(ids)),
             "tfs_bin": None, "dls_bin": None, "rk": "p",
         }
 
@@ -427,7 +516,6 @@ def test_streamed_waveforms_empty_frames_keep_term_column():
     site = prow(prefix + "a.example", [0, 2, 5])
     trow = {
         "pid": 7, "term": None, "blk": 0, "n": 6, "first_doc": 0,
-        "last_doc": 5, "max_tf": None, "min_dl": None,
         "ids_bin": encode_varint(np.array([100, 1, 1, 1, 1, 1])),
         "tfs_bin": None, "dls_bin": None, "rk": "t",
     }
@@ -622,7 +710,6 @@ def _agg_rows(docs):
                 sel = ids[blk == b]
                 rows.append({
                     "pid": p, "term": t, "blk": b, "n": sel.size,
-                    "first_doc": int(sel[0]), "last_doc": int(sel[-1]),
                     "ids_bin": encode_postings(sel), "rk": "p",
                 })
         for s in range(0, n, SPAN):

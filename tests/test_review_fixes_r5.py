@@ -92,20 +92,22 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     :339-419): with doc-range bounds the composite kernel drops posting
     blocks whose span misses [lo, hi) BEFORE the shared decoder. The
     bounds resolve from a `time_spec` whose boundary pid's 't' rows ride
-    in the frame, as on the distributed route. Identical results, fewer
-    blocks decoded."""
+    in the frame, as on the distributed route; a block's span is its doc
+    range [blk * block_span, (blk + 1) * block_span). Identical results,
+    fewer blocks decoded."""
     import numpy as np
     import pandas as pd
 
     import miru_spark.query.engine as E
 
     pid = max(eng.pid_counts, key=lambda p: eng.pid_counts[p])
+    span = eng._block_span
     pdf = (
         eng.postings.filter(
             (E.F.col("term") == "w000001") & (E.F.col("pid") == pid)
         )
         .toPandas()
-        .sort_values("first_doc", ignore_index=True)
+        .sort_values("blk", ignore_index=True)
     )
     assert len(pdf) >= 3, "need a multi-block term for the scenario"
     pdf["rk"] = "p"
@@ -115,10 +117,11 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     assert warc.size == int(eng.pid_counts[pid])
     # the window opens at the middle block's first doc and runs past the
     # pid's newest doc: the pid is the range's lower boundary pid
-    t0 = int(warc[int(pdf["first_doc"].iloc[len(pdf) // 2])])
+    t0 = int(warc[int(pdf["blk"].iloc[len(pdf) // 2]) * span])
     spec = (t0, int(warc[-1]) + 1, pid, pid + 1)
     lo = int(np.searchsorted(warc, t0, "left"))
-    assert lo > int(pdf["last_doc"].iloc[0])  # a whole block lies below
+    # a whole block lies below
+    assert lo >= (int(pdf["blk"].iloc[0]) + 1) * span
 
     calls = {"n": 0}
     real = E._decode_rows
@@ -133,6 +136,7 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
         return E._make_composite_kernel(
             ("term", "w000001"), ["w000001"], eng.n_docs, eng.avgdl,
             0, {}, time_spec, None, {"w000001": 1.0}, eng.pid_counts,
+            block_span=span,
         )(frame.copy())
 
     unbounded = run(pdf, None)
@@ -253,10 +257,11 @@ def _serving_answers(e, rows):
 def test_warm_serving_search_scans_no_dataset(spark, eng, monkeypatch):
     """Once an engine has touched a pid, display gathers and time
     bounds come from its forward-index cache: with every pyarrow
-    dataset scan made to raise, a warm engine answers exactly what it
-    answered cold, and no scan is even attempted (search() and
-    search_many would otherwise hide a failed gather behind their
-    docmap-join fallbacks)."""
+    dataset scan and every catalog read of docmap ('d') or time ('t')
+    rows made to raise, a warm engine answers exactly what it answered
+    cold, and no such read is even attempted (search() and search_many
+    would otherwise hide a failed gather behind their docmap-join
+    fallbacks)."""
     rows = generate_rows(range(N))
     e = SearchEngine(spark, eng.paths.root)
     try:
@@ -273,6 +278,15 @@ def test_warm_serving_search_scans_no_dataset(spark, eng, monkeypatch):
                 raise AssertionError("dataset scan on a warm engine")
 
         monkeypatch.setattr(e, "_dataset", lambda: NoScan())
+        read_rows = e._read_rows
+
+        def no_forward_reads(row_type, *a, **kw):
+            if row_type != "p":
+                scans.append(row_type)
+                raise AssertionError("forward-row read on a warm engine")
+            return read_rows(row_type, *a, **kw)
+
+        monkeypatch.setattr(e, "_read_rows", no_forward_reads)
         warm = _serving_answers(e, rows)
     finally:
         e.close()
